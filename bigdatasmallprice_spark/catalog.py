@@ -11,6 +11,9 @@ injection-guard semantics of the reference's ``validate_table_name``.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
+from datetime import date, datetime
+from zoneinfo import ZoneInfo, ZoneInfoNotFoundError
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -133,10 +136,25 @@ def write_bronze(
     chunks). Time-range predicates then prune partitions at the source:
     a 3-day refresh or a 7-day serving query reads 3 or 7 directories
     regardless of total table size (asserted in tests via the scan's
-    PartitionFilters)."""
+    PartitionFilters). ``p_date`` is the row's date in the session time
+    zone; ``bronze_partition_dates`` applies the same rule on the driver."""
     df.withColumn("p_date", F.to_date(F.col(time_col))).write.mode(mode).partitionBy(
         "p_date"
     ).parquet(path)
+
+
+def bronze_partition_dates(
+    spark: SparkSession, stamps: Iterable[datetime | None]
+) -> set[date]:
+    """The ``p_date`` values ``write_bronze`` gives rows with these times,
+    without a Spark job: each instant's date in the session time zone. A
+    naive datetime is local time, as ``createDataFrame`` reads it."""
+    name = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        zone = ZoneInfo(name)
+    except (ValueError, ZoneInfoNotFoundError):
+        zone = datetime.strptime(name, "%z").tzinfo  # fixed offsets, e.g. "+01:00"
+    return {s.astimezone(zone).date() for s in stamps if s is not None}
 
 
 def read_bronze(spark: SparkSession, path: str) -> DataFrame:

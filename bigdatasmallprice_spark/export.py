@@ -77,12 +77,15 @@ def select_features(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
 def freshness_check(
     df: DataFrame, time_col: str, clock: dt.datetime, max_age_hours: int = 26
 ) -> None:
-    """Fail the export when the newest row is stale (T3)."""
+    """Fail the export when the newest row is stale (T3). A naive
+    ``clock`` is read as UTC, like the naive timestamps Spark returns."""
     mx = df.agg(F.max(time_col)).collect()[0][0]
     if mx is None:
         raise ValueError("empty feature frame")
     if mx.tzinfo is None:
         mx = mx.replace(tzinfo=dt.timezone.utc)
+    if clock.tzinfo is None:
+        clock = clock.replace(tzinfo=dt.timezone.utc)
     age = (clock - mx).total_seconds() / 3600.0
     if age > max_age_hours:
         raise ValueError(f"stale features: newest row {age:.1f}h old (> {max_age_hours}h)")

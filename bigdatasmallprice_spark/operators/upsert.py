@@ -26,7 +26,13 @@ def dedup_batch_first_wins(
 ) -> DataFrame:
     """Collapse duplicate keys inside one batch, keeping the first row in
     ``order_by`` order (executemany applies rows in order; the first
-    insert wins, later conflicts are ignored)."""
+    insert wins, later conflicts are ignored).
+
+    Rows that tie on ``order_by`` within a key are broken arbitrarily: a
+    DataFrame has no list order to fall back on, so ordering by a key
+    column (every row of a key ties) picks any of them. Callers that hold
+    the batch as a list dedup it in list order instead
+    (ingest.backfill_dates)."""
     w = Window.partitionBy(*keys).orderBy(*order_by)
     return (
         batch.withColumn("__rank", F.row_number().over(w))

@@ -81,13 +81,14 @@ def timeseries(
     chart_points: int | None = 500,
 ) -> DataFrame:
     """P7 + O4 + O7 — horizon-filtered series, 10k guard, optional
-    downsample (main.py:470-535, 1038-1045)."""
-    df = _view(spark, table).filter(
-        F.col("time") >= F.lit(clock) - F.expr(f"INTERVAL {horizon}")
-    )
-    guarded = df.orderBy("time").limit(max_rows)
+    downsample (main.py:470-535, 1038-1045). Bronze tables and feature
+    views carry ``time``; the tariff rollups carry ``hour``."""
+    df = _view(spark, table)
+    ts = "time" if "time" in df.columns else "hour"
+    df = df.filter(F.col(ts) >= F.lit(clock) - F.expr(f"INTERVAL {horizon}"))
+    guarded = df.orderBy(ts).limit(max_rows)
     if chart_points:
-        return stride_downsample(guarded, ["time"], chart_points)
+        return stride_downsample(guarded, [ts], chart_points)
     return guarded
 
 

@@ -157,6 +157,18 @@ def test_timeseries_and_rate_limits(api, token):
     assert rl[0]["n_calls"] == 50 and rl[0]["n_rate_limited"] == 10
 
 
+def test_timeseries_serves_tariff_rollup(api, token):
+    """The tariff rollup views carry ``hour``, not ``time`` (the domain
+    tariffs cover the first three days, hence the long horizon)."""
+    code, rows = _call(
+        api, "/api/timeseries/ekz_tariffs_hourly?horizon=60%20days", token=token
+    )
+    assert code == 200, rows
+    assert 0 < len(rows) <= 500
+    hours = [r["hour"] for r in rows]
+    assert hours == sorted(hours)
+
+
 def test_backfill_estimate(api, token):
     code, out = _call(
         api,

@@ -377,6 +377,28 @@ def test_models_validation_serves_self_describing_gbt(spark, orch, token):
     assert hist["train"] == [v for (s, r), v in sorted(mae.items()) if s == "train"]
 
 
+def test_stock_feature_dag_exports(spark, orch, tmp_path):
+    """The stock bdsp_feature_daily hands export a naive clock, which
+    freshness_check reads as UTC: the run succeeds and writes both
+    exports."""
+    from bigdatasmallprice_spark.runs import default_dags
+
+    export_dir = tmp_path / "exports"
+    dags = {
+        d.dag_id: d
+        for d in default_dags(
+            spark, orch["model_dir"], lambda: CLOCK, export_dir=str(export_dir)
+        )
+    }
+    reg = RunRegistry(clock=lambda: CLOCK)
+    reg.register(dags["bdsp_feature_daily"])
+    run = reg.trigger("bdsp_feature_daily")
+    final = reg.wait("bdsp_feature_daily", run["run_id"], timeout=300)
+    assert final["state"] == "success", final["error"]
+    for kind in ("energy", "load"):
+        assert (export_dir / kind / "X_train.parquet").is_dir()
+
+
 def test_html_shells(orch):
     for path in ("/", "/dashboard"):
         req = urllib.request.Request(orch["base"] + path)
