@@ -17,6 +17,9 @@ This module is the public convention:
   untouched (so it composes with a warm table cache).
 - ``run_query_released(spark, name, sf_dir)`` — build + collect one
   registered query under that discipline; what the serving layer uses.
+- ``persisted(df)`` — context manager that persists one frame for the
+  block and unpersists exactly that frame on exit; what the training
+  tasks and the export use, since they run beside other threads.
 
 A query's own persist is still fully effective DURING its execution —
 release happens after materialization, when the branches have been
@@ -79,6 +82,32 @@ def _unpersist_added(spark: SparkSession, before: set[int]) -> int:
             jmap.get(k).unpersist(False)
             released += 1
     return released
+
+
+@contextmanager
+def persisted(df: DataFrame):
+    """Persist ``df`` for the block, yield it, and unpersist exactly that
+    frame on exit, also when the block raises.
+
+    For a frame that several actions of one task read (a training
+    surface, an export's splits): the first action fills the cache and
+    the rest read it instead of re-running the plan.
+
+    It releases only its own entry. ``released_caches`` would instead
+    sweep every RDD persisted while the block ran, by any thread, and
+    ``RunRegistry`` runs each DAG run on its own thread while the API
+    serves from others. It does not cut lineage either (``cut_lineage``):
+    a lost or swept block of a persisted frame is recomputed from its
+    plan, where a ``localCheckpoint``'s would fail the job. For the same
+    reason, two blocks that persist the same plan at once (Spark keeps
+    one entry per plan) stay correct: the first to exit releases the
+    entry and the other recomputes.
+    """
+    df = df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
 
 
 @contextmanager

@@ -20,6 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdatasmallprice_spark.caching import persisted
 from bigdatasmallprice_spark.operators.splits import (
     rolling_split_bounds,
     split_by_dates,
@@ -193,19 +194,25 @@ def _write_splits(
     target_col: str,
     out_dir: str,
 ) -> dict[str, str]:
+    """Write X/y per split and the val/test timestamps. All eight writes
+    read one persisted evaluation of ``labeled``, so the view runs once
+    and row i of X_<split>, y_<split> and timestamps_<split> is the same
+    row."""
     paths: dict[str, str] = {}
     present = [c for c in feature_cols if c in labeled.columns]
-    for split in ("train", "val", "test"):
-        part = labeled.filter(F.col("split") == split)
-        xp = os.path.join(out_dir, f"X_{split}.parquet")
-        yp = os.path.join(out_dir, f"y_{split}.parquet")
-        part.select(*present).write.mode("overwrite").parquet(xp)
-        part.select(target_col).write.mode("overwrite").parquet(yp)
-        paths[f"X_{split}"], paths[f"y_{split}"] = xp, yp
-        if split in ("val", "test"):
-            tp = os.path.join(out_dir, f"timestamps_{split}.parquet")
-            part.select("time").write.mode("overwrite").parquet(tp)
-            paths[f"timestamps_{split}"] = tp
+    cols = [*present, target_col, "time", "split"]
+    with persisted(labeled.select(*cols)) as surface:
+        for split in ("train", "val", "test"):
+            part = surface.filter(F.col("split") == split)
+            xp = os.path.join(out_dir, f"X_{split}.parquet")
+            yp = os.path.join(out_dir, f"y_{split}.parquet")
+            part.select(*present).write.mode("overwrite").parquet(xp)
+            part.select(target_col).write.mode("overwrite").parquet(yp)
+            paths[f"X_{split}"], paths[f"y_{split}"] = xp, yp
+            if split in ("val", "test"):
+                tp = os.path.join(out_dir, f"timestamps_{split}.parquet")
+                part.select("time").write.mode("overwrite").parquet(tp)
+                paths[f"timestamps_{split}"] = tp
     return paths
 
 

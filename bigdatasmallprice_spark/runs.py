@@ -356,44 +356,52 @@ def default_dags(
         serving splice (score_latest), then republishes the same
         version carrying the metrics — so the metrics served by
         /api/models/status were measured through the exact path
-        /api/predict uses."""
+        /api/predict uses.
+
+        The task evaluates its feature view once: the labeled surface is
+        pruned to the three columns the mean, the fit, score_latest and
+        regression_metrics read (``time``, the target, ``split``) and
+        persisted; every action of the task reads that cache, which is
+        released when the task exits, also when it fails."""
+        from bigdatasmallprice_spark.caching import persisted
         from bigdatasmallprice_spark.functions.metrics import regression_metrics
         from bigdatasmallprice_spark.serving import labeled_model_surface
 
         labeled, target = labeled_model_surface(spark, model_name)
-        train = labeled.filter(F.col("split") == "train").withColumn(
-            "k", F.lit("all")
-        )
-        test = labeled.filter(F.col("split") == "test").withColumn(
-            "k", F.lit("all")
-        )
         v = _version(conf)
-
-        def _publish(save, name):
-            save(metrics=None)
-            m = regression_metrics(
-                modelstore.score_latest(
-                    spark, model_dir, name, test, "k", ts_col="time"
-                ),
-                target,
-                "prediction",
+        with persisted(labeled.select("time", target, "split")) as surface:
+            train = surface.filter(F.col("split") == "train").withColumn(
+                "k", F.lit("all")
             )
-            return save(metrics=m)
+            test = surface.filter(F.col("split") == "test").withColumn(
+                "k", F.lit("all")
+            )
 
-        mean = train.agg(F.avg(target)).collect()[0][0]
-        _publish(
-            lambda metrics: modelstore.save_mean_model(
-                model_dir, naive_name, mean or 0.0, metrics=metrics, version=v
-            ),
-            naive_name,
-        )
-        coef = fit_linear_hour_dow(train, "k", ts_col="time", value_col=target)
-        return _publish(
-            lambda metrics: modelstore.save_model(
-                model_dir, model_name, coef, metrics=metrics, version=v
-            ),
-            model_name,
-        )
+            def _publish(save, name):
+                save(metrics=None)
+                m = regression_metrics(
+                    modelstore.score_latest(
+                        spark, model_dir, name, test, "k", ts_col="time"
+                    ),
+                    target,
+                    "prediction",
+                )
+                return save(metrics=m)
+
+            mean = train.agg(F.avg(target)).collect()[0][0]
+            _publish(
+                lambda metrics: modelstore.save_mean_model(
+                    model_dir, naive_name, mean or 0.0, metrics=metrics, version=v
+                ),
+                naive_name,
+            )
+            coef = fit_linear_hour_dow(train, "k", ts_col="time", value_col=target)
+            return _publish(
+                lambda metrics: modelstore.save_model(
+                    model_dir, model_name, coef, metrics=metrics, version=v
+                ),
+                model_name,
+            )
 
     def _train_price(conf: dict) -> str:
         return _train_surface(conf, "model_epex", "naive")

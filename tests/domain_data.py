@@ -135,3 +135,14 @@ def make_domain_tables(seed: int = 7) -> dict[str, pd.DataFrame]:
         tables[name] = pd.DataFrame(rows)
 
     return tables
+
+
+def domain_frames(spark) -> dict:
+    """``make_domain_tables`` as Spark frames with naive UTC times, the
+    input ``plans.feature_views.register_views`` takes."""
+    sdfs = {}
+    for name, pdf in make_domain_tables().items():
+        pdf = pdf.copy()
+        pdf["time"] = pdf["time"].map(lambda t: t.replace(tzinfo=None))
+        sdfs[name] = spark.createDataFrame(pdf)
+    return sdfs

@@ -3,11 +3,16 @@ persisting queries must not accumulate cache entries."""
 
 from __future__ import annotations
 
+import datetime as dt
+
+import pytest
+
 from bigdatasmallprice_spark.caching import (
     persistent_rdd_ids,
     released_caches,
     run_query_released,
 )
+from tests.spark_jobs import job_group
 
 # ten registered queries that persist() internally (the round-4
 # pair-aggregate window rewrites removed the span/eval/line persists,
@@ -30,6 +35,7 @@ PERSISTING = [
 ]
 
 SF = "/root/testdata/sf0.001"
+CLOCK = dt.datetime(2026, 2, 15, 6, 0, tzinfo=dt.timezone.utc)
 
 
 def test_back_to_back_persisting_queries_stay_bounded(spark):
@@ -65,3 +71,73 @@ def test_serving_run_registered_releases_caches(spark):
     rows = run_registered(spark, "minhash_lsh_pairs", SF)
     assert isinstance(rows, list)
     assert not (persistent_rdd_ids(spark) - base)
+
+
+@pytest.fixture(scope="module")
+def domain(spark):
+    from bigdatasmallprice_spark.plans.feature_views import register_views
+    from tests.domain_data import domain_frames
+
+    register_views(spark, domain_frames(spark))
+    return spark
+
+
+def _leaked(spark, before: set[int]):
+    """(persistent RDDs added since ``before``, whether the catalog's
+    cache holds an entry). Only additions count: the context cleaner may
+    drop earlier tests' RDDs at any time."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    return persistent_rdd_ids(spark) - before, not cache.isEmpty()
+
+
+def _training_tasks(spark, model_dir):
+    from bigdatasmallprice_spark.runs import default_dags
+
+    (dag,) = [
+        d for d in default_dags(spark, model_dir, lambda: CLOCK)
+        if d.dag_id == "bdsp_training_daily"
+    ]
+    return {t.task_id: t.fn for t in dag.tasks}
+
+
+def test_training_task_job_budget(domain, tmp_path):
+    """Each training task evaluates its labeled surface once, into a
+    persisted (time, target, split) frame that the mean, both saves, the
+    scoring and the metrics read. Budgets are the counts measured on this
+    fixture; evaluating the view per action took 66 and 21 jobs."""
+    budget = {"run_training": 25, "train_load_model": 16}
+    for task_id, fn in _training_tasks(domain, str(tmp_path)).items():
+        with job_group(domain, f"train-{task_id}") as ids:
+            assert fn({})
+        assert 0 < len(ids) <= budget[task_id], (task_id, len(ids))
+
+
+def test_training_and_export_release_their_caches(domain, tmp_path):
+    """Each training task and each export persists its surface for its own
+    actions and releases exactly that entry on exit."""
+    from bigdatasmallprice_spark.export import run_export, run_load_export
+
+    spark = domain
+    spark.catalog.clearCache()
+    base = persistent_rdd_ids(spark)
+    for task_id, fn in _training_tasks(spark, str(tmp_path / "models")).items():
+        assert fn({}), task_id
+        assert _leaked(spark, base) == (set(), False), task_id
+    assert run_export(spark, str(tmp_path / "energy"), CLOCK)
+    assert _leaked(spark, base) == (set(), False)
+    assert run_load_export(spark, str(tmp_path / "load"), CLOCK)
+    assert _leaked(spark, base) == (set(), False)
+
+
+def test_failed_training_task_releases_its_cache(domain, tmp_path):
+    """The task fails at its first save, after the mean has been computed
+    over the persisted surface: the entry is released all the same."""
+    spark = domain
+    spark.catalog.clearCache()
+    base = persistent_rdd_ids(spark)
+    model_dir = tmp_path / "not_a_dir"
+    model_dir.write_text("")
+    for task_id, fn in _training_tasks(spark, str(model_dir)).items():
+        with pytest.raises(OSError):
+            fn({})
+        assert _leaked(spark, base) == (set(), False), task_id

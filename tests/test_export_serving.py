@@ -2,8 +2,13 @@
 
 from __future__ import annotations
 
+import collections
 import datetime as dt
+import math
+import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -27,19 +32,14 @@ from bigdatasmallprice_spark.serving import (
     table_stats,
     timeseries,
 )
-from tests.domain_data import START, make_domain_tables
+from tests.domain_data import START, domain_frames
 
 UTC = dt.timezone.utc
 
 
 @pytest.fixture(scope="module")
 def domain(spark):
-    tables = make_domain_tables()
-    sdfs = {}
-    for name, pdf in tables.items():
-        pdf = pdf.copy()
-        pdf["time"] = pdf["time"].map(lambda t: t.replace(tzinfo=None))
-        sdfs[name] = spark.createDataFrame(pdf)
+    sdfs = domain_frames(spark)
     # ops log for rate-limit stats
     log = [
         (i, "entsoe", dt.datetime(2026, 2, 14, 12, 0) + dt.timedelta(minutes=i), 200, i % 5 == 0, 120 + i)
@@ -102,6 +102,61 @@ def test_run_load_export_with_holidays(domain, tmp_path):
     ts_test = spark.read.parquet(paths["timestamps_test"])
     n_days = ts_test.select(F.countDistinct(F.to_date("time"))).collect()[0][0]
     assert n_days <= 7
+
+
+def _file_order_rows(path: str) -> list[dict]:
+    """A written parquet directory's rows in file order (part files sort
+    by task index)."""
+    files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+    return pa.concat_tables([pq.read_table(os.path.join(path, f)) for f in files]).to_pylist()
+
+
+def _value(v):
+    """Hashable comparison key: NULL and NaN alike, floats to 12 digits."""
+    if v is None or (isinstance(v, float) and math.isnan(v)):
+        return None
+    return float(f"{v:.12g}") if isinstance(v, float) else v
+
+
+@pytest.mark.parametrize(
+    "export, view, target, drops_null_target",
+    [
+        (run_export, "training_features", "price_eur_mwh", False),
+        (run_load_export, "winterthur_net_load_features", "net_load_kwh", True),
+    ],
+    ids=["energy", "load"],
+)
+def test_export_files_are_row_aligned(domain, tmp_path, export, view, target, drops_null_target):
+    """Row i of X_<split>, y_<split> and timestamps_<split> is one row of
+    the view: at timestamps[i] for val/test, and as (X, y) pairs for train,
+    which writes no timestamps."""
+    spark = domain
+    paths = export(spark, str(tmp_path / "exp"), dt.datetime(2026, 2, 15, 6, 0, tzinfo=UTC))
+    by_time = {
+        r["time"]: r.asDict()
+        for r in spark.table(view).collect()
+        if not (drops_null_target and r[target] is None)
+    }
+    view_cols = next(iter(by_time.values())).keys()
+    held_out = set()
+    for split in ("val", "test", "train"):
+        xs, ys = _file_order_rows(paths[f"X_{split}"]), _file_order_rows(paths[f"y_{split}"])
+        assert len(xs) == len(ys) > 0, split
+        cols = [c for c in xs[0] if c in view_cols] + [target]
+
+        def key(row):
+            return tuple(_value(row[c]) for c in cols)
+
+        got = [key({**x, **y}) for x, y in zip(xs, ys)]
+        if split == "train":
+            want = [key(r) for t, r in by_time.items() if t not in held_out]
+            assert collections.Counter(got) == collections.Counter(want)
+            continue
+        ts = [r["time"] for r in _file_order_rows(paths[f"timestamps_{split}"])]
+        assert len(ts) == len(got), split
+        held_out.update(ts)
+        for i, t in enumerate(ts):
+            assert got[i] == key(by_time[t]), (split, i, t)
 
 
 def test_zh_holiday_calendar():

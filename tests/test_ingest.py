@@ -4,7 +4,6 @@ a feed-day."""
 
 from __future__ import annotations
 
-import contextlib
 import datetime as dt
 import os
 
@@ -12,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigdatasmallprice_spark.ingest import backfill_dates
+from tests.spark_jobs import job_group
 
 SCHEMA = "time timestamp, k string, v double"
 KEYS = ["time", "k"]
@@ -26,20 +26,6 @@ def _hourly(d: dt.date, tz: dt.tzinfo | None = None) -> list[dict]:
     ]
 
 
-@contextlib.contextmanager
-def _job_group(spark, group: str):
-    """Tag every job submitted from this thread; yields the ids seen."""
-    sc = spark.sparkContext
-    ids: list[int] = []
-    sc.setJobGroup(group, group)
-    try:
-        yield ids
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_backfill_topup_and_rerun_job_budget(spark, tmp_path):
     """A day that touches no existing partition of the table is one write
     job of one file; its idempotent re-run is a small anti-join over that
@@ -50,13 +36,13 @@ def test_backfill_topup_and_rerun_job_budget(spark, tmp_path):
         days[0]: 48, days[1]: 48
     }
 
-    with _job_group(spark, "ingest-topup") as topup:
+    with job_group(spark, "ingest-topup") as topup:
         assert backfill_dates(spark, _hourly, days[2:], path, SCHEMA, KEYS) == {days[2]: 48}
     assert 0 < len(topup) <= 1, topup
     new_dir = os.path.join(path, f"p_date={days[2]}")
     assert len([f for f in os.listdir(new_dir) if f.endswith(".parquet")]) == 1
 
-    with _job_group(spark, "ingest-rerun") as rerun:
+    with job_group(spark, "ingest-rerun") as rerun:
         assert backfill_dates(spark, _hourly, days[2:], path, SCHEMA, KEYS) == {days[2]: 0}
     assert len(rerun) <= 3, rerun
     assert spark.read.parquet(path).count() == 144

@@ -25,7 +25,7 @@ from bigdatasmallprice_spark.runs import (
     TaskSpec,
     next_daily_run,
 )
-from tests.domain_data import make_domain_tables
+from tests.domain_data import domain_frames
 
 UTC = dt.timezone.utc
 CLOCK = dt.datetime(2026, 2, 15, 6, 0, tzinfo=UTC)
@@ -121,13 +121,7 @@ def orch(spark, tmp_path_factory):
     from bigdatasmallprice_spark.api import make_server
     from bigdatasmallprice_spark.ingest import backfill_dates
 
-    tables = make_domain_tables()
-    sdfs = {}
-    for name, pdf in tables.items():
-        pdf = pdf.copy()
-        pdf["time"] = pdf["time"].map(lambda t: t.replace(tzinfo=None))
-        sdfs[name] = spark.createDataFrame(pdf)
-    register_views(spark, sdfs)
+    register_views(spark, domain_frames(spark))
 
     root = tmp_path_factory.mktemp("orch")
     bronze = str(root / "bronze")
