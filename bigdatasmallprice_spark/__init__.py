@@ -17,7 +17,7 @@ Layout:
     operators/  windows, rollups, dedup/upsert, splits, top-k, similarity
     plans/      the two feature views re-expressed as Spark SQL
     sources/    parsers for the reference's raw payload formats
-    streaming/  Structured Streaming analogs of continuous aggregates
+    streaming/  replay-safe incremental-state folds (KN, DSIR, langid, embeddings)
 """
 
 __version__ = "0.1.0"

@@ -68,13 +68,6 @@ def validate_no_leakage(feature_cols: list[str], target_col: str) -> None:
         raise ValueError(f"ops-metadata columns in features: {sorted(bad)}")
 
 
-def select_features(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
-    """Keep declared feature columns only; silently skip missing ones
-    (warn+skip semantics of the reference, P4)."""
-    present = [c for c in cols if c in df.columns]
-    return df.select(*present)
-
-
 def freshness_check(
     df: DataFrame, time_col: str, clock: dt.datetime, max_age_hours: int = 26
 ) -> None:
@@ -188,6 +181,20 @@ def enrich_load_features(df: DataFrame, dim: DataFrame) -> DataFrame:
 # run_export / run_load_export
 # --------------------------------------------------------------------------
 
+def label_splits(df: DataFrame, target_col: str) -> DataFrame:
+    """The chronological split rule (D4) of both model surfaces, shared
+    by export, training and validation. The net-load surface
+    (``LOAD_TARGET_COL``) drops NaN targets, then holds out the last 7
+    days as test and the 14 before them as val (export_pipeline.py:
+    563-642); the price surface splits 70/15/15 in time order
+    (export_pipeline.py:296-369)."""
+    if target_col == LOAD_TARGET_COL:
+        df = df.na.drop(subset=[target_col])
+        train_end, val_end = rolling_split_bounds(df, "time", 7, 14)
+        return split_by_dates(df, "time", train_end, val_end)
+    return split_label_by_ratio(df, ["time"], 0.7, 0.15)
+
+
 def _write_splits(
     labeled: DataFrame,
     feature_cols: tuple[str, ...],
@@ -224,7 +231,7 @@ def run_export(
     validate_no_leakage(list(FEATURE_COLS), TARGET_COL)
     df = spark.sql("SELECT * FROM training_features")
     freshness_check(df, "time", clock, max_age_hours)
-    labeled = split_label_by_ratio(df, ["time"], 0.7, 0.15)
+    labeled = label_splits(df, TARGET_COL)
     return _write_splits(labeled, FEATURE_COLS, TARGET_COL, out_dir)
 
 
@@ -238,7 +245,5 @@ def run_load_export(
     freshness_check(df, "time", clock, max_age_hours)
     span = df.agg(F.min(F.to_date("time")), F.max(F.to_date("time"))).collect()[0]
     dim = holiday_dim(spark, span[0], span[1])
-    enriched = enrich_load_features(df, dim).na.drop(subset=[LOAD_TARGET_COL])
-    train_end, val_end = rolling_split_bounds(enriched, "time", 7, 14)
-    labeled = split_by_dates(enriched, "time", train_end, val_end)
+    labeled = label_splits(enrich_load_features(df, dim), LOAD_TARGET_COL)
     return _write_splits(labeled, LOAD_FEATURE_COLS, LOAD_TARGET_COL, out_dir)

@@ -11,8 +11,7 @@ user-partitioned Exchange (each stage's conditional min references the
 previous stage's column; the partitioning is reused). The per-user
 rollup that usually follows shares the same partitioning, so the whole
 funnel costs a single shuffle of (user, type, ts) plus the final
-single-row aggregate. streaming/funnel_stream.py is the incremental
-twin (stage-times-only state, same stage-order fold)."""
+single-row aggregate."""
 
 from __future__ import annotations
 

@@ -459,9 +459,8 @@ def kn3_train(tg: DataFrame) -> dict[str, DataFrame]:
 def kn3_model_from_counts(tc: DataFrame) -> dict[str, DataFrame]:
     """The five lower-order tables + type total as PURE FUNCTIONS of
     the trigram count table — the single corpus-scale sufficient
-    statistic. Shared by the batch fit (kn3_train) and the streaming
-    twin (streaming/kn3_stream.py), which folds tc across deliveries
-    and recomputes these on read, so ONE derivation serves both."""
+    statistic, so any trigram count table (kn3_train's, or one
+    folded elsewhere) derives the same model."""
     tctx = tc.groupBy("u", "v").agg(
         F.sum("c3").cast("long").alias("c12"),
         F.count(F.lit(1)).cast("long").alias("nf3"),
@@ -659,8 +658,7 @@ def mkn3_model_from_counts(tc: DataFrame) -> dict[str, DataFrame]:
     bucketed by c3); disc3 (1-row, from c3's count-of-counts);
     mid(v,w -> n1vw); midctx(v -> nmid, mm1/mm2/mm3p successor types
     bucketed by n1vw); disc2 (1-row, from n1vw's count-of-counts);
-    uni(w, n1w); types(T3). Shared by the batch fit and the streaming
-    readback (streaming/kn3_stream.py::read_mkn3_model)."""
+    uni(w, n1w); types(T3)."""
     tctx = tc.groupBy("u", "v").agg(
         F.sum("c3").cast("long").alias("c12"),
         F.sum(F.when(F.col("c3") == 1, 1).otherwise(0)).cast("long").alias("mf1"),

@@ -522,9 +522,7 @@ def signature_chunks(
 ) -> DataFrame:
     """(id, sig) -> (id, sig, ci, cv): the 4-chunk (16+16+16+15 bit)
     explosion of a 63-bit signature — the ONE definition of the chunk
-    layout, shared by the batch blocked join below and the streaming
-    gates' new-vs-state join (streaming/audio_stream.py) so the
-    pigeonhole geometry cannot silently diverge between them."""
+    layout the blocked join below relies on."""
     from pyspark.sql import functions as F
 
     chunks = F.array(

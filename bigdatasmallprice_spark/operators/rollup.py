@@ -8,8 +8,7 @@ In Spark the same rollup is a ``groupBy(date_trunc(...), keys)`` — a
 single shuffle whose map-side partial aggregation does most of the work
 (hash-agg before exchange), so at 100 TB the shuffle carries only one
 row per (bucket, key) per input partition. Incremental refresh is
-partition-scoped recompute (see ``incremental_rollup``); the streaming
-analog lives in streaming/rollup_stream.py.
+partition-scoped recompute (see ``incremental_rollup``).
 """
 
 from __future__ import annotations

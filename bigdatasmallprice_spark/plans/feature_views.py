@@ -162,8 +162,7 @@ LEFT JOIN weather_hourly wr
 
 # A1 — the three 15-min -> hourly continuous-aggregate equivalents
 # (init.sql:81-100,135-154,157-176); incremental refresh is
-# operators/rollup.py::incremental_rollup, streaming analog in
-# streaming/rollup_stream.py
+# operators/rollup.py::incremental_rollup
 TARIFF_HOURLY_SQL = """
 SELECT
   date_trunc('hour', time) AS hour,

@@ -1700,8 +1700,7 @@ def _bm25_scored(docs: DataFrame, nq: int = _BM_NQ) -> DataFrame:
 def bm25_tf(docs: DataFrame) -> DataFrame:
     """(doc_id, term, tf): the per-document term-frequency table — the
     ONLY corpus-dependent state of the BM25 model (df/dl/the 2-scalar
-    global are pure functions of it); what streaming/bm25_stream.py
-    folds."""
+    global are pure functions of it)."""
     tok = docs.select(
         "doc_id",
         F.explode(F.expr("filter(split(text, ' '), w -> w <> '')")).alias("term"),

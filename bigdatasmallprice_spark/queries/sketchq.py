@@ -3,13 +3,12 @@ Count-Min frequency estimation, and binned-histogram quantiles — each
 with an in-query exact audit (and audit-free production twins where
 the audit carries the only corpus-sized surface).
 
-Together with ``cardinality_sketch`` (linear counting),
-``operators/sketches.py`` (Misra-Gries heavy hitters) and the bloom
+Together with ``cardinality_sketch`` (linear counting) and the bloom
 membership bitmap, these are the standard mergeable summaries a
 100 TB curation pipeline maintains instead of corpus-wide
 distinct/sort/groupBy shuffles — one per question class: how many
-distinct (HLL), how often (CMS), have we seen it (bloom), what's hot
-(MG), where do values sit (the quantile histogram).
+distinct (HLL), how often (CMS), have we seen it (bloom), where do
+values sit (the quantile histogram).
 
 - **HyperLogLog** (Flajolet et al. 2007): per-source distinct-word
   estimate from a fixed 2^8-register state (p=8 — see the sizing note
@@ -663,9 +662,8 @@ FROM est CROSS JOIN n
     "SUM-mergeable — at 100 TB, per-term frequency queries cost one "
     "narrow map plus a 65k-row fold, never a vocabulary-sized "
     "shuffle; the probe stage is a broadcast join against the tiny "
-    "register table. Complements Misra-Gries (operators/sketches.py): "
-    "MG enumerates the heavy hitters, CMS answers point queries for "
-    "arbitrary terms.",
+    "register table. CMS answers point queries for arbitrary "
+    "terms.",
     tags=("sketch", "curation", "agg"),
 )
 def count_min_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -758,9 +756,9 @@ FROM (SELECT event_type, MAX(n) AS n FROM cum GROUP BY 1) n
 """,
     doc="Histogram quantile sketch — the quantile member of the "
     "engine's sketch family (cardinality: HLL/linear counting, "
-    "frequency: Count-Min, membership: bloom, heavy hitters: "
-    "Misra-Gries, quantiles: THIS): per event type a fixed 1024-bin "
-    "integer-cents histogram whose counters are SUM-mergeable across "
+    "frequency: Count-Min, membership: bloom, quantiles: THIS): per "
+    "event type a fixed 1024-bin integer-cents histogram whose "
+    "counters are SUM-mergeable across "
     "partitions/shards/days, quantile estimate = upper bound of the "
     "first bin where the cumulative count reaches ceil(q*n). The "
     "estimate NEVER undershoots and overshoots by < bin width (64 "

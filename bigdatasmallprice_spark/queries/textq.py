@@ -305,10 +305,8 @@ _PACK_BUDGET = 4096  # tokens per packed training sequence
 def pack_bins_from_counts(t: DataFrame) -> DataFrame:
     """The packing tail over any (doc_id, nt) token-count frame:
     ceil(total/budget) bins, banded size-rank round-robin, per-bin
-    accounting — ONE body serving pack_sequences, pack_sequences_bpe
-    and the streamed token-count state's serving read
-    (streaming/bpe_stream.py::read_packed_bins), so the bin
-    arithmetic cannot fork."""
+    accounting — ONE body serving pack_sequences and
+    pack_sequences_bpe, so the bin arithmetic cannot fork."""
     from bigdatasmallprice_spark.operators.topk import banded_global_rank
 
     n_bins = t.agg(
@@ -868,10 +866,9 @@ SELECT doc_id, n_trigrams, p_sum_micro, avg_p_micro, hm_p_micro FROM mkn3
     "ngram_lm_kn3). BOTH discount rows are 1-row broadcasts of "
     "closed-form integer rationals (the bigram mkn's _mkn_disc_exprs "
     "reused verbatim — one source of truth), and every table remains "
-    "a pure function of the single trigram count table, so the kn3 "
-    "STREAM state serves this smoother too "
-    "(kn3_stream.read_mkn3_model) and the whole fit + score replays "
-    "as one closed integer oracle chain. Same 100 TB shape as "
+    "a pure function of the single trigram count table, and the whole "
+    "fit + score replays as one closed integer oracle chain. Same "
+    "100 TB shape as "
     "ngram_lm_kn3: model-as-table shuffle equi-joins, broadcast "
     "scalars, one integer aggregate per document.",
     tags=("text", "join", "train", "quality"),

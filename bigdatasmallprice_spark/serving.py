@@ -243,23 +243,7 @@ def forecast(
         # main.py:316-317: any load-side failure degrades gracefully
         net_load = None
 
-    # single-row tariff eval so the formulas stay the one implementation
-    one = spark.createDataFrame(
-        [(net_load if net_load is not None else 0.0, epex_pred)],
-        "load double, epex double",
-    )
-    energie = energiepreis(F.col("epex"))
-    netz = (
-        netzpreis(F.col("load"))
-        if net_load is not None
-        else F.lit(DEFAULT_NETZ_STANDARD)
-    )
-    tariff = one.select(
-        F.round(netz, 2).alias("netzpreis_rp_kwh"),
-        F.round(energie, 2).alias("energiepreis_rp_kwh"),
-        F.round(gesamttarif(netz, energie), 2).alias("gesamttarif_rp_kwh"),
-        traffic_light(F.round(gesamttarif(netz, energie), 2)).alias("price_level"),
-    ).collect()[0]
+    tariff = forecast_tariff(net_load, epex_pred, spark)
     return {
         "time": when.isoformat() if when is not None else None,
         "predicted_price_eur_mwh": round(epex_pred, 2),
@@ -267,52 +251,52 @@ def forecast(
         "energiepreis_rp_kwh": tariff["energiepreis_rp_kwh"],
         "gesamttarif_rp_kwh": tariff["gesamttarif_rp_kwh"],
         "price_rp_kwh": tariff["gesamttarif_rp_kwh"],  # backward-compat alias
-        "price_level": tariff["price_level"],
+        "price_level": tariff["level"],
         "net_load_available": net_load is not None,
     }
 
 
-def forecast_tariff(net_load: float, epex_eur_mwh: float, spark: SparkSession) -> dict:
+def forecast_tariff(
+    net_load: float | None, epex_eur_mwh: float, spark: SparkSession
+) -> dict:
     """The /api/forecast tariff tail (main.py:296-352): model outputs ->
-    Netz/Energie/Gesamt + traffic-light level. Single-row column eval so
-    the formulas stay the one tested implementation."""
-    df = spark.createDataFrame([(float(net_load), float(epex_eur_mwh))], "load double, epex double")
-    netz = netzpreis(F.col("load"))
+    Netz/Energie/Gesamt + traffic-light level of the total as served,
+    rounded to 2 decimals. A missing net load prices the standard Netz
+    tariff. Single-row column eval so the formulas stay the one tested
+    implementation."""
+    df = spark.createDataFrame(
+        [(0.0 if net_load is None else float(net_load), float(epex_eur_mwh))],
+        "load double, epex double",
+    )
+    netz = (
+        F.lit(DEFAULT_NETZ_STANDARD) if net_load is None else netzpreis(F.col("load"))
+    )
     energie = energiepreis(F.col("epex"))
+    gesamt = F.round(gesamttarif(netz, energie), 2)
     row = df.select(
         F.round(netz, 2).alias("netzpreis_rp_kwh"),
         F.round(energie, 2).alias("energiepreis_rp_kwh"),
-        F.round(gesamttarif(netz, energie), 2).alias("gesamttarif_rp_kwh"),
-        traffic_light(gesamttarif(netz, energie)).alias("level"),
+        gesamt.alias("gesamttarif_rp_kwh"),
+        traffic_light(gesamt).alias("level"),
     ).collect()[0]
     return row.asDict()
 
 
 def labeled_model_surface(spark: SparkSession, model_name: str):
-    """(labeled frame, target column) for a model surface, using the
-    export module's split rules (D4): ``*_load`` names -> the net-load
-    view with target-NaN drop and the rolling last-7d/14d split
-    (export_pipeline.py:563-642), everything else -> training_features
-    with the 70/15/15 chronological split. One split implementation
-    serves export, training (runs.py's dags), and validation."""
-    from bigdatasmallprice_spark.export import LOAD_TARGET_COL, TARGET_COL
-    from bigdatasmallprice_spark.operators.splits import (
-        rolling_split_bounds,
-        split_by_dates,
-        split_label_by_ratio,
+    """(labeled frame, target column) for a model surface: ``*_load``
+    names -> the net-load view, everything else -> training_features,
+    each labeled by export.label_splits, the one split rule (D4) that
+    export, training (runs.py's dags) and validation share."""
+    from bigdatasmallprice_spark.export import (
+        LOAD_TARGET_COL,
+        TARGET_COL,
+        label_splits,
     )
 
     is_load = model_name.endswith("_load")
     view = "winterthur_net_load_features" if is_load else "training_features"
     target = LOAD_TARGET_COL if is_load else TARGET_COL
-    df = _view(spark, view)
-    if is_load:
-        df = df.na.drop(subset=[target])
-        train_end, val_end = rolling_split_bounds(df, "time", 7, 14)
-        labeled = split_by_dates(df, "time", train_end, val_end)
-    else:
-        labeled = split_label_by_ratio(df, ["time"], 0.7, 0.15)
-    return labeled, target
+    return label_splits(_view(spark, view), target), target
 
 
 def model_validation(

@@ -14,11 +14,10 @@ bit-for-bit and weighs any document frame identically (proven in
 tests/test_dsir_stream.py).
 
 Merge class: counter SUMS — mergeable, NOT idempotent (the
-cms_stream/knlm_stream class): replays are skipped via the batch-id
-watermark (tested). The TARGET PREDICATE is pinned in the manifest:
-counts accumulated for one target definition must never fold with
-another's (the quantile stream's bin-geometry rule), so a mismatched
-predicate raises.
+knlm_stream class): replays are skipped via the batch-id watermark
+(tested). The TARGET PREDICATE is pinned in the manifest: counts
+accumulated for one target definition must never fold with another's,
+so a mismatched predicate raises.
 
 State size = DSIR_BUCKETS rows at any corpus scale; each delivery
 costs its own tokenize + one bucket-keyed fold.
@@ -44,8 +43,7 @@ def update_dsir_counts(
     counts into the persisted state. The target predicate AND the
     bucket count are pinned: the add-one normalizer in the ratio table
     depends on the bin geometry, so counts hashed into N buckets must
-    never fold with (or be read back under) a different N — the
-    quantile stream's bin-geometry rule."""
+    never fold with (or be read back under) a different N."""
     from bigdatasmallprice_spark.operators.dsir import DSIR_BUCKETS, dsir_features
     from bigdatasmallprice_spark.streaming.state import (
         next_state_version,

@@ -6,14 +6,13 @@ A production curation pipeline trains token vectors occasionally and
 embeds ARRIVING documents continuously. Given a FROZEN token-vector
 model, a document's pooled vector is a PURE FUNCTION of its own text
 (one vocabulary join + one (doc, dim) aggregate over the delivery
-only), so the fold is idempotent last-writer-wins by doc_id — the
-ann_stream membership class, not the counter-SUM class: replays
-rewrite identical rows, re-deliveries with CHANGED text replace the
-stale vector instead of duplicating it.
+only), so the fold is idempotent last-writer-wins by doc_id — a
+membership fold, not the counter-SUM class: replays rewrite identical
+rows, re-deliveries with CHANGED text replace the stale vector instead
+of duplicating it.
 
-What makes idempotence REAL is the model pin (the ann_stream
-quantizer rule): vectors pooled under two different token models must
-never fold into one state, so ``init_doc_embeddings`` persists the
+What makes idempotence REAL is the model pin: vectors pooled under two
+different token models must never fold into one state, so ``init_doc_embeddings`` persists the
 token-vector table beside the state and pins an md5 fingerprint of
 its canonical serialization in the manifest; a delivery pooled
 against different vectors refuses instead of silently mixing
@@ -51,8 +50,7 @@ def token_vector_fingerprint(rows: list[tuple[str, int, int]]) -> str:
 def _vector_dir(state_path: str) -> str:
     # NOT ".__v...__": publish_state's version GC removes any sibling
     # matching "<state>.__v*__" (state.py::_gc_stale_versions), so the
-    # frozen model dir must live outside that namespace — the same
-    # reason ann_stream uses ".__centroids__"
+    # frozen model dir must live outside that namespace
     return state_path.rstrip("/") + ".__tokmodel__"
 
 

@@ -9,13 +9,12 @@ counts cont(w2, n_bwd), the type total T — is a PURE FUNCTION of bc
 (n_fwd/n_bwd/T count DISTINCT bigram types, which are exactly bc's
 rows; c1 sums bc's counts). So the stream folds the smallest
 sufficient statistic and recomputes the derived tables on read with
-the exact batch aggregates — the graph_stream recompute-on-read rule
-applied to a model.
+the exact batch aggregates (recompute-on-read).
 
-Merge class: counter SUMS — mergeable but NOT idempotent (the
-cms_stream class): a replayed delivery would double-count its
-bigrams, so the fold leans on the batch-id watermark; the test
-replays a batch and proves the model unchanged.
+Merge class: counter SUMS — mergeable but NOT idempotent: a replayed
+delivery would double-count its bigrams, so the fold leans on the
+batch-id watermark; the test replays a batch and proves the model
+unchanged.
 
 Because the fold and the derived tables are exact integers, a model
 trained over ANY slicing of the corpus into deliveries equals the

@@ -10,12 +10,10 @@ sources x languages^2 regardless of history — a corpus-monitoring
 service reads language mix and classifier drift (per-source confusion,
 accuracy where gold labels flow with the stream) without ever
 re-scoring history. SUM folds are mergeable but NOT idempotent, so
-replay protection is the batch-id watermark (the Count-Min/quantile
-discipline; tested). The scoring model is pinned in the state
+replay protection is the batch-id watermark (tested). The scoring model is pinned in the state
 manifest by an md5 fingerprint of its weights: folding counts produced
 by two different models would silently mix incomparable predictions,
-so a mismatch raises instead (the bin-geometry rule of the quantile
-stream, applied to model versions).
+so a mismatch raises instead.
 
 Stream == batch by construction: scoring is a deterministic pure
 function of (text, weights), and the count fold is associative — the

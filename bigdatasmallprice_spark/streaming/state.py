@@ -2,7 +2,7 @@
 
 Spark's foreachBatch contract is at-least-once: a batch that fails
 after its side effect but before the checkpoint commit is retried with
-the SAME batch_id. Folds that are not idempotent (Misra–Gries merges)
+the SAME batch_id. Folds that are not idempotent (counter SUMs)
 must therefore record the last applied id and skip replays. Batch ids
 are monotone per checkpoint, so "applied" is a single max — stored as
 a JSON marker beside the state, written atomically (tmp + rename).
@@ -42,26 +42,28 @@ def mark_applied(state_path: str, batch_id: int) -> None:
 
 
 # ---------------------------------------------------------------------------
-# Versioned state: crash-atomic rewrite-style state (sketches, moments)
+# Versioned state: crash-atomic rewrite-style state (count tables)
 # ---------------------------------------------------------------------------
 #
-# Rewrite-style folds (Misra–Gries, covariance moments) replace the whole
-# state each batch. Overwriting the live directory is NOT crash-atomic:
-# Spark deletes the old files before the new ones are committed, so a
-# crash mid-write leaves a torn state under a marker that still claims
-# the previous batch applied — and the retry folds on top of garbage.
+# Rewrite-style folds (the KN LM and DSIR count tables, the language-mix
+# counters) replace the whole state each batch. Overwriting the live
+# directory is NOT crash-atomic: Spark deletes the old files before the
+# new ones are committed, so a crash mid-write leaves a torn state under
+# a marker that still claims the previous batch applied — and the retry
+# folds on top of garbage.
 #
 # Instead each fold writes a FRESH version directory
 # (``<state>.__v<version>__``) and then flips one atomically-replaced
-# JSON manifest (pointer + replay watermark + sketch config, one
+# JSON manifest (pointer + replay watermark + fold config, one
 # ``os.replace``) to it. Crash before the flip: the manifest still
 # points at the previous complete version, the half-written directory is
 # orphaned and simply overwritten by the retry. Crash after the flip:
 # the batch is recorded applied and the retry is skipped. Old version
 # directories are best-effort garbage-collected after every successful
-# flip. The manifest also pins fold parameters (e.g. m / n_shards):
-# resuming a sketch with different parameters would silently reshard
-# counts, so mismatches must raise instead (validate_state_config).
+# flip. The manifest also pins fold parameters (e.g. the DSIR target
+# predicate and bucket count): resuming a fold with different parameters
+# would silently mix incomparable counts, so mismatches must raise
+# instead (validate_state_config).
 
 _MANIFEST = "_state_manifest.json"
 
@@ -166,56 +168,6 @@ def versioned_already_applied(state_path: str, batch_id: int | None) -> bool:
 def next_state_version(state_path: str) -> int:
     manifest = read_state_manifest(state_path)
     return 0 if manifest is None else manifest["version"] + 1
-
-
-def check_verdict_sink_layout(verdict_path: str) -> None:
-    """Refuse a LEGACY flat verdict sink (root-level part files).
-
-    The per-version ``batch=N/`` verdict layout (winnow_stream,
-    audio_stream) and a pre-existing flat appended sink cannot coexist:
-    Spark's partition discovery rejects a directory that mixes
-    root-level data files with partition subdirectories, and a silent
-    mix would surface only at read time. Verdict sinks are paired with
-    the stream's checkpoint + state — a fresh checkpoint means a fresh
-    sink. Fail fast with a clear message instead."""
-    if not os.path.isdir(verdict_path):
-        return
-    flat = [
-        f
-        for f in os.listdir(verdict_path)
-        if f.startswith("part-")
-        and os.path.isfile(os.path.join(verdict_path, f))
-    ]
-    if flat:
-        raise ValueError(
-            f"verdict sink {verdict_path!r} holds a legacy flat layout "
-            f"({len(flat)} root-level part files); the per-version "
-            "batch=N/ layout cannot be mixed into it. Start a fresh "
-            "verdict directory alongside the fresh checkpoint/state "
-            "(verdict sinks are paired with the checkpoint), or move "
-            "the old part files into a batch=-1/ subdirectory."
-        )
-
-
-def advance_watermark(state_path: str, batch_id: int) -> None:
-    """Bump ONLY the replay watermark, keeping the current version dir
-    and config untouched. For folds where a batch produced no state
-    change (an empty delivery): re-publishing the same version would
-    collapse publish_state's keep-set to one directory and GC the
-    genuinely-previous version a full fold-cycle early — exactly the
-    reader-grace window publish_state exists to protect."""
-    manifest = read_state_manifest(state_path)
-    if manifest is None:
-        return
-    if batch_id <= manifest.get("max_batch_id", -1):
-        return
-    manifest = dict(manifest)
-    manifest["max_batch_id"] = batch_id
-    p = _manifest_path(state_path)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    os.replace(tmp, p)
 
 
 def validate_pin_with_default(state_path: str, key: str, value, default) -> None:

@@ -103,93 +103,6 @@ def test_curation_funnel_is_monotone(spark):
     assert dropped_any  # the funnel must actually filter something
 
 
-def test_curated_corpus_sink_round_trip(spark, tmp_path):
-    from bigdatasmallprice_spark.curation_sink import (
-        read_manifest,
-        read_shard,
-        write_curated_corpus,
-    )
-    from bigdatasmallprice_spark.functions.texts import n_tokens
-    from pyspark.sql import functions as F2
-
-    docs = table(spark, SF, "documents").select(
-        "doc_id", "text", "source", n_tokens(F2.col("text")).alias("nt")
-    )
-    path = str(tmp_path / "curated")
-    manifest = write_curated_corpus(docs, path, n_shards=8).collect()
-
-    total = docs.count()
-    assert sum(r.n_docs for r in manifest) == total
-    assert len(manifest) <= 8
-
-    # manifest must equal an independent aggregation of the written files
-    back = spark.read.parquet(path)
-    assert back.count() == total
-    recount = {
-        r.shard: (r.n, r.ts)
-        for r in back.groupBy("shard")
-        .agg(F2.count(F2.lit(1)).alias("n"), F2.sum("nt").alias("ts"))
-        .collect()
-    }
-    for r in manifest:
-        assert recount[r.shard] == (r.n_docs, r.token_sum)
-
-    # per-shard read partition-prunes: only one shard dir in the scan
-    sh = manifest[0].shard
-    df1 = read_shard(spark, path, sh)
-    plan = df1._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "shard" in plan.split("PartitionFilters")[1][:200]
-    assert df1.count() == manifest[0].n_docs
-
-    # re-export is idempotent and the manifest swap is atomic (no .tmp left)
-    import os
-    write_curated_corpus(docs, path, n_shards=8)
-    assert not os.path.exists(os.path.join(path, "_manifest.tmp"))
-    assert sum(r.n_docs for r in read_manifest(spark, path).collect()) == total
-
-
-def test_jsonl_corpus_roundtrip(spark, tmp_path):
-    """JSONL export: gzip shard files on disk, every doc one JSON line,
-    read-back equals the input exactly."""
-    import gzip
-    import json
-    import os
-
-    from bigdatasmallprice_spark.curation_sink import (
-        read_jsonl_corpus,
-        write_jsonl_corpus,
-    )
-
-    rows = [(i, f"text {i} with \"quotes\" and ümlauts", i * 3) for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id long, text string, nt long")
-    path = str(tmp_path / "jsonl")
-    write_jsonl_corpus(df, path, n_shards=4)
-
-    shard_dirs = [d for d in os.listdir(path) if d.startswith("shard=")]
-    assert len(shard_dirs) == 4
-    # files are real gzip JSONL
-    some = next(
-        os.path.join(path, shard_dirs[0], f)
-        for f in os.listdir(os.path.join(path, shard_dirs[0]))
-        if f.endswith(".gz")
-    )
-    with gzip.open(some, "rt") as fh:
-        line = fh.readline().strip()
-    assert set(json.loads(line)) == {"doc_id", "text", "nt"}
-
-    back = read_jsonl_corpus(spark, path, "doc_id long, text string, nt long")
-    got = sorted(map(tuple, back.collect()))
-    assert [r[:3] for r in got] == sorted(rows)
-    # shard recovered from the partition directory, matching the writer's
-    # deterministic doc_id-hash sharding
-    from bigdatasmallprice_spark.curation_sink import with_shard
-
-    want_shard = {
-        r["doc_id"]: r["shard"] for r in with_shard(df, 4, "doc_id").collect()
-    }
-    assert all(r[3] == want_shard[r[0]] for r in got)
-
-
 def test_winnowing_guarantee_and_density(spark):
     """The Schleimer et al. guarantee: two documents sharing ANY token
     run of >= k+w-1 = 8 tokens MUST share a fingerprint — regardless of

@@ -215,6 +215,17 @@ def test_forecast_tariff_roundtrip(domain):
     assert out["energiepreis_rp_kwh"] == 3.2
     assert out["gesamttarif_rp_kwh"] == 8.2
     assert out["level"] == "low"
+    # the level is read off the total as served, rounded to 2 decimals:
+    # an unrounded 14.99575 Rp/kWh shows as 15.0 and reads "medium"
+    out = forecast_tariff(525.0, 533.05, domain)
+    assert out["netzpreis_rp_kwh"] == 5.0
+    assert out["gesamttarif_rp_kwh"] == 15.0
+    assert out["level"] == "medium"
+    # no net-load prediction: the standard Netz tariff
+    out = forecast_tariff(None, 80.0, domain)
+    assert out["netzpreis_rp_kwh"] == 10.0
+    assert out["gesamttarif_rp_kwh"] == 13.2
+    assert out["level"] == "low"
 
 
 # ── auth (F14): password hash + HS256 JWT ─────────────────────────────────

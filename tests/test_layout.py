@@ -131,228 +131,3 @@ def test_zorder_write_prunes_better_than_linear(spark, tmp_path):
             .count()
         )
         assert got == matched
-
-
-def test_incremental_zorder_maintenance_preserves_pruning(spark, tmp_path):
-    """The streaming OPTIMIZE ZORDER loop (streaming/zorder_stream.py):
-    three availableNow-style folds — bulk, broad update, NARROW
-    late-arriving slice — must end with footer-stat pruning equal to
-    the one-shot layout and strictly better than time-linear; the
-    narrow batch must rewrite ONLY the z-range it touches (1 of 16
-    files; the rest enter the new version as hardlinks, zero data
-    copied); a replayed batch id must be a no-op (appends are not
-    idempotent); and the final table must hold exactly the union of
-    the batches. Numbers pinned — the data is deterministic."""
-    import os
-
-    from bigdatasmallprice_spark.streaming.zorder_stream import (
-        read_zorder_table,
-        resolve_state_dir,
-        update_zorder_table,
-    )
-
-    ev = table(spark, SF, "events").select(
-        "event_id",
-        F.expr("unix_micros(ts)").alias("us"),
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("vc"),
-    )
-    x_sql = f"greatest(least((us - {_BASE_US}) div {_XB_US}, 255), 0)"
-    y_sql = "greatest(least(vc div 256, 255), 0)"
-    st = str(tmp_path / "ztab")
-    n = ev.count()
-    rpf = -(-n // 16)
-
-    late = f"us >= {_BASE_US + 200 * _XB_US} AND vc >= 10000"
-    batches = [
-        ev.filter(f"event_id % 7 != 0 AND NOT ({late})"),
-        ev.filter(f"event_id % 7 = 0 AND NOT ({late})"),
-        ev.filter(late),  # narrow in both dimensions: the late slice
-    ]
-    results = []
-    inodes_v1: set[int] = set()
-    for i, b in enumerate(batches):
-        results.append(
-            update_zorder_table(
-                spark, st, b, x_sql, y_sql, rows_per_file=rpf, batch_id=i
-            )
-        )
-        if i == 1:
-            inodes_v1 = {
-                os.stat(f).st_ino
-                for f in glob.glob(resolve_state_dir(st) + "/part-*.parquet")
-            }
-
-    # the narrow batch rewrote exactly the one owning file
-    assert results[2]["rewritten"] == 1, results[2]
-    assert results[2]["linked"] == 14, results[2]
-    shared = sum(
-        1
-        for f in glob.glob(resolve_state_dir(st) + "/part-*.parquet")
-        if os.stat(f).st_ino in inodes_v1
-    )
-    assert shared == 14, shared
-
-    # the structural invariant per-interval rewriting exists for: all
-    # file z-ranges stay PAIRWISE DISJOINT after any fold sequence
-    # (gap rows confined to their gap, file rows to their range)
-    from bigdatasmallprice_spark.streaming.zorder_stream import (
-        zorder_table_stats,
-    )
-
-    rngs = sorted((lo, hi) for _, lo, hi, _ in zorder_table_stats(st))
-    assert all(rngs[i][1] < rngs[i + 1][0] for i in range(len(rngs) - 1)), rngs
-
-    # replay of an applied id: watermark-guarded no-op
-    r = update_zorder_table(
-        spark, st, batches[2], x_sql, y_sql, rows_per_file=rpf, batch_id=2
-    )
-    assert r.get("skipped_replay") is True, r
-
-    # content: exactly the union of the batches
-    got = read_zorder_table(spark, st)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ev.collect()))
-
-    # pruning parity with the one-shot layout, strictly better than
-    # time-linear — same box the registered zorder_pruning query uses
-    zorder_write(
-        ev, str(tmp_path / "oneshot"), F.expr(x_sql), F.expr(y_sql), n_files=16
-    )
-    ev.repartitionByRange(16, "us").sortWithinPartitions("us").write.parquet(
-        str(tmp_path / "linear")
-    )
-    box = {
-        "us": (_BASE_US + 64 * _XB_US, _BASE_US + 176 * _XB_US - 1),
-        "vc": (39 * 256, 59 * 256 - 1),
-    }
-    incr = _file_stats(resolve_state_dir(st), ("us", "vc"))
-    oneshot = _file_stats(str(tmp_path / "oneshot"), ("us", "vc"))
-    linear = _file_stats(str(tmp_path / "linear"), ("us", "vc"))
-    n_incr = _files_overlapping(incr, box)
-    n_oneshot = _files_overlapping(oneshot, box)
-    n_linear = _files_overlapping(linear, box)
-    assert len(incr) == len(oneshot) == 16  # no file-count inflation
-    assert n_incr == n_oneshot == 5, (n_incr, n_oneshot)
-    assert n_incr < n_linear, (n_incr, n_linear)
-
-
-def test_incremental_zorder_config_is_pinned(spark, tmp_path):
-    """Folding with different layout parameters than the manifest
-    pinned must raise — a silently re-bucketed table would have
-    files whose footer ranges lie about their contents."""
-    import pytest as _pytest
-
-    from bigdatasmallprice_spark.streaming.zorder_stream import (
-        update_zorder_table,
-    )
-
-    ev = table(spark, SF, "events").select(
-        "event_id", F.expr("unix_micros(ts)").alias("us"),
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("vc"),
-    ).limit(50)
-    x_sql = f"greatest(least((us - {_BASE_US}) div {_XB_US}, 255), 0)"
-    y_sql = "greatest(least(vc div 256, 255), 0)"
-    st = str(tmp_path / "ztab")
-    update_zorder_table(spark, st, ev, x_sql, y_sql, bits=8, batch_id=0)
-    with _pytest.raises(ValueError, match="different parameters"):
-        update_zorder_table(spark, st, ev, x_sql, y_sql, bits=6, batch_id=1)
-
-
-def test_incremental_zorder_filenames_stay_bounded(spark, tmp_path):
-    """A file that survives MANY batches gets re-hardlinked every
-    version; its name must be rebuilt from a digest each time, not
-    prefixed (prefixing grows the name one layer per batch — unbounded
-    over a long stream)."""
-    import os
-
-    from bigdatasmallprice_spark.streaming.zorder_stream import (
-        resolve_state_dir,
-        update_zorder_table,
-    )
-
-    ev = table(spark, SF, "events").select(
-        "event_id",
-        F.expr("unix_micros(ts)").alias("us"),
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("vc"),
-    )
-    x_sql = f"greatest(least((us - {_BASE_US}) div {_XB_US}, 255), 0)"
-    y_sql = "greatest(least(vc div 256, 255), 0)"
-    st = str(tmp_path / "ztab")
-    update_zorder_table(
-        spark, st, ev.filter("vc < 20000"), x_sql, y_sql,
-        rows_per_file=64, batch_id=0,
-    )
-    # five narrow late batches, each touching only the high-value range
-    for i in range(1, 6):
-        b = ev.filter(f"vc >= {20000 + i}").limit(3)
-        update_zorder_table(
-            spark, st, b, x_sql, y_sql, rows_per_file=64, batch_id=i
-        )
-    names = [
-        os.path.basename(f)
-        for f in glob.glob(resolve_state_dir(st) + "/part-*.parquet")
-    ]
-    assert names and max(len(n) for n in names) < 120, sorted(names, key=len)[-1]
-
-
-def test_incremental_zorder_keeps_null_z_and_foreign_layouts(spark, tmp_path):
-    """Two loss modes the interval logic must not have: (a) a delta
-    row whose layout inputs are NULL (its z saturates to bucket 0 and
-    the row lands in a file — never silently dropped); (b) folding
-    into a NON-disjoint foreign layout (e.g. a plain-append directory)
-    triggers a full rewrite that keeps every existing row and restores
-    the disjointness invariant."""
-    import os
-
-    from bigdatasmallprice_spark.streaming.zorder_stream import (
-        ZCOL,
-        read_zorder_table,
-        resolve_state_dir,
-        update_zorder_table,
-        zorder_table_stats,
-    )
-
-    # (a) NULL layout input
-    st = str(tmp_path / "ztab")
-    rows = spark.createDataFrame(
-        [(1, 10, 20), (2, None, 5), (3, 200, 300)], "id long, a long, b long"
-    )
-    update_zorder_table(
-        spark, st, rows, "greatest(least(a, 255), 0)",
-        "greatest(least(b, 255), 0)", rows_per_file=64, batch_id=0,
-    )
-    got = sorted(r.id for r in read_zorder_table(spark, st).collect())
-    assert got == [1, 2, 3], got
-
-    # (b) non-disjoint foreign layout: hand-build a state version with
-    # overlapping z-ranges, then fold a batch into it
-    from bigdatasmallprice_spark.streaming.state import (
-        publish_state,
-        state_version_dir,
-    )
-
-    st2 = str(tmp_path / "ztab2")
-    vdir = state_version_dir(st2, 0)
-    spark.createDataFrame(
-        [(10, 5), (11, 50)], f"id long, {ZCOL} long"
-    ).coalesce(1).write.parquet(vdir)
-    spark.createDataFrame(
-        [(12, 30), (13, 80)], f"id long, {ZCOL} long"
-    ).coalesce(1).write.mode("append").parquet(vdir)  # ranges overlap
-    publish_state(
-        st2, 0, 0,
-        config={"x_sql": "greatest(least(a, 255), 0)",
-                "y_sql": "greatest(least(b, 255), 0)", "bits": 8},
-    )
-    rngs = sorted((lo, hi) for _, lo, hi, _ in zorder_table_stats(st2))
-    assert any(rngs[i][1] >= rngs[i + 1][0] for i in range(len(rngs) - 1))
-
-    batch = spark.createDataFrame([(14, 3, 4)], "id long, a long, b long")
-    r = update_zorder_table(
-        spark, st2, batch, "greatest(least(a, 255), 0)",
-        "greatest(least(b, 255), 0)", rows_per_file=64, batch_id=1,
-    )
-    assert r["rewritten"] == 2, r  # both foreign files rewritten
-    got2 = sorted(r.id for r in read_zorder_table(spark, st2).collect())
-    assert got2 == [10, 11, 12, 13, 14], got2  # nothing lost
-    rngs2 = sorted((lo, hi) for _, lo, hi, _ in zorder_table_stats(st2))
-    assert all(rngs2[i][1] < rngs2[i + 1][0] for i in range(len(rngs2) - 1))

@@ -285,35 +285,6 @@ def test_salted_join_equals_plain_join(spark):
 
 
 # ---------------------------------------------------------------------------
-# bucketed co-located join (operators/bucketing.py)
-# ---------------------------------------------------------------------------
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    from bigdatasmallprice_spark.operators.bucketing import bucketed_join, write_bucketed
-
-    n = 5000
-    left = spark.range(n).selectExpr("id AS k", "id * 2 AS lv")
-    right = spark.range(n).selectExpr("id AS k", "id * 3 AS rv")
-    write_bucketed(left, "bk_left", ["k"], 8, path=str(tmp_path / "l"))
-    write_bucketed(right, "bk_right", ["k"], 8, path=str(tmp_path / "r"))
-
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = bucketed_join(spark, "bk_left", "bk_right", ["k"])
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan  # the whole point of bucketing
-        assert j.count() == n
-        got = j.filter(F.col("k") == 42).collect()[0]
-        assert (got["lv"], got["rv"]) == (84, 126)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-        spark.sql("DROP TABLE IF EXISTS bk_left")
-        spark.sql("DROP TABLE IF EXISTS bk_right")
-
-
-# ---------------------------------------------------------------------------
 # date-partitioned bronze + partition pruning (SURVEY X1)
 # ---------------------------------------------------------------------------
 
@@ -538,53 +509,6 @@ def test_approx_quantile_buckets_near_equal_sizes(spark):
     for b in range(1, 10):
         assert stats[b][1] <= stats[b + 1][0], (b, stats)
     out.unpersist()
-
-
-# ---------------------------------------------------------------------------
-# data-contract expectations (one-pass declarative checks)
-# ---------------------------------------------------------------------------
-
-
-def test_expectations_single_pass_counts(spark):
-    from bigdatasmallprice_spark.operators.expectations import (
-        accepted_values,
-        check,
-        in_range,
-        matches,
-        not_null,
-        unique,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (1, "a", 10.0, "x@y.io"),
-            (2, "a", -5.0, "bad"),
-            (2, "a", 250.0, None),
-            (3, None, 50.0, "z@q.io"),
-            (4, "zz", None, "w@q.io"),
-        ],
-        "k long, cat string, v double, email string",
-    )
-    rules = [
-        not_null("cat"),
-        not_null("v"),
-        in_range("v", 0.0, 100.0),
-        accepted_values("cat", ["a", "b"]),
-        matches("email", r"^[^@]+@[^@]+$"),
-        unique("k", "cat"),
-    ]
-    got = {r["rule"]: (r["violations"], r["n_rows"]) for r in check(df, rules).collect()}
-    assert got["not_null(cat)"] == (1, 5)
-    assert got["not_null(v)"] == (1, 5)
-    assert got["in_range(v,0.0,100.0)"] == (2, 5)   # -5 and 250; NULL not counted
-    assert got["accepted_values(cat)"] == (1, 5)    # 'zz'
-    assert got["matches(email)"] == (1, 5)          # 'bad'; NULL not counted
-    assert got["unique(k,cat)"] == (1, 5)           # (2,'a') appears twice
-
-    # all row rules ran in ONE aggregation job: the plan has a single scan
-    row_only = [r for r in rules if r.violation is not None]
-    plan = check(df, row_only)._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("LogicalRDD") == 1, plan
 
 
 def test_training_features_stitched_identical_sf01(spark):
@@ -826,171 +750,6 @@ def test_bpe_encode_distributed_matches_local(spark):
         got = out[r.doc_id]
         assert got.n_bpe_tokens == want
         assert got.n_words <= got.n_bpe_tokens <= got.n_chars
-
-
-# ── heavy hitters sketch (operators/sketches.py) ──────────────────────────
-
-
-def test_mg_update_guarantee_local():
-    from bigdatasmallprice_spark.operators.sketches import mg_summarize
-
-    stream = [f"t{k}" for k in range(1, 41) for _ in range(400 // k)]
-    import random
-
-    random.Random(3).shuffle(stream)
-    counters, err = mg_summarize(iter(stream), m=16)
-    assert len(counters) <= 16
-    from collections import Counter
-
-    true = Counter(stream)
-    for t, c in counters.items():
-        assert true[t] - err <= c <= true[t], t
-    for t, n in true.items():
-        if n > err:
-            assert t in counters, (t, n, err)
-
-
-def test_heavy_hitters_distributed_bounds_and_containment(spark):
-    """Zipf-shaped corpus: the sketch keeps every guaranteed-heavy term
-    with sound bounds, while shuffling <= P*(m+1) rows, and the top
-    terms by estimate match the exact twin."""
-    from bigdatasmallprice_spark.operators.sketches import (
-        exact_term_counts,
-        heavy_hitters,
-    )
-
-    rows = [(f"t{k}",) for k in range(1, 121) for _ in range(1200 // k)]
-    df = spark.createDataFrame(rows, ["term"]).repartition(8)
-    sk = {r.term: r for r in heavy_hitters(df, "term", m=48).collect()}
-    true = {r.term: r.n for r in exact_term_counts(df, "term").collect()}
-    assert sk, "empty sketch"
-    err = next(iter(sk.values())).err_bound
-    assert err >= 0
-    for t, r in sk.items():
-        assert true[t] - err <= r.est <= true[t], (t, r.est, true[t], err)
-    for t, n in true.items():
-        if n > err:
-            assert t in sk, (t, n, err)
-    # the unambiguous top terms (margin > err) must rank first by est
-    top_true = sorted(true, key=lambda t: -true[t])[:5]
-    top_est = sorted(sk, key=lambda t: -sk[t].est)[:5]
-    assert set(top_true) == set(top_est), (top_true, top_est, err)
-
-
-def test_heavy_hitters_shuffle_is_sketch_sized(spark):
-    """The plan's shuffle input is the summary frame, not the corpus:
-    the pre-shuffle stage is the MapInPandas summarizer."""
-    from bigdatasmallprice_spark.operators.sketches import heavy_hitters
-
-    df = spark.range(0, 10000).selectExpr("CAST(id % 97 AS STRING) AS term")
-    plan = heavy_hitters(df, "term", m=32)._jdf.queryExecution().executedPlan().toString()
-    before_shuffle = plan.split("Exchange hashpartitioning")[-1]
-    assert "MapInPandas" in before_shuffle, plan
-
-
-def test_heavy_hitters_null_terms_excluded(spark):
-    """NULL terms must not conflate with the error-sentinel row."""
-    from bigdatasmallprice_spark.operators.sketches import heavy_hitters
-
-    df = spark.createDataFrame(
-        [("a",)] * 5 + [(None,)] * 50 + [("b",)] * 3, "term string"
-    )
-    got = {r.term: r.est for r in heavy_hitters(df, "term", m=8).collect()}
-    assert got == {"a": 5, "b": 3}
-
-
-# ── PCA fit/project (operators/pca.py) ────────────────────────────────────
-
-
-def test_pca_matches_numpy(spark):
-    """Fit from the distributed covariance pass == numpy PCA on the
-    collected vectors: orthonormal components, sorted explained
-    variance, equal projections, shrinking reconstruction error."""
-    import numpy as np
-
-    from bigdatasmallprice_spark.operators.pca import pca_fit, pca_project
-    from bigdatasmallprice_spark.queries.core import table
-
-    sf = "/root/testdata/sf0.001"
-    emb = table(spark, sf, "embeddings")
-    X = np.array([r.embedding for r in emb.select("embedding").collect()], dtype="float64")
-    # the integer-moment pass quantizes to 1e-6 — mirror it locally
-    Xq = np.round(X * 1e6) / 1e6
-    dim = X.shape[1]
-
-    comps, mean, ev = pca_fit(emb, dim=dim, rank=8)
-    C = np.array(comps)
-    assert C.shape == (8, dim)
-    assert np.allclose(C @ C.T, np.eye(8), atol=1e-8)  # orthonormal
-    assert all(ev[i] >= ev[i + 1] - 1e-12 for i in range(7))  # sorted
-
-    # numpy reference on the quantized data
-    mu = Xq.mean(axis=0)
-    assert np.allclose(mean, mu, atol=1e-9)
-    cov = (Xq - mu).T @ (Xq - mu) / len(Xq)
-    w_np = np.sort(np.linalg.eigvalsh(cov))[::-1][:8]
-    assert np.allclose(ev, w_np, rtol=1e-6, atol=1e-10)
-
-    got = {r.vec_id: np.array(r.scores) for r in pca_project(emb, comps, mean).collect()}
-    ids = [r.vec_id for r in emb.select("vec_id").collect()]
-    want = (Xq - mu) @ C.T
-    for vid, row in zip(ids, want):
-        assert np.allclose(got[vid], row, atol=1e-6), vid
-
-    # reconstruction error shrinks with rank
-    def recon_err(r):
-        Cr = C[:r]
-        Z = (Xq - mu) @ Cr.T
-        return float(np.square((Xq - mu) - Z @ Cr).sum())
-
-    assert recon_err(8) < recon_err(4) < recon_err(1)
-
-
-def test_pca_project_is_jvm_side(spark):
-    """Projection is plan-literal column math: no Python stage, no
-    shuffle — the per-row path stays in codegen at any scale."""
-    from bigdatasmallprice_spark.operators.pca import pca_fit, pca_project
-    from bigdatasmallprice_spark.queries.core import table
-
-    sf = "/root/testdata/sf0.001"
-    emb = table(spark, sf, "embeddings")
-    comps, mean, _ = pca_fit(emb, dim=64, rank=4)
-    out = pca_project(emb, comps, mean)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    assert "MapInPandas" not in plan and "EvalPython" not in plan, plan
-
-
-def test_heavy_hitters_by_group_bounds(spark):
-    """Per-group sketch: bounds and containment hold within each group
-    independently (one group's skew doesn't poison another's bound)."""
-    from collections import Counter
-
-    from bigdatasmallprice_spark.operators.sketches import heavy_hitters_by_group
-
-    rows = (
-        [("en", f"t{k}") for k in range(1, 61) for _ in range(600 // k)]
-        + [("de", f"w{k}") for k in range(1, 31) for _ in range(300 // k)]
-        + [("de", "hot")] * 500
-    )
-    df = spark.createDataFrame(rows, ["lang", "term"]).repartition(8)
-    out = heavy_hitters_by_group(df, "lang", "term", m=32).collect()
-    true = {g: Counter() for g in ("en", "de")}
-    for g, t in rows:
-        true[g][t] += 1
-    by_group: dict = {}
-    for r in out:
-        by_group.setdefault(r.lang, {})[r.term] = r
-    for g, terms in by_group.items():
-        err = next(iter(terms.values())).err_bound
-        for t, r in terms.items():
-            assert true[g][t] - err <= r.est <= true[g][t], (g, t)
-        for t, n in true[g].items():
-            if n > err:
-                assert t in terms, (g, t, n, err)
-    # the de-group hot term is found with a tight estimate
-    hot = by_group["de"]["hot"]
-    assert hot.est > 400
 
 
 def test_audit_slice_guard_refuses_large_inputs(spark):

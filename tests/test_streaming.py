@@ -1,560 +1,18 @@
-"""Streaming rollup tests (T1/T4 semantics).
+"""Streaming tests for the kept incremental-state paths.
 
-Append-mode emission rule: a window emits only once the watermark
-(max event time - lateness) passes its end — the end_offset "don't
-publish the open bucket" behavior. Tests pin that down with a far-future
-sentinel row that closes every real window, and verify the start_offset
-rule by replaying data older than the watermark.
+Crawl ingest streams archives through the batch WARC parse; the
+language-mix gate folds scored counts across deliveries; and the
+versioned state layer (streaming/state.py) keeps every fold
+crash-atomic, replay-safe and pinned to its source, checked here
+through the KN LM and DSIR count folds (streaming/knlm_stream.py,
+streaming/dsir_stream.py), whose SUM merges are not idempotent.
 """
 
 from __future__ import annotations
 
-import datetime as dt
 import os
-import random
 
-import pytest
 from pyspark.sql import functions as F
-
-from bigdatasmallprice_spark.streaming.rollup_stream import hourly_rollup_stream, write_rollup
-
-SCHEMA = "time timestamp, tariff_type string, price_chf_kwh double"
-BASE = dt.datetime(2026, 1, 1)
-SENTINEL = BASE + dt.timedelta(days=30)  # watermark pusher: closes all real windows
-
-
-@pytest.fixture()
-def bronze(spark, tmp_path):
-    rng = random.Random(11)
-    rows = [
-        (BASE + dt.timedelta(minutes=15 * i), tt, round(rng.uniform(0.03, 0.25), 4))
-        for i in range(96 * 2)
-        for tt in ("electricity", "integrated")
-    ]
-    df = spark.createDataFrame(rows, SCHEMA)
-    p = str(tmp_path / "bronze")
-    df.repartition(4).write.parquet(p)
-    spark.createDataFrame([(SENTINEL, "electricity", 0.5)], SCHEMA).write.mode(
-        "append"
-    ).parquet(p)
-    return p, df
-
-
-def _run(spark, src_path, out, ckpt, lateness="2 days"):
-    stream = spark.readStream.schema(SCHEMA).parquet(src_path)
-    q = write_rollup(
-        hourly_rollup_stream(stream, lateness=lateness), out, ckpt, available_now=True
-    ).start()
-    q.awaitTermination(180)
-
-
-def test_stream_rollup_matches_batch(spark, bronze, tmp_path):
-    path, batch_df = bronze
-    out, ckpt = str(tmp_path / "gold"), str(tmp_path / "ckpt")
-    _run(spark, path, out, ckpt)
-
-    got = {
-        (str(r["hour"]), r["tariff_type"]): (
-            round(r["price_chf_kwh_avg"], 9), r["price_chf_kwh_min"],
-            r["price_chf_kwh_max"], r["sample_count"],
-        )
-        for r in spark.read.parquet(out).collect()
-    }
-    expect = {
-        (str(r["hour"]), r["tariff_type"]): (round(r["avg"], 9), r["mn"], r["mx"], r["n"])
-        for r in batch_df.groupBy(F.date_trunc("hour", "time").alias("hour"), "tariff_type")
-        .agg(
-            F.avg("price_chf_kwh").alias("avg"),
-            F.min("price_chf_kwh").alias("mn"),
-            F.max("price_chf_kwh").alias("mx"),
-            F.count("*").alias("n"),
-        )
-        .collect()
-    }
-    # every real window is closed by the sentinel's watermark; the
-    # sentinel's own (still-open) window must NOT have been published
-    assert got == expect
-    assert len(got) == 48 * 2
-
-
-def test_late_data_beyond_watermark_dropped(spark, bronze, tmp_path):
-    path, _ = bronze
-    out, ckpt = str(tmp_path / "gold2"), str(tmp_path / "ckpt2")
-    _run(spark, path, out, ckpt)
-    n_before = spark.read.parquet(out).count()
-
-    # replay a row 30 days older than the committed watermark
-    spark.createDataFrame([(BASE, "electricity", 99.9)], SCHEMA).write.mode(
-        "append"
-    ).parquet(path)
-    _run(spark, path, out, ckpt)
-
-    after = spark.read.parquet(out)
-    assert after.count() == n_before  # closed bucket not reopened
-    assert after.filter(F.col("price_chf_kwh_max") == 99.9).count() == 0
-
-
-# ---------------------------------------------------------------------------
-# stateful sessionization (applyInPandasWithState)
-# ---------------------------------------------------------------------------
-
-EV_SCHEMA = "ts timestamp, user_id long"
-
-
-def _batch_sessions(spark, df, gap_minutes=30):
-    """Reference batch sessionizer (same logic as queries/seqq.py)."""
-    from pyspark.sql import Window
-
-    wu = Window.partitionBy("user_id").orderBy("ts")
-    us = F.unix_micros(F.col("ts"))
-    gap = gap_minutes * 60 * 1_000_000
-    g = df.select("user_id", "ts", (us - F.lag(us).over(wu)).alias("gap_us"))
-    new = F.when(F.col("gap_us").isNull() | (F.col("gap_us") > gap), 1).otherwise(0)
-    s = g.select(
-        "user_id", "ts",
-        F.sum(new).over(wu.rowsBetween(Window.unboundedPreceding, 0)).alias("sess"),
-    )
-    return {
-        (r["user_id"], str(r["st"]), str(r["en"])): r["n"]
-        for r in s.groupBy("user_id", "sess")
-        .agg(F.min("ts").alias("st"), F.max("ts").alias("en"), F.count("*").alias("n"))
-        .collect()
-    }
-
-
-def test_stateful_sessionization_matches_batch(spark, tmp_path):
-    from bigdatasmallprice_spark.streaming.session_stream import (
-        sessionize_stream,
-        write_sessions,
-    )
-
-    rng = random.Random(5)
-    rows = []
-    for uid in (1, 2, 3):
-        t = BASE
-        for _ in range(40):
-            # bursts with occasional >30min gaps
-            step = dt.timedelta(minutes=rng.choice([2, 5, 9, 45, 120]))
-            t = t + step
-            rows.append((t, uid))
-    df = spark.createDataFrame(rows, EV_SCHEMA)
-    src = str(tmp_path / "ev")
-    df.write.parquet(src)
-    # sentinel user 99 far in the future: advances the watermark past
-    # every real session's quiet period
-    spark.createDataFrame([(SENTINEL, 99)], EV_SCHEMA).write.mode("append").parquet(src)
-
-    out, ckpt = str(tmp_path / "sessions"), str(tmp_path / "sckpt")
-
-    def run():
-        stream = spark.readStream.schema(EV_SCHEMA).parquet(src)
-        q = write_sessions(sessionize_stream(stream, 30, "1 hour"), out, ckpt).start()
-        q.awaitTermination(180)
-
-    run()
-    # event-time timeouts fire on the trigger AFTER the watermark
-    # advances; a second availableNow run with one new file delivers it
-    spark.createDataFrame([(SENTINEL + dt.timedelta(days=1), 99)], EV_SCHEMA).write.mode(
-        "append"
-    ).parquet(src)
-    run()
-
-    got = {
-        (r["user_id"], str(r["session_start"]), str(r["session_end"])): r["n_events"]
-        for r in spark.read.parquet(out).filter(F.col("user_id") != 99).collect()
-    }
-    expect = _batch_sessions(spark, df)
-    assert got == expect
-    assert len(got) >= 10  # the gap mix actually produced multiple sessions
-
-
-# ---------------------------------------------------------------------------
-# idempotent streaming ingestion (foreachBatch + keyed dedup-append)
-# ---------------------------------------------------------------------------
-
-
-def test_streaming_ingest_is_idempotent(spark, tmp_path):
-    from bigdatasmallprice_spark.streaming.ingest_stream import ingest_stream
-
-    SRC_SCHEMA = "k long, ts timestamp, v double"
-    src = str(tmp_path / "in")
-    bronze = str(tmp_path / "bronze")
-    ckpt = str(tmp_path / "ickpt")
-
-    def run():
-        stream = spark.readStream.schema(SRC_SCHEMA).parquet(src)
-        q = ingest_stream(stream, bronze, ckpt, keys=["k"], order_by=["ts"]).start()
-        q.awaitTermination(120)
-
-    # batch 1: keys 0..9 (with an in-batch duplicate of key 3)
-    spark.createDataFrame(
-        [(k, BASE + dt.timedelta(minutes=k), float(k)) for k in range(10)]
-        + [(3, BASE + dt.timedelta(minutes=99), 333.0)],
-        SRC_SCHEMA,
-    ).write.parquet(src)
-    run()
-    got = {r["k"]: r["v"] for r in spark.read.parquet(bronze).collect()}
-    assert got == {k: float(k) for k in range(10)}  # first writer won for key 3
-
-    # batch 2: re-delivers keys 5..9 with CHANGED values + new keys 10..12
-    spark.createDataFrame(
-        [(k, BASE + dt.timedelta(minutes=200 + k), 1000.0 + k) for k in range(5, 13)],
-        SRC_SCHEMA,
-    ).write.mode("append").parquet(src)
-    run()
-    got = {r["k"]: r["v"] for r in spark.read.parquet(bronze).collect()}
-    expect = {k: float(k) for k in range(10)} | {k: 1000.0 + k for k in (10, 11, 12)}
-    assert got == expect  # re-delivered keys kept their original rows
-    assert spark.read.parquet(bronze).count() == 13  # no duplicates anywhere
-
-
-# ---------------------------------------------------------------------------
-# stream-stream interval join (watermarked event-time attribution)
-# ---------------------------------------------------------------------------
-
-
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """Clicks x purchases within a 1-hour look-back, as streams, must
-    produce exactly the batch join's matches once the watermark closes
-    all real event times (sentinel rows on both sides)."""
-    from bigdatasmallprice_spark.streaming.join_stream import (
-        interval_join_batch,
-        interval_join_stream,
-    )
-
-    L_SCHEMA = "user_id long, l_ts timestamp, click_id long"
-    R_SCHEMA = "r_user_id long, r_ts timestamp, purchase_id long"
-    rng = random.Random(7)
-    clicks, purchases = [], []
-    for uid in (1, 2, 3, 4):
-        t = BASE
-        for i in range(30):
-            t += dt.timedelta(minutes=rng.choice([3, 10, 25, 90]))
-            clicks.append((uid, t, uid * 1000 + i))
-            if rng.random() < 0.4:
-                purchases.append(
-                    (uid, t + dt.timedelta(minutes=rng.choice([1, 20, 70])), uid * 5000 + i)
-                )
-    ldf = spark.createDataFrame(clicks, L_SCHEMA)
-    rdf = spark.createDataFrame(purchases, R_SCHEMA)
-    lsrc, rsrc = str(tmp_path / "clicks"), str(tmp_path / "purch")
-    ldf.write.parquet(lsrc)
-    rdf.write.parquet(rsrc)
-    # sentinels push both watermarks past every real event
-    spark.createDataFrame([(99, SENTINEL, -1)], L_SCHEMA).write.mode("append").parquet(lsrc)
-    spark.createDataFrame([(99, SENTINEL, -1)], R_SCHEMA).write.mode("append").parquet(rsrc)
-
-    out, ckpt = str(tmp_path / "joined"), str(tmp_path / "jckpt")
-    ls = spark.readStream.schema(L_SCHEMA).parquet(lsrc)
-    rs = spark.readStream.schema(R_SCHEMA).parquet(rsrc)
-    q = (
-        interval_join_stream(ls, rs, max_delay="1 hour", lateness="2 hours")
-        .select("click_id", "purchase_id")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    got = {
-        (r["click_id"], r["purchase_id"])
-        for r in spark.read.parquet(out).filter(F.col("click_id") >= 0).collect()
-    }
-    expect = {
-        (r["click_id"], r["purchase_id"])
-        for r in interval_join_batch(ldf, rdf, max_delay="1 hour")
-        .select("click_id", "purchase_id")
-        .collect()
-    }
-    assert got == expect
-    assert len(expect) > 20  # the interval actually matched many pairs
-
-
-def test_streaming_exact_dedup_matches_batch(spark, tmp_path):
-    """Watermarked dropDuplicates on content hash: re-delivered and
-    cross-file duplicate texts collapse to the first arrival; distinct
-    texts all survive — same survivors as the batch groupBy pass."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from bigdatasmallprice_spark.streaming.dedup_stream import dedup_stream
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-
-    rows1 = [
-        (1, "2024-01-01 00:00:00", "alpha beta gamma"),
-        (2, "2024-01-01 00:05:00", "delta epsilon"),
-        (3, "2024-01-01 00:10:00", "alpha beta gamma"),  # dup of 1, same file
-    ]
-    rows2 = [
-        (4, "2024-01-01 00:20:00", "delta epsilon"),  # dup of 2, later file
-        (5, "2024-01-01 00:25:00", "zeta eta theta"),
-    ]
-    schema = "doc_id long, ts_s string, text string"
-    for i, rows in enumerate([rows1, rows2]):
-        spark.createDataFrame(rows, schema).select(
-            "doc_id", F.to_timestamp("ts_s").alias("ts"), "text"
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema("doc_id long, ts timestamp, text string").parquet(
-        src
-    )
-    q = (
-        dedup_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(out)
-    texts = [r.text for r in got.collect()]
-    assert sorted(set(texts)) == ["alpha beta gamma", "delta epsilon", "zeta eta theta"]
-    assert len(texts) == 3, "duplicates must collapse to one survivor each"
-    # batch pass agrees on the survivor count
-    batch = spark.read.parquet(src)
-    assert batch.select(F.md5("text")).distinct().count() == 3
-
-
-# ---------------------------------------------------------------------------
-# streaming incremental near-dup (streaming/neardup_stream.py)
-# ---------------------------------------------------------------------------
-
-
-def test_streaming_neardup_matches_sequential_batch(spark, tmp_path):
-    """Two micro-batches through the foreachBatch near-dup sink must
-    produce the same verdicts as running the batch operators
-    sequentially (batch1 vs corpus; batch2 vs corpus+batch1 survivors),
-    and the state stores must grow by exactly the survivors."""
-    from pyspark.sql import functions as F
-
-    from bigdatasmallprice_spark.operators.dedup import (
-        jaccard,
-        lsh_bands,
-        lsh_candidates_between,
-        with_minhash,
-        with_shingles,
-    )
-    from bigdatasmallprice_spark.queries.core import table
-    from bigdatasmallprice_spark.streaming.neardup_stream import neardup_stream
-
-    docs = table(spark, "/root/testdata/sf0.001", "documents").select("doc_id", "text")
-    corpus = docs.filter(F.pmod("doc_id", F.lit(5)) != 0)
-    b1 = docs.filter(F.pmod("doc_id", F.lit(10)) == 0)
-    b2 = docs.filter((F.pmod("doc_id", F.lit(5)) == 0) & (F.pmod("doc_id", F.lit(10)) != 0))
-
-    shingle_store = str(tmp_path / "shingles")
-    band_store = str(tmp_path / "bands")
-    verdicts = str(tmp_path / "verdicts")
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-
-    s_c = with_shingles(corpus).select("doc_id", "shingles")
-    s_c.write.parquet(shingle_store)
-    lsh_bands(with_minhash(s_c)).write.parquet(band_store)
-
-    # sequential-batch reference with the raw operators
-    def ref_verdict(batch_df, corpus_s):
-        s_b = with_shingles(batch_df).select("doc_id", "shingles")
-        cand = lsh_candidates_between(
-            lsh_bands(with_minhash(s_b)), lsh_bands(with_minhash(corpus_s))
-        )
-        sa = s_b.select(F.col("doc_id").alias("new_id"), F.col("shingles").alias("sh_a"))
-        sb = corpus_s.select(F.col("doc_id").alias("corpus_id"), F.col("shingles").alias("sh_b"))
-        ver = cand.join(sa, "new_id").join(sb, "corpus_id").select(
-            "new_id", F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6).alias("jac")
-        )
-        best = ver.groupBy("new_id").agg(
-            F.max("jac").alias("bj"), F.count(F.lit(1)).alias("nc")
-        )
-        return {
-            r.doc_id: (r.nc, r.bj, r.dup)
-            for r in s_b.select("doc_id")
-            .join(best, s_b["doc_id"] == best["new_id"], "left")
-            .select(
-                "doc_id",
-                F.coalesce("nc", F.lit(0)).cast("long").alias("nc"),
-                F.coalesce("bj", F.lit(0.0)).alias("bj"),
-                (F.coalesce("bj", F.lit(0.0)) >= 0.5).alias("dup"),
-            )
-            .collect()
-        }
-
-    want = ref_verdict(b1, s_c)
-    surv1 = b1.join(
-        spark.createDataFrame(
-            [(k,) for k, v in want.items() if not v[2]], "doc_id long"
-        ),
-        "doc_id",
-    )
-    s_c2 = s_c.unionByName(with_shingles(surv1).select("doc_id", "shingles"))
-    want.update(ref_verdict(b2, s_c2))
-
-    # stream the two batches through the sink in order
-    b1.select("doc_id", "text").coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = neardup_stream(stream, shingle_store, band_store, verdicts, ckpt)
-    q.processAllAvailable()
-    b2.select("doc_id", "text").coalesce(1).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-
-    got = {
-        r.doc_id: (r.n_candidates, r.best_jaccard, r.is_dup)
-        for r in spark.read.parquet(verdicts).collect()
-    }
-    assert got == want
-    n_surv = sum(1 for v in want.values() if not v[2])
-    assert spark.read.parquet(shingle_store).count() == corpus.count() + n_surv
-
-
-# ---------------------------------------------------------------------------
-# streaming curation head: scrub + quality gate on ingest ≡ batch
-# ---------------------------------------------------------------------------
-
-
-def test_streaming_curation_matches_batch(spark, tmp_path):
-    from bigdatasmallprice_spark.streaming.curation_stream import (
-        curate_columns,
-        curation_stream,
-    )
-
-    SRC_SCHEMA = "doc_id long, text string, source string"
-    src = str(tmp_path / "docs_in")
-    kept = str(tmp_path / "kept")
-    rejected = str(tmp_path / "rejected")
-    ckpt = str(tmp_path / "cckpt")
-
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .selectExpr(
-            "doc_id",
-            # splice synthetic PII into some docs so the scrub has work
-            "CASE WHEN doc_id % 4 = 0 THEN text || ' mail u' || doc_id || '@example.com' ELSE text END AS text",
-            "source",
-        )
-    )
-    # two arrival waves
-    docs.filter("doc_id % 2 = 0").write.parquet(src)
-    q = curation_stream(
-        spark.readStream.schema(SRC_SCHEMA).parquet(src), kept, rejected, ckpt
-    ).start()
-    q.awaitTermination(120)
-    docs.filter("doc_id % 2 = 1").write.mode("append").parquet(src)
-    q = curation_stream(
-        spark.readStream.schema(SRC_SCHEMA).parquet(src), kept, rejected, ckpt
-    ).start()
-    q.awaitTermination(120)
-
-    batch = curate_columns(docs).persist()
-    try:
-        want_kept = {
-            (r.doc_id, r.scrubbed, r.n_pii, r.quality)
-            for r in batch.filter("reject_reason IS NULL").collect()
-        }
-        got_kept = {
-            (r.doc_id, r.scrubbed, r.n_pii, r.quality)
-            for r in spark.read.parquet(kept).collect()
-        }
-        assert got_kept == want_kept and len(got_kept) > 0
-
-        want_rej = {
-            (r.doc_id, r.reject_reason)
-            for r in batch.filter("reject_reason IS NOT NULL").collect()
-        }
-        got_rej = {
-            (r.doc_id, r.reject_reason)
-            for r in spark.read.parquet(rejected).collect()
-        }
-        assert got_rej == want_rej
-        # every doc landed exactly once, in exactly one sink
-        assert len(got_kept) + len(got_rej) == docs.count()
-        # scrubbed survivors carry no residual PII matches
-        n_res = (
-            spark.read.parquet(kept)
-            .selectExpr(
-                "regexp_count(scrubbed, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\\\.[A-Za-z]{2,}') AS n"
-            )
-            .agg({"n": "sum"})
-            .collect()[0][0]
-        )
-        assert n_res == 0
-    finally:
-        batch.unpersist()
-
-
-# ---------------------------------------------------------------------------
-# incremental heavy-hitters sketch (streaming/hh_stream.py)
-# ---------------------------------------------------------------------------
-
-
-def test_streaming_heavy_hitters_guarantee_across_batches(spark, tmp_path):
-    """Two availableNow runs (second delivers a new file) fold into the
-    persisted sketch; the final summary satisfies the mergeable-MG
-    guarantee against exact counts over ALL data, per shard."""
-    from collections import Counter
-
-    from bigdatasmallprice_spark.streaming.hh_stream import (
-        heavy_hitters_stream,
-        read_heavy_hitters,
-    )
-
-    rng = random.Random(11)
-    chunk1 = [f"t{k}" for k in range(1, 81) for _ in range(800 // k)]
-    chunk2 = [f"t{k}" for k in range(1, 81) for _ in range(400 // k)] + [
-        f"new{k}" for k in range(1, 11) for _ in range(60)
-    ]
-    rng.shuffle(chunk1)
-    rng.shuffle(chunk2)
-
-    src = str(tmp_path / "terms")
-    summary, ckpt = str(tmp_path / "hh"), str(tmp_path / "hhckpt")
-    spark.createDataFrame([(t,) for t in chunk1], "term string").write.parquet(src)
-
-    def run():
-        stream = spark.readStream.schema("term string").parquet(src)
-        q = heavy_hitters_stream(spark, stream, summary, ckpt, m=32, n_shards=4).start()
-        q.awaitTermination(120)
-
-    run()
-    spark.createDataFrame([(t,) for t in chunk2], "term string").write.mode(
-        "append"
-    ).parquet(src)
-    run()
-
-    got = {r.term: r for r in read_heavy_hitters(spark, summary).collect()}
-    true = Counter(chunk1 + chunk2)
-    assert got, "empty sketch"
-    for t, r in got.items():
-        assert true[t] - r.err_bound <= r.est <= true[t], (t, r.est, true[t], r.err_bound)
-    # containment per shard: anything bigger than its shard's bound is kept
-    err_by_term = {t: r.err_bound for t, r in got.items()}
-    max_err = max(r.err_bound for r in got.values())
-    for t, n in true.items():
-        if n > max_err:
-            assert t in got, (t, n, max_err)
-    # the new-in-chunk2 heavy terms made it in
-    assert sum(1 for t in got if t.startswith("new")) >= 1
-    # state stayed sketch-sized: <= n_shards * (m terms + err row)
-    from bigdatasmallprice_spark.streaming.state import resolve_state_dir
-
-    raw = spark.read.parquet(resolve_state_dir(summary))
-    assert raw.count() <= 4 * 33
-    # resuming with a different shard count must refuse, not reshard
-    from bigdatasmallprice_spark.streaming.hh_stream import update_summary
-
-    more = spark.createDataFrame([("t1",)], "term string")
-    with pytest.raises(ValueError, match="different parameters"):
-        update_summary(spark, summary, more, "term", m=32, n_shards=8, batch_id=99)
-
 
 # ---------------------------------------------------------------------------
 # streaming crawl ingest: binaryFile source -> WARC parse (sources/warc.py)
@@ -610,106 +68,23 @@ def test_streaming_warc_ingest_matches_batch(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# incremental covariance moments (streaming/cov_stream.py)
+# versioned state (streaming/state.py) through the KN LM and DSIR count folds
 # ---------------------------------------------------------------------------
 
 
-def test_streaming_covariance_equals_batch_exactly(spark, tmp_path):
-    """Integer moments merge associatively: the streamed state over two
-    availableNow runs is BIT-IDENTICAL to the batch pass on all data."""
-    from bigdatasmallprice_spark.operators.similarity import (
-        covariance_moments_vectorized,
-    )
-    from bigdatasmallprice_spark.streaming.cov_stream import (
-        covariance_stream,
-        read_moments,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    half1 = emb.filter(F.col("vec_id") % 2 == 0)
-    half2 = emb.filter(F.col("vec_id") % 2 == 1)
-
-    src = str(tmp_path / "embsrc")
-    half1.write.parquet(src)
-    summary, ckpt = str(tmp_path / "cov"), str(tmp_path / "covckpt")
-
-    schema = emb.schema
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = covariance_stream(spark, stream, summary, ckpt).start()
-        q.awaitTermination(120)
-
-    run()
-    half2.write.mode("append").parquet(src)
-    run()
-
-    got = sorted(map(tuple, read_moments(spark, summary).collect()))
-    want = sorted(
-        map(
-            tuple,
-            covariance_moments_vectorized(emb)
-            .groupBy("i", "j")
-            .agg(F.sum("val").cast("long").alias("val"))
-            .collect(),
-        )
-    )
-    assert got == want
-    # and the fitted PCA from streamed state matches the batch fit
-    import numpy as np
-
-    from bigdatasmallprice_spark.operators.pca import pca_fit
-
-    comps_b, mean_b, ev_b = pca_fit(emb, dim=64, rank=4)
-    # rebuild fit inputs from the streamed state via the same reducer
-    n = sx = None
-    dim = 64
-    sums = np.zeros(dim)
-    gram = np.zeros((dim, dim))
-    for i, j, val in got:
-        if i == -1 and j == -1:
-            n = float(val)
-        elif j == -1:
-            sums[i] = float(val)
-        else:
-            gram[i][j] = gram[j][i] = float(val)
-    mean_s = sums / n / 1e6
-    cov_s = gram / n / 1e12 - np.outer(mean_s, mean_s)
-    w = np.sort(np.linalg.eigvalsh(cov_s))[::-1][:4]
-    assert np.allclose(mean_s, mean_b, atol=1e-12)
-    assert np.allclose(w, ev_b, rtol=1e-9, atol=1e-12)
+def _bigram_docs(spark, n_ab, n_bc):
+    rows = [(i, "a b") for i in range(n_ab)] + [
+        (n_ab + i, "b c") for i in range(n_bc)
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_incremental_folds_skip_replayed_batches(spark, tmp_path):
-    """foreachBatch is at-least-once: re-delivering the same batch_id
-    (crash between state write and checkpoint commit) must not
-    double-count in either non-idempotent fold."""
-    from bigdatasmallprice_spark.streaming.cov_stream import (
-        read_moments,
-        update_moments,
-    )
-    from bigdatasmallprice_spark.streaming.hh_stream import (
-        read_heavy_hitters,
-        update_summary,
-    )
+def _bigram_counts(spark, state):
+    from bigdatasmallprice_spark.streaming.knlm_stream import read_kn_model
 
-    terms = spark.createDataFrame([("a",)] * 10 + [("b",)] * 3, "term string")
-    hh = str(tmp_path / "hh")
-    update_summary(spark, hh, terms, "term", m=8, n_shards=2, batch_id=0)
-    update_summary(spark, hh, terms, "term", m=8, n_shards=2, batch_id=0)  # replay
-    got = {r.term: r.est for r in read_heavy_hitters(spark, hh).collect()}
-    assert got == {"a": 10, "b": 3}
-    # a NEW batch id still applies
-    update_summary(spark, hh, terms, "term", m=8, n_shards=2, batch_id=1)
-    got = {r.term: r.est for r in read_heavy_hitters(spark, hh).collect()}
-    assert got == {"a": 20, "b": 6}
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(10)
-    cov = str(tmp_path / "cov")
-    update_moments(spark, cov, emb, batch_id=0)
-    once = sorted(map(tuple, read_moments(spark, cov).collect()))
-    update_moments(spark, cov, emb, batch_id=0)  # replay
-    assert sorted(map(tuple, read_moments(spark, cov).collect())) == once
+    return {
+        (r.w1, r.w2): r.c12 for r in read_kn_model(spark, state)["bc"].collect()
+    }
 
 
 def test_versioned_state_crash_atomicity(spark, tmp_path):
@@ -719,44 +94,38 @@ def test_versioned_state_crash_atomicity(spark, tmp_path):
     torn write is simulated by dumping garbage into the next version
     directory without flipping the manifest — readers and a retried
     fold must both still see the committed state only."""
-    from bigdatasmallprice_spark.streaming.hh_stream import (
-        read_heavy_hitters,
-        update_summary,
-    )
+    from bigdatasmallprice_spark.streaming.knlm_stream import update_kn_counts
     from bigdatasmallprice_spark.streaming.state import (
         next_state_version,
         read_state_manifest,
         state_version_dir,
     )
 
-    terms = spark.createDataFrame([("a",)] * 5 + [("b",)] * 2, "term string")
-    hh = str(tmp_path / "hh")
-    update_summary(spark, hh, terms, "term", m=8, n_shards=2, batch_id=0)
-    committed = read_state_manifest(hh)
+    docs = _bigram_docs(spark, 5, 2)
+    kn = str(tmp_path / "kn")
+    update_kn_counts(spark, kn, docs, batch_id=0)
+    committed = read_state_manifest(kn)
 
     # simulate the torn write of the NEXT version (crash before flip)
-    torn = state_version_dir(hh, next_state_version(hh))
+    torn = state_version_dir(kn, next_state_version(kn))
     os.makedirs(torn, exist_ok=True)
     with open(os.path.join(torn, "part-00000.parquet"), "wb") as fh:
         fh.write(b"\x00not a parquet file")
 
     # committed state is untouched and fully readable
-    assert read_state_manifest(hh) == committed
-    got = {r.term: r.est for r in read_heavy_hitters(spark, hh).collect()}
-    assert got == {"a": 5, "b": 2}
+    assert read_state_manifest(kn) == committed
+    assert _bigram_counts(spark, kn) == {("a", "b"): 5, ("b", "c"): 2}
 
     # the retried batch overwrites the torn directory and commits
-    update_summary(spark, hh, terms, "term", m=8, n_shards=2, batch_id=1)
-    got = {r.term: r.est for r in read_heavy_hitters(spark, hh).collect()}
-    assert got == {"a": 10, "b": 4}
+    update_kn_counts(spark, kn, docs, batch_id=1)
+    assert _bigram_counts(spark, kn) == {("a", "b"): 10, ("b", "c"): 4}
     # the immediately-previous version survives one flip (readers that
     # resolved it pre-flip keep a grace window) ...
     assert os.path.isdir(committed["state_dir"])
     # ... and is garbage-collected after the NEXT flip
-    update_summary(spark, hh, terms, "term", m=8, n_shards=2, batch_id=2)
+    update_kn_counts(spark, kn, docs, batch_id=2)
     assert not os.path.isdir(committed["state_dir"])
-    got = {r.term: r.est for r in read_heavy_hitters(spark, hh).collect()}
-    assert got == {"a": 15, "b": 6}
+    assert _bigram_counts(spark, kn) == {("a", "b"): 15, ("b", "c"): 6}
 
 
 def test_versioned_fold_honors_legacy_applied_marker(spark, tmp_path):
@@ -764,956 +133,107 @@ def test_versioned_fold_honors_legacy_applied_marker(spark, tmp_path):
     layout's applied-marker watermark must still suppress a replayed
     batch, or the retry double-folds on top of state that already
     contains it."""
-    from bigdatasmallprice_spark.streaming.hh_stream import (
-        SUMMARY_SCHEMA,
-        read_heavy_hitters,
-        update_summary,
+    from bigdatasmallprice_spark.streaming.knlm_stream import (
+        KN_STATE_SCHEMA,
+        update_kn_counts,
     )
     from bigdatasmallprice_spark.streaming.state import mark_applied
 
-    hh = str(tmp_path / "hh")
+    kn = str(tmp_path / "kn")
     # legacy layout: state parquet at the path itself + old marker
     spark.createDataFrame(
-        [(0, "a", 5), (0, None, 0), (1, "b", 2), (1, None, 0)], SUMMARY_SCHEMA
-    ).coalesce(1).write.parquet(hh)
-    mark_applied(hh, 7)
+        [("a", "b", 5), ("b", "c", 2)], KN_STATE_SCHEMA
+    ).coalesce(1).write.parquet(kn)
+    mark_applied(kn, 7)
 
-    terms = spark.createDataFrame([("a",)] * 3, "term string")
+    docs = _bigram_docs(spark, 3, 0)
     # replay of batch 7 (crash between old-release state write and
     # checkpoint commit, retried after the upgrade): must be a no-op
-    update_summary(spark, hh, terms, "term", m=8, n_shards=2, batch_id=7)
-    got = {r.term: r.est for r in read_heavy_hitters(spark, hh).collect()}
-    assert got == {"a": 5, "b": 2}
+    update_kn_counts(spark, kn, docs, batch_id=7)
+    assert _bigram_counts(spark, kn) == {("a", "b"): 5, ("b", "c"): 2}
     # the next batch id still applies, folding onto the legacy state
-    update_summary(spark, hh, terms, "term", m=8, n_shards=2, batch_id=8)
-    got = {r.term: r.est for r in read_heavy_hitters(spark, hh).collect()}
-    assert got == {"a": 8, "b": 2}
+    update_kn_counts(spark, kn, docs, batch_id=8)
+    assert _bigram_counts(spark, kn) == {("a", "b"): 8, ("b", "c"): 2}
 
 
-def test_streaming_bloom_equals_batch_and_never_misses(spark, tmp_path):
-    """Two availableNow runs OR their batches into the persisted bloom
-    bitmap; the final bitmap is BIT-IDENTICAL to the batch operator run
-    over all data at once (OR is order/partitioning-independent), and
-    membership has zero false negatives across both deliveries. A
-    mismatched (m, k) resume must raise."""
+def _dsir_counts(spark, state):
+    from bigdatasmallprice_spark.streaming.dsir_stream import DSIR_STATE_SCHEMA
+    from bigdatasmallprice_spark.streaming.state import resolve_state_dir
+
+    rows = spark.read.schema(DSIR_STATE_SCHEMA).parquet(
+        resolve_state_dir(state)
+    )
+    return sorted(map(tuple, rows.collect()))
+
+
+def test_incremental_folds_skip_replayed_batches(spark, tmp_path):
+    """foreachBatch is at-least-once: re-delivering the same batch_id
+    (crash between state write and checkpoint commit) must not
+    double-count in either non-idempotent fold — the KN bigram counts
+    and the DSIR bucket counts."""
+    from bigdatasmallprice_spark.streaming.dsir_stream import update_dsir_counts
+    from bigdatasmallprice_spark.streaming.knlm_stream import update_kn_counts
+
+    docs = _bigram_docs(spark, 10, 3)
+    kn = str(tmp_path / "kn")
+    update_kn_counts(spark, kn, docs, batch_id=0)
+    update_kn_counts(spark, kn, docs, batch_id=0)  # replay
+    assert _bigram_counts(spark, kn) == {("a", "b"): 10, ("b", "c"): 3}
+    # a NEW batch id still applies
+    update_kn_counts(spark, kn, docs, batch_id=1)
+    assert _bigram_counts(spark, kn) == {("a", "b"): 20, ("b", "c"): 6}
+
+    labelled = spark.createDataFrame(
+        [(0, "a b a", "en"), (1, "b c", "de"), (2, "c c a", "en")],
+        "doc_id long, text string, lang string",
+    )
+    ds = str(tmp_path / "dsir")
+    update_dsir_counts(spark, ds, labelled, "lang = 'en'", batch_id=0)
+    once = _dsir_counts(spark, ds)
+    assert sum(cq for _, cq, _ in once) == 8
+    assert sum(ct for _, _, ct in once) == 6
+    update_dsir_counts(spark, ds, labelled, "lang = 'en'", batch_id=0)  # replay
+    assert _dsir_counts(spark, ds) == once
+    update_dsir_counts(spark, ds, labelled, "lang = 'en'", batch_id=1)
+    assert _dsir_counts(spark, ds) == [(b, 2 * q, 2 * t) for b, q, t in once]
+
+
+def test_source_column_pins_across_sketch_streams(spark, tmp_path):
+    """The source pin swept across the kept count folds: bigram counts
+    tokenized from one column, and DSIR hashed-bucket counts split by
+    one target predicate, must never fold with another's. A refused
+    fold leaves the committed state exactly as it was."""
     import pytest as _pytest
 
-    from bigdatasmallprice_spark.operators.dedup import bloom_bits, bloom_membership
-    from bigdatasmallprice_spark.streaming.bloom_stream import (
-        bloom_stream,
-        read_bloom_bits,
+    from bigdatasmallprice_spark.streaming.dsir_stream import update_dsir_counts
+    from bigdatasmallprice_spark.streaming.knlm_stream import update_kn_counts
+    from bigdatasmallprice_spark.streaming.state import read_state_manifest
+
+    docs = spark.createDataFrame(
+        [(0, "a b", "x y", "en")],
+        "doc_id long, text string, alt string, lang string",
     )
-    from pyspark.sql import functions as F
+    kn = str(tmp_path / "kn")
+    update_kn_counts(spark, kn, docs, batch_id=0)
+    committed = read_state_manifest(kn)
+    with _pytest.raises(ValueError, match="different parameters"):
+        update_kn_counts(spark, kn, docs, text_col="alt", batch_id=1)
+    assert read_state_manifest(kn) == committed
+    assert _bigram_counts(spark, kn) == {("a", "b"): 1}
 
-    m, k = 1 << 12, 4
-    chunk1 = [(f"alpha-{i}",) for i in range(200)]
-    chunk2 = [(f"beta-{i}",) for i in range(150)]
-    src = str(tmp_path / "texts")
-    state, ckpt = str(tmp_path / "bloom"), str(tmp_path / "bloomckpt")
-    spark.createDataFrame(chunk1, "text string").write.parquet(src)
-
-    def run():
-        stream = spark.readStream.schema("text string").parquet(src)
-        q = bloom_stream(spark, stream, state, ckpt, m=m, k=k).start()
-        q.awaitTermination(120)
-
-    run()
-    spark.createDataFrame(chunk2, "text string").write.mode("append").parquet(src)
-    run()
-
-    streamed = {
-        r.word_idx: r.bits for r in read_bloom_bits(spark, state).collect()
-    }
-    batch = {
-        r.word_idx: r.bits
-        for r in bloom_bits(
-            spark.createDataFrame(chunk1 + chunk2, "text string"),
-            text_col="text",
-            m=m,
-            k=k,
-        ).collect()
-    }
-    assert streamed == batch
-
-    probe = spark.createDataFrame(
-        [(i, t) for i, (t,) in enumerate(chunk1 + chunk2)], "id long, t string"
-    )
-    got = bloom_membership(
-        probe, read_bloom_bits(spark, state), ["id"], text_col="t", m=m, k=k
-    )
-    assert got.filter(~F.col("bloom_hit")).count() == 0
-
-    # geometry pinning: resuming with a different m must raise
-    from bigdatasmallprice_spark.streaming.bloom_stream import update_bloom
-
-    with _pytest.raises(ValueError):
-        update_bloom(
-            spark,
-            state,
-            spark.createDataFrame([("x",)], "text string"),
-            m=1 << 13,
-            k=k,
-            batch_id=99,
-        )
-
-
-def test_streaming_funnel_equals_batch(spark, tmp_path):
-    """Two availableNow deliveries split at the median event time fold
-    into per-user stage-time state; the rolled-up funnel counts equal
-    the batch event_funnel query over the same events — including
-    users whose events are all outside the funnel stages."""
-    from bigdatasmallprice_spark.catalog import load_table
-    from bigdatasmallprice_spark.registry import all_queries
-    from bigdatasmallprice_spark.streaming.funnel_stream import (
-        funnel_stream,
-        read_funnel_counts,
-    )
-    from pyspark.sql import functions as F
-
-    sf = "/root/testdata/sf0.001"
-    ev = load_table(spark, sf, "events").select("user_id", "event_type", "ts")
-    mid = ev.agg(F.expr("percentile(unix_micros(ts), 0.5)")).collect()[0][0]
-    c1 = ev.filter(F.unix_micros("ts") <= F.lit(int(mid)))
-    c2 = ev.filter(F.unix_micros("ts") > F.lit(int(mid)))
-
-    src = str(tmp_path / "ev")
-    state, ckpt = str(tmp_path / "funnel"), str(tmp_path / "funnelckpt")
-    c1.write.parquet(src)
-
-    def run():
-        stream = spark.readStream.schema(
-            "user_id long, event_type string, ts timestamp"
-        ).parquet(src)
-        q = funnel_stream(spark, stream, state, ckpt).start()
-        q.awaitTermination(120)
-
-    run()
-    c2.write.mode("append").parquet(src)
-    run()
-
-    got = read_funnel_counts(spark, state).collect()[0].asDict()
-    want = all_queries()["event_funnel"].fn(spark, sf).collect()[0].asDict()
-    assert got == want, (got, want)
-
-
-def test_streaming_scd2_equals_rebuild(spark, tmp_path):
-    """Three availableNow deliveries of time-partitioned dimension
-    changes fold into the SCD2 history; the final state equals one
-    batch reconstruction over the full change log."""
-    from bigdatasmallprice_spark.operators.scd2 import scd2_reconstruct
-    from bigdatasmallprice_spark.streaming.scd2_stream import (
-        read_scd2_history,
-        scd2_stream,
-    )
-
-    rows = [
-        (1, "A", 1, 1), (1, "A", 2, 2), (1, "B", 3, 3), (1, "C", 7, 4),
-        (2, "X", 1, 5), (2, "Y", 4, 6), (2, "Y", 8, 7),
-        (3, "Q", 6, 8),
-    ]
-    sch = "k long, a string, ts long, tb long"
-    src = str(tmp_path / "changes")
-    state, ckpt = str(tmp_path / "scd2"), str(tmp_path / "scd2ckpt")
-
-    def run():
-        stream = spark.readStream.schema(sch).parquet(src)
-        q = scd2_stream(spark, stream, state, ckpt, "k", "a", "ts", "tb").start()
-        q.awaitTermination(120)
-
-    spark.createDataFrame([r for r in rows if r[2] <= 2], sch).write.parquet(src)
-    run()
-    spark.createDataFrame([r for r in rows if 2 < r[2] <= 5], sch).write.mode(
-        "append"
-    ).parquet(src)
-    run()
-    spark.createDataFrame([r for r in rows if r[2] > 5], sch).write.mode(
-        "append"
-    ).parquet(src)
-    run()
-
-    got = sorted(map(tuple, read_scd2_history(spark, state, "k", "a").collect()))
-    want = sorted(
-        map(
-            tuple,
-            scd2_reconstruct(
-                spark.createDataFrame(rows, sch), "k", "a", "ts", "tb"
-            ).collect(),
-        )
-    )
-    assert got == want, (got, want)
-
-
-def test_streaming_span_stats_equals_batch(spark, tmp_path):
-    """Two availableNow deliveries (documents time-split at the median
-    doc_id) fold (span, doc) pair counts into persisted state; the
-    rolled-up summary equals the batch dedup_span_stats query over the
-    whole table — including sub-span-width docs — and a replayed batch
-    id is a no-op. The hashed twin matches dedup_span_stats_hashed."""
-    from bigdatasmallprice_spark.catalog import load_table
-    from bigdatasmallprice_spark.registry import all_queries
-    from bigdatasmallprice_spark.streaming.span_stream import (
-        span_stream,
-        span_stats_from_state,
-        update_span_pairs,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    docs = load_table(spark, sf, "documents").select("doc_id", "source", "text")
-    mid = docs.agg(F.expr("percentile(doc_id, 0.5)")).collect()[0][0]
-    src = str(tmp_path / "docs")
-    sch = "doc_id long, source string, text string"
-
-    for hashed in (False, True):
-        suffix = "h" if hashed else "r"
-        state = str(tmp_path / f"span_{suffix}")
-        ckpt = str(tmp_path / f"spanckpt_{suffix}")
-
-        def run():
-            stream = spark.readStream.schema(sch).parquet(src)
-            q = span_stream(spark, stream, state, ckpt, hashed=hashed).start()
-            q.awaitTermination(120)
-
-        if hashed:  # source already fully written by the raw pass
-            run()
-        else:
-            docs.filter(F.col("doc_id") <= F.lit(float(mid))).write.mode(
-                "overwrite"
-            ).parquet(src)
-            run()
-            docs.filter(F.col("doc_id") > F.lit(float(mid))).write.mode(
-                "append"
-            ).parquet(src)
-            run()
-
-        qname = "dedup_span_stats_hashed" if hashed else "dedup_span_stats"
-        want = sorted(map(tuple, all_queries()[qname].fn(spark, sf).collect()))
-        got = sorted(map(tuple, span_stats_from_state(spark, state).collect()))
-        assert got == want, (qname, got[:3], want[:3])
-
-    # replay of the last applied batch id must not double-count
-    state = str(tmp_path / "span_r")
-    before = sorted(map(tuple, span_stats_from_state(spark, state).collect()))
-    replay = docs.limit(50)
-    update_span_pairs(spark, state, replay, batch_id=0)
-    after = sorted(map(tuple, span_stats_from_state(spark, state).collect()))
-    assert after == before
-
-    # geometry pinning: resuming with a different span width must raise
-    with pytest.raises(ValueError):
-        update_span_pairs(spark, state, replay, span_n=5, batch_id=99)
+    ds = str(tmp_path / "dsir")
+    update_dsir_counts(spark, ds, docs, "lang = 'en'", batch_id=0)
+    committed = read_state_manifest(ds)
+    once = _dsir_counts(spark, ds)
+    with _pytest.raises(ValueError, match="different parameters"):
+        update_dsir_counts(spark, ds, docs, "lang = 'de'", batch_id=1)
+    assert read_state_manifest(ds) == committed
+    assert _dsir_counts(spark, ds) == once
 
 
 # ---------------------------------------------------------------------------
-# streaming incremental span-dedup REWRITE ≡ batch rewrite
+# language-mix gate (streaming/langid_stream.py)
 # ---------------------------------------------------------------------------
-
-
-def test_streaming_rewrite_equals_batch(spark, tmp_path):
-    """Three ascending-doc_id deliveries rewritten incrementally
-    against the seen-span state must union to EXACTLY the batch
-    span_dedup_rewrite over the whole corpus (per-doc text equality,
-    raw and hashed twins); a replayed batch id must be a no-op on
-    state and leave the idempotent per-batch sink unchanged; resuming
-    with a different span width must raise."""
-    import pytest
-
-    from bigdatasmallprice_spark.catalog import load_table
-    from bigdatasmallprice_spark.operators.dedup import span_dedup_rewrite
-    from bigdatasmallprice_spark.streaming.rewrite_stream import (
-        read_rewritten,
-        rewrite_batch,
-        rewrite_stream,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    docs = load_table(spark, sf, "documents").select("doc_id", "source", "text")
-    t1, t2 = (
-        docs.agg(
-            F.expr("percentile(doc_id, 0.34)"), F.expr("percentile(doc_id, 0.67)")
-        ).collect()[0]
-    )
-    src = str(tmp_path / "docs")
-    sch = "doc_id long, source string, text string"
-
-    for hashed in (False, True):
-        suffix = "h" if hashed else "r"
-        state = str(tmp_path / f"rw_{suffix}")
-        out = str(tmp_path / f"rwout_{suffix}")
-        ckpt = str(tmp_path / f"rwckpt_{suffix}")
-
-        def run():
-            stream = spark.readStream.schema(sch).parquet(src)
-            q = rewrite_stream(
-                spark, stream, state, out, ckpt, hashed=hashed
-            ).start()
-            q.awaitTermination(120)
-
-        if hashed:  # source already fully written by the raw pass
-            run()
-        else:
-            for lo, hi in ((None, t1), (t1, t2), (t2, None)):
-                part = docs
-                if lo is not None:
-                    part = part.filter(F.col("doc_id") > F.lit(float(lo)))
-                if hi is not None:
-                    part = part.filter(F.col("doc_id") <= F.lit(float(hi)))
-                part.write.mode("append").parquet(src)
-                run()
-
-        want = sorted(
-            (r.doc_id, r.source, r.n_before, r.n_removed, r.new_text)
-            for r in span_dedup_rewrite(docs, hashed=hashed).collect()
-        )
-        got = sorted(
-            (r.doc_id, r.source, r.n_before, r.n_removed, r.new_text)
-            for r in read_rewritten(spark, out).collect()
-        )
-        assert got == want, (hashed, got[:2], want[:2])
-
-    # replay of an already-applied batch id: state version count and
-    # sink contents unchanged
-    state, out = str(tmp_path / "rw_r"), str(tmp_path / "rwout_r")
-    before = sorted(map(tuple, read_rewritten(spark, out).collect()))
-    rewrite_batch(spark, state, docs.limit(40), out, batch_id=0)
-    after = sorted(map(tuple, read_rewritten(spark, out).collect()))
-    assert after == before
-
-    # geometry pinning
-    with pytest.raises(ValueError):
-        rewrite_batch(spark, state, docs.limit(5), out, span_n=5, batch_id=99)
-
-
-def test_streaming_hll_equals_batch_estimate(spark, tmp_path):
-    """Two availableNow deliveries MAX-merge their register maxima into
-    the persisted HLL state; the final registers are IDENTICAL to the
-    batch fold over all data at once (MAX is order/partitioning-
-    independent), so the state's estimate equals hll_distinct's for the
-    same corpus. Replaying a delivery (idempotent MAX) and resuming
-    with a different precision are both covered."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from bigdatasmallprice_spark.functions.texts import shingle_expr
-    from bigdatasmallprice_spark.queries.sketchq import hll_registers
-    from bigdatasmallprice_spark.streaming.hll_stream import (
-        hll_stream,
-        read_hll_estimate,
-        read_hll_registers,
-        update_hll,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "source", "text"
-    )
-    chunk1, chunk2 = docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1")
-    src = str(tmp_path / "docs")
-    state, ckpt = str(tmp_path / "hll"), str(tmp_path / "hllckpt")
-    chunk1.write.parquet(src)
-
-    def run():
-        stream = spark.readStream.schema(docs.schema).parquet(src)
-        q = hll_stream(spark, stream, state, ckpt).start()
-        q.awaitTermination(120)
-
-    run()
-    chunk2.write.mode("append").parquet(src)
-    run()
-
-    streamed = {
-        (r.source, r.idx): r.m_rho
-        for r in read_hll_registers(spark, state).collect()
-    }
-    words = docs.select("source", F.split("text", " ").alias("ws")).select(
-        "source", F.explode(F.expr(shingle_expr("ws", 3))).alias("wd")
-    )
-    batch = {(r.source, r.idx): r.m_rho for r in hll_registers(words).collect()}
-    assert streamed == batch
-
-    # estimate from state == the registered query's estimate columns
-    from bigdatasmallprice_spark.registry import all_queries
-
-    est_state = {
-        r.source: (r.s_scaled, r.est_distinct)
-        for r in read_hll_estimate(spark, state).collect()
-    }
-    est_query = {
-        r.source: (r.s_scaled, r.est_distinct)
-        for r in all_queries()["hll_distinct"]
-        .fn(spark, "/root/testdata/sf0.001")
-        .collect()
-    }
-    assert est_state == est_query
-
-    # replay safety: folding the same delivery again changes nothing
-    update_hll(spark, state, chunk1, batch_id=999)
-    assert {
-        (r.source, r.idx): r.m_rho
-        for r in read_hll_registers(spark, state).collect()
-    } == batch
-
-    # precision pinning: a different p must raise, not silently merge
-    from bigdatasmallprice_spark.queries import sketchq
-    from bigdatasmallprice_spark.streaming import state as st
-
-    assert st.read_state_manifest(state)["config"] == {"p": sketchq._HLL_P}
-    with _pytest.raises(ValueError):
-        st.validate_state_config(state, {"p": sketchq._HLL_P + 1})
-
-
-def test_streaming_cms_equals_batch_and_replay_safe(spark, tmp_path):
-    """Two availableNow deliveries SUM-fold their counter increments
-    into the persisted CMS matrix; the final counters are IDENTICAL to
-    the batch fold over all data (integer sums, any merge order). The
-    SUM fold is NOT idempotent, so the replay watermark must skip a
-    re-delivered batch id — replaying batch 0 must change nothing.
-    Point estimates from the state obey est >= exact for every word."""
-    from pyspark.sql import functions as F
-
-    from bigdatasmallprice_spark.queries.sketchq import cms_registers
-    from bigdatasmallprice_spark.streaming.cms_stream import (
-        cms_stream,
-        read_cms_estimates,
-        read_cms_registers,
-        update_cms,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    chunk1, chunk2 = docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1")
-    src = str(tmp_path / "docs")
-    state, ckpt = str(tmp_path / "cms"), str(tmp_path / "cmsckpt")
-    chunk1.write.parquet(src)
-
-    def run():
-        stream = spark.readStream.schema(docs.schema).parquet(src)
-        q = cms_stream(spark, stream, state, ckpt).start()
-        q.awaitTermination(120)
-
-    run()
-    chunk2.write.mode("append").parquet(src)
-    run()
-
-    streamed = {
-        (r.r, r.idx): r.reg for r in read_cms_registers(spark, state).collect()
-    }
-    words = docs.select(F.explode(F.split("text", " ")).alias("wd"))
-    batch = {(r.r, r.idx): r.reg for r in cms_registers(words).collect()}
-    assert streamed == batch
-
-    # replay protection: the non-idempotent fold must skip a seen id
-    update_cms(spark, state, chunk1, batch_id=0)
-    assert {
-        (r.r, r.idx): r.reg for r in read_cms_registers(spark, state).collect()
-    } == batch
-
-    # point estimates from state: never undercount the true frequency
-    exact = {
-        r.wd: r.n
-        for r in words.groupBy("wd").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    probes = sorted(exact)[:10]
-    # an UNSEEN term must still yield a row (true CMS semantics: its
-    # counters are implicit zeros -> est_cnt may be 0, never a KeyError
-    # or a MIN over fewer than d rows)
-    unseen = "zz-never-in-corpus-zz"
-    assert unseen not in exact
-    est = {
-        r.term: r.est_cnt
-        for r in read_cms_estimates(spark, state, probes + [unseen]).collect()
-    }
-    for t in probes:
-        assert est[t] >= exact[t], (t, est[t], exact[t])
-    assert est[unseen] >= 0  # present, and only hash-collision mass
-
-
-def test_streaming_zorder_table_equals_batch_union(spark, tmp_path):
-    """The foreachBatch OPTIMIZE ZORDER wiring end-to-end: two
-    availableNow deliveries fold into the versioned z-clustered table;
-    the readback equals the union of everything delivered, and the
-    manifest pins the layout config."""
-    from pyspark.sql import functions as F
-
-    from bigdatasmallprice_spark.streaming.state import read_state_manifest
-    from bigdatasmallprice_spark.streaming.zorder_stream import (
-        read_zorder_table,
-        zorder_table_stream,
-    )
-
-    from bigdatasmallprice_spark.queries.core import table as _table
-
-    ev = (
-        _table(spark, "/root/testdata/sf0.001", "events")
-        .select(
-            "event_id",
-            F.expr("unix_micros(ts)").alias("us"),
-            F.expr("CAST(round(value * 100) AS BIGINT)").alias("vc"),
-        )
-        .limit(400)
-    )
-    chunk1, chunk2 = ev.filter("event_id % 2 = 0"), ev.filter("event_id % 2 = 1")
-    src = str(tmp_path / "src")
-    st, ckpt = str(tmp_path / "ztab"), str(tmp_path / "zckpt")
-    chunk1.write.parquet(src)
-    x_sql = "greatest(least(us % 256, 255), 0)"
-    y_sql = "greatest(least(vc div 256, 255), 0)"
-
-    def run():
-        stream = spark.readStream.schema(ev.schema).parquet(src)
-        q = zorder_table_stream(
-            spark, stream, st, ckpt, x_sql, y_sql, rows_per_file=64
-        ).start()
-        q.awaitTermination(120)
-
-    run()
-    chunk2.write.mode("append").parquet(src)
-    run()
-
-    got = sorted(map(tuple, read_zorder_table(spark, st).collect()))
-    assert got == sorted(map(tuple, ev.collect()))
-    manifest = read_state_manifest(st)
-    assert manifest["config"]["x_sql"] == x_sql
-    assert manifest["max_batch_id"] >= 1
-
-
-def test_streaming_quantile_sketch_equals_batch_and_replay_safe(spark, tmp_path):
-    """Two availableNow deliveries SUM-fold their (type, bin) counts
-    into the persisted quantile-sketch histogram; the folded state is
-    INTEGER-IDENTICAL to the batch fold over all data, so the state
-    readback's estimates equal the lean batch query's on the union.
-    The SUM fold is not idempotent: replaying a delivered batch id
-    must change nothing."""
-    from pyspark.sql import functions as F
-
-    from bigdatasmallprice_spark.queries.core import table as _table
-    from bigdatasmallprice_spark.queries.sketchq import quantile_hist
-    from bigdatasmallprice_spark.registry import all_queries as _aq
-    from bigdatasmallprice_spark.streaming.quantile_stream import (
-        quantile_stream,
-        read_quantile_estimates,
-        read_quantile_hist,
-        update_quantile_hist,
-    )
-
-    ev = _table(spark, "/root/testdata/sf0.001", "events").select(
-        "event_id", "event_type", "value"
-    )
-    chunk1, chunk2 = ev.filter("event_id % 2 = 0"), ev.filter("event_id % 2 = 1")
-    src = str(tmp_path / "ev")
-    state, ckpt = str(tmp_path / "qh"), str(tmp_path / "qhckpt")
-    chunk1.write.parquet(src)
-
-    def run():
-        stream = spark.readStream.schema(ev.schema).parquet(src)
-        q = quantile_stream(spark, stream, state, ckpt).start()
-        q.awaitTermination(120)
-
-    run()
-    chunk2.write.mode("append").parquet(src)
-    run()
-
-    streamed = {
-        (r.event_type, r.bin): r.cnt
-        for r in read_quantile_hist(spark, state).collect()
-    }
-    batch = {
-        (r.event_type, r.bin): r.cnt for r in quantile_hist(ev).collect()
-    }
-    assert streamed == batch
-
-    # replay protection
-    update_quantile_hist(spark, state, chunk1, batch_id=0)
-    assert {
-        (r.event_type, r.bin): r.cnt
-        for r in read_quantile_hist(spark, state).collect()
-    } == batch
-
-    # estimates from state == the lean batch query over the same data
-    got = {
-        r.event_type: tuple(r)
-        for r in read_quantile_estimates(spark, state).collect()
-    }
-    want = {
-        r.event_type: tuple(r)
-        for r in _aq()["quantile_sketch_lean"]
-        .fn(spark, "/root/testdata/sf0.001")
-        .collect()
-    }
-    assert got == want
-
-
-def test_streaming_winnow_dedup_equals_batch(spark, tmp_path):
-    """Two availableNow deliveries through the incremental winnowing
-    gate: the union of all emitted pairs (within-batch + new-vs-state)
-    must EQUAL the batch winnow_pairs over all documents — with
-    identical n_shared — on this hub-free corpus; the folded
-    fingerprint state must equal the batch fingerprints; a replayed
-    batch id must emit nothing new (pair appends are not idempotent)."""
-    import glob as _glob
-
-    from bigdatasmallprice_spark.operators.dedup import (
-        winnow_fingerprints,
-        winnow_pairs,
-    )
-    from bigdatasmallprice_spark.streaming.winnow_stream import (
-        read_winnow_state,
-        update_winnow_state,
-        winnow_stream,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    chunk1, chunk2 = docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1")
-    src = str(tmp_path / "docs")
-    state, ckpt = str(tmp_path / "wst"), str(tmp_path / "wckpt")
-    verdicts = str(tmp_path / "pairs")
-    chunk1.write.parquet(src)
-
-    def run():
-        stream = spark.readStream.schema(docs.schema).parquet(src)
-        q = winnow_stream(spark, stream, state, ckpt, verdicts).start()
-        q.awaitTermination(120)
-
-    run()
-    chunk2.write.mode("append").parquet(src)
-    run()
-
-    got = {
-        (r.id_a, r.id_b): r.n_shared
-        for r in spark.read.parquet(verdicts).collect()
-    }
-    want = {
-        (r.id_a, r.id_b): r.n_shared
-        for r in winnow_pairs(winnow_fingerprints(docs), min_shared=4).collect()
-    }
-    assert got == want
-    assert len(got) > 0  # the corpus's planted near-dups are found
-
-    streamed_state = {
-        (r.doc_id, r.fp) for r in read_winnow_state(spark, state).collect()
-    }
-    batch_fps = {
-        (r.doc_id, r.fp) for r in winnow_fingerprints(docs).collect()
-    }
-    assert streamed_state == batch_fps
-
-    # replay protection: same batch id -> no new pair files
-    n_files = len(_glob.glob(verdicts + "/batch=*/part-*.parquet"))
-    update_winnow_state(spark, state, chunk1, verdicts, batch_id=0)
-    assert len(_glob.glob(verdicts + "/batch=*/part-*.parquet")) == n_files
-
-
-def test_winnow_stream_redelivered_doc_folds_once(spark, tmp_path):
-    """A document RE-DELIVERED under a NEW batch id (at-least-once
-    source; the replay watermark does not apply) must fold and pair
-    exactly once: the state keeps one fingerprint set for it and the
-    verdict sink gains no rows from the redelivery."""
-    import glob as _glob
-
-    from bigdatasmallprice_spark.operators.dedup import winnow_fingerprints
-    from bigdatasmallprice_spark.streaming.winnow_stream import (
-        read_winnow_state,
-        update_winnow_state,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    ).filter("doc_id < 60")
-    state = str(tmp_path / "wst")
-    verdicts = str(tmp_path / "pairs")
-    update_winnow_state(spark, state, docs, verdicts, batch_id=0)
-    state_before = sorted(
-        (r.doc_id, r.fp) for r in read_winnow_state(spark, state).collect()
-    )
-    pair_files = len(_glob.glob(verdicts + "/batch=*/part-*.parquet"))
-    pairs_before = sorted(
-        map(tuple, spark.read.parquet(verdicts).collect())
-    ) if pair_files else []
-
-    # redeliver a subset under a NEW batch id
-    update_winnow_state(
-        spark, state, docs.filter("doc_id < 20"), verdicts, batch_id=1
-    )
-    state_after = sorted(
-        (r.doc_id, r.fp) for r in read_winnow_state(spark, state).collect()
-    )
-    assert state_after == state_before  # no duplicate fingerprints
-    pairs_after = sorted(map(tuple, spark.read.parquet(verdicts).collect()))
-    assert pairs_after == pairs_before  # no duplicate/spurious pairs
-    assert state_before == sorted(
-        (r.doc_id, r.fp) for r in winnow_fingerprints(docs).collect()
-    )
-
-
-def test_streaming_audio_dedup_equals_batch_exactly(spark, tmp_path):
-    """Two availableNow deliveries through the incremental audio gate:
-    the union of all emitted pairs (within-batch + new-vs-state) must
-    EQUAL the batch audio_near_pairs over all clips — with identical
-    hamming — on EVERY corpus (the Hamming rule has no frequency-
-    dependent cap, unlike winnowing's hub cap); the folded signature
-    state must equal the batch signatures; a replayed batch id must
-    emit nothing new (pair appends are not idempotent)."""
-    import glob as _glob
-
-    from bigdatasmallprice_spark.operators.multimodal import (
-        audio_fingerprint_features,
-        audio_near_pairs,
-        synthesize_neardup_wav,
-    )
-    from bigdatasmallprice_spark.streaming.audio_stream import (
-        audio_stream,
-        read_audio_state,
-        update_audio_state,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id")
-    media = synthesize_neardup_wav(docs)
-    # interleaved split: group members land in DIFFERENT deliveries,
-    # so cross (new-vs-state) pairs genuinely exercise the state join
-    chunk1 = synthesize_neardup_wav(docs.filter("doc_id % 2 = 0"))
-    chunk2 = synthesize_neardup_wav(docs.filter("doc_id % 2 = 1"))
-    src = str(tmp_path / "clips")
-    state, ckpt = str(tmp_path / "ast"), str(tmp_path / "ackpt")
-    verdicts = str(tmp_path / "apairs")
-    chunk1.write.parquet(src)
-
-    def run():
-        stream = spark.readStream.schema("doc_id long, payload binary").parquet(src)
-        q = audio_stream(spark, stream, state, ckpt, verdicts).start()
-        q.awaitTermination(120)
-
-    run()
-    chunk2.write.mode("append").parquet(src)
-    run()
-
-    got = {
-        (r.id_a, r.id_b): r.hamming
-        for r in spark.read.parquet(verdicts).collect()
-    }
-    sigs = audio_fingerprint_features(media).persist()
-    try:
-        want = {
-            (r.id_a, r.id_b): r.hamming for r in audio_near_pairs(sigs).collect()
-        }
-        batch_sigs = {(r.doc_id, r.afp) for r in sigs.collect()}
-    finally:
-        sigs.unpersist()
-    assert got == want
-    assert len(got) > 0  # the planted near-dup groups are found
-
-    streamed_state = {
-        (r.doc_id, r.afp) for r in read_audio_state(spark, state).collect()
-    }
-    assert streamed_state == batch_sigs
-
-    # replay protection: same batch id -> no new pair files
-    n_files = len(_glob.glob(verdicts + "/batch=*/part-*.parquet"))
-    update_audio_state(spark, state, chunk1, verdicts, batch_id=0)
-    assert len(_glob.glob(verdicts + "/batch=*/part-*.parquet")) == n_files
-
-
-def test_audio_stream_redelivered_clip_folds_once(spark, tmp_path):
-    """A clip RE-DELIVERED under a NEW batch id (at-least-once source;
-    the replay watermark does not apply) must fold and pair exactly
-    once: one signature in the state, no new verdict rows."""
-    import glob as _glob
-
-    from bigdatasmallprice_spark.operators.multimodal import (
-        synthesize_neardup_wav,
-    )
-    from bigdatasmallprice_spark.streaming.audio_stream import (
-        read_audio_state,
-        update_audio_state,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id").filter("doc_id < 60")
-    media = synthesize_neardup_wav(docs)
-    state = str(tmp_path / "ast")
-    verdicts = str(tmp_path / "apairs")
-    update_audio_state(spark, state, media, verdicts, batch_id=0)
-    state_before = sorted(
-        (r.doc_id, r.afp) for r in read_audio_state(spark, state).collect()
-    )
-    pairs_before = sorted(map(tuple, spark.read.parquet(verdicts).collect()))
-
-    update_audio_state(
-        spark,
-        state,
-        synthesize_neardup_wav(docs.filter("doc_id < 20")),
-        verdicts,
-        batch_id=1,
-    )
-    assert sorted(
-        (r.doc_id, r.afp) for r in read_audio_state(spark, state).collect()
-    ) == state_before
-    assert sorted(map(tuple, spark.read.parquet(verdicts).collect())) == pairs_before
-    n_files = len(_glob.glob(verdicts + "/batch=*/part-*.parquet"))
-    assert n_files >= 1
-
-
-def test_streaming_graph_pagerank_equals_batch_across_split_orders(spark, tmp_path):
-    """Orders SLICED ACROSS deliveries (split by linenumber parity, so
-    most orders span both batches): the membership state's set-union
-    fold must still yield EXACTLY the batch query's ranks on read —
-    the cross pairs between an order's early and late lineitems are
-    derivable only from the folded relation, never from either batch
-    alone (the reason edge weights themselves are not the state)."""
-    from bigdatasmallprice_spark.registry import all_queries
-    from bigdatasmallprice_spark.streaming.graph_stream import (
-        graph_stream,
-        read_pagerank,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    li = spark.read.parquet(f"{sf}/lineitem.parquet").select(
-        "l_orderkey", "l_suppkey", "l_linenumber"
-    )
-    chunk1 = li.filter("l_linenumber % 2 = 0").drop("l_linenumber")
-    chunk2 = li.filter("l_linenumber % 2 = 1").drop("l_linenumber")
-    # sanity: the split really slices orders across deliveries
-    both = chunk1.select("l_orderkey").intersect(chunk2.select("l_orderkey"))
-    assert both.count() > 0
-
-    src = str(tmp_path / "li")
-    state, ckpt = str(tmp_path / "gst"), str(tmp_path / "gckpt")
-    chunk1.write.parquet(src)
-
-    def run():
-        stream = spark.readStream.schema(
-            "l_orderkey long, l_suppkey long"
-        ).parquet(src)
-        q = graph_stream(spark, stream, state, ckpt).start()
-        q.awaitTermination(120)
-
-    run()
-    chunk2.write.mode("append").parquet(src)
-    run()
-
-    sup = spark.read.parquet(f"{sf}/supplier.parquet")
-    nodes = sup.selectExpr("s_suppkey AS node")
-    got = sorted(
-        map(tuple, read_pagerank(spark, state, nodes).collect())
-    )
-    want = sorted(
-        (r.s_suppkey, r.rank_micro)
-        for r in all_queries()["pagerank_copurchase"].fn(spark, sf).collect()
-    )
-    assert got == want
-    assert len(got) == sup.count()
-
-
-def test_graph_state_fold_is_idempotent_under_redelivery(spark, tmp_path):
-    """Set union is idempotent: re-delivering rows under a NEW batch id
-    (at-least-once source — the watermark does not guard it) leaves
-    the membership state EXACTLY unchanged; a replayed batch id skips
-    the fold via the watermark."""
-    from bigdatasmallprice_spark.streaming.graph_stream import (
-        read_graph_state,
-        update_graph_state,
-    )
-    from bigdatasmallprice_spark.streaming.state import read_state_manifest
-
-    li = spark.read.parquet(
-        "/root/testdata/sf0.001/lineitem.parquet"
-    ).select("l_orderkey", "l_suppkey").filter("l_orderkey < 200")
-    state = str(tmp_path / "gst")
-    update_graph_state(spark, state, li, batch_id=0)
-    before = sorted((r.ok, r.sk) for r in read_graph_state(spark, state).collect())
-
-    # new batch id, duplicate rows -> state unchanged (set semantics)
-    update_graph_state(spark, state, li.limit(50), batch_id=1)
-    after = sorted((r.ok, r.sk) for r in read_graph_state(spark, state).collect())
-    assert after == before
-
-    # replayed batch id -> the fold is skipped, manifest version stays
-    v = read_state_manifest(state)["version"]
-    update_graph_state(spark, state, li, batch_id=1)
-    assert read_state_manifest(state)["version"] == v
-
-
-def test_streaming_graph_state_serves_walk_corpus_readback(spark, tmp_path):
-    """The same membership state that serves PageRank readbacks must
-    yield the EXACT batch skip-gram pair corpus — orders sliced across
-    deliveries and all (the walks are deterministic functions of the
-    folded graph)."""
-    from bigdatasmallprice_spark.registry import all_queries
-    from bigdatasmallprice_spark.streaming.graph_stream import (
-        read_skipgram_pairs,
-        update_graph_state,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    li = spark.read.parquet(f"{sf}/lineitem.parquet").select(
-        "l_orderkey", "l_suppkey", "l_linenumber"
-    )
-    state = str(tmp_path / "gst")
-    update_graph_state(
-        spark, state, li.filter("l_linenumber % 2 = 0"), batch_id=0
-    )
-    update_graph_state(
-        spark, state, li.filter("l_linenumber % 2 = 1"), batch_id=1
-    )
-    sup = spark.read.parquet(f"{sf}/supplier.parquet")
-    nodes = sup.selectExpr("s_suppkey AS node")
-    got = sorted(
-        map(tuple, read_skipgram_pairs(spark, state, nodes).collect())
-    )
-    want = sorted(
-        map(
-            tuple,
-            all_queries()["randomwalk_skipgram_pairs"].fn(spark, sf).collect(),
-        )
-    )
-    assert got == want and len(got) > 0
-
-
-def test_streaming_graph_state_serves_embedding_readback(spark, tmp_path):
-    """The continuous DeepWalk loop end-to-end: the folded membership
-    state run through the exact batch SGNS pipeline must yield the
-    registered node_embedding_train query's output BIT-FOR-BIT —
-    orders sliced across deliveries and all (walks, negatives, init,
-    and the GD trajectory are deterministic functions of the folded
-    graph)."""
-    from bigdatasmallprice_spark.registry import all_queries
-    from bigdatasmallprice_spark.streaming.graph_stream import (
-        read_node_embeddings,
-        update_graph_state,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    li = spark.read.parquet(f"{sf}/lineitem.parquet").select(
-        "l_orderkey", "l_suppkey", "l_linenumber"
-    )
-    state = str(tmp_path / "gst")
-    update_graph_state(
-        spark, state, li.filter("l_linenumber % 2 = 0"), batch_id=0
-    )
-    update_graph_state(
-        spark, state, li.filter("l_linenumber % 2 = 1"), batch_id=1
-    )
-    sup = spark.read.parquet(f"{sf}/supplier.parquet")
-    nodes = sup.selectExpr("s_suppkey AS node")
-    got = sorted(
-        map(tuple, read_node_embeddings(spark, state, nodes).collect())
-    )
-    want = sorted(
-        map(
-            tuple,
-            all_queries()["node_embedding_train"]
-            .fn(spark, sf)
-            .selectExpr(
-                "s_suppkey AS node", "dim",
-                "u_micro AS u", "v_micro AS v",
-            )
-            .collect(),
-        )
-    )
-    assert got == want and len(got) > 0
 
 
 def _trained_langid_weights(spark, sf="/root/testdata/sf0.001"):
@@ -1772,98 +292,3 @@ def test_streaming_langmix_equals_batch_and_replay_safe(spark, tmp_path):
     w2 = {c: [v + 1 for v in ws] for c, ws in w.items()}
     with pytest.raises(Exception, match="(?i)config|model|mismatch"):
         update_langmix_state(spark, state, docs, w2, batch_id=2)
-
-
-def test_legacy_flat_verdict_sink_is_refused(spark, tmp_path):
-    """A pre-existing FLAT verdict sink (root-level part files from a
-    hypothetical older release) cannot be mixed with the per-version
-    batch=N/ layout — Spark's partition discovery rejects the mix at
-    read time. The fold must fail fast with a clear message instead
-    (r7 advice)."""
-    import pytest as _pytest
-
-    from bigdatasmallprice_spark.streaming.winnow_stream import (
-        update_winnow_state,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text").filter("doc_id < 10")
-    state = str(tmp_path / "wst")
-    verdicts = tmp_path / "pairs"
-    verdicts.mkdir()
-    # simulate the legacy flat layout: a root-level part file
-    (verdicts / "part-00000-legacy.snappy.parquet").write_bytes(b"")
-    with _pytest.raises(ValueError, match="legacy flat layout"):
-        update_winnow_state(spark, state, docs, str(verdicts), batch_id=0)
-
-
-
-def test_source_column_pins_across_sketch_streams(spark, tmp_path):
-    """The knlm_stream source-column refusal swept across the sketch
-    states (r11): bloom bits, CMS registers, covariance moments and
-    MG summaries from one column must never fold with another's."""
-    import pytest as _pytest
-
-    from bigdatasmallprice_spark.streaming.bloom_stream import update_bloom
-    from bigdatasmallprice_spark.streaming.cms_stream import update_cms
-    from bigdatasmallprice_spark.streaming.cov_stream import update_moments
-    from bigdatasmallprice_spark.streaming.hh_stream import update_summary
-
-    docs = spark.createDataFrame(
-        [(0, "a b c", "x y z")], "doc_id long, text string, alt string"
-    )
-    for name, fn in (("bloom", update_bloom), ("cms", update_cms)):
-        state = str(tmp_path / name)
-        fn(spark, state, docs, batch_id=0)
-        with _pytest.raises(ValueError, match="different parameters"):
-            fn(spark, state, docs, text_col="alt", batch_id=1)
-
-    vecs = spark.createDataFrame(
-        [(0, [1.0, 2.0], [9.0, 9.0])],
-        "vec_id long, embedding array<double>, alt array<double>",
-    )
-    state = str(tmp_path / "cov")
-    update_moments(spark, state, vecs, batch_id=0)
-    with _pytest.raises(ValueError, match="different parameters"):
-        update_moments(spark, state, vecs, vec_col="alt", batch_id=1)
-
-    terms = spark.createDataFrame(
-        [("alpha", "beta")], "t1 string, t2 string"
-    )
-    state = str(tmp_path / "hh")
-    update_summary(spark, state, terms, "t1", batch_id=0)
-    with _pytest.raises(ValueError, match="different parameters"):
-        update_summary(spark, state, terms, "t2", batch_id=1)
-
-
-
-def test_hh_term_col_pin_requires_explicit_repin(spark, tmp_path):
-    """term_col has no default, so a pre-pin MG state cannot
-    trust-on-first-use (one wrong-column fold would mix two columns'
-    counts, then pin the wrong column): migration is an EXPLICIT
-    one-time allow_repin=True acknowledgment, after which the restored
-    pin refuses mismatches as ever (the r11 ADVICE hh_stream item)."""
-    import json
-
-    import pytest as _pytest
-
-    from bigdatasmallprice_spark.streaming.hh_stream import update_summary
-    from bigdatasmallprice_spark.streaming.state import read_state_manifest
-
-    terms = spark.createDataFrame([("alpha", "beta")], "t1 string, t2 string")
-    state = str(tmp_path / "hh")
-    update_summary(spark, state, terms, "t1", batch_id=0)
-    # simulate a pre-pin manifest: strip the column pin in place
-    mpath = state + "._state_manifest.json"
-    m = json.load(open(mpath))
-    del m["config"]["term_col"]
-    json.dump(m, open(mpath, "w"))
-    # a silent fold refuses — even from the historically-correct column
-    with _pytest.raises(ValueError, match="predates the term_col pin"):
-        update_summary(spark, state, terms, "t1", batch_id=1)
-    # the explicit one-time acknowledgment folds and restores the pin
-    update_summary(spark, state, terms, "t1", batch_id=1, allow_repin=True)
-    assert read_state_manifest(state)["config"]["term_col"] == "t1"
-    with _pytest.raises(ValueError, match="different parameters"):
-        update_summary(spark, state, terms, "t2", batch_id=2)
