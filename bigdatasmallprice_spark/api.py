@@ -335,6 +335,7 @@ class ApiHandler(BaseHTTPRequestHandler):
         The engine's registered models key on the timestamp, so the
         feature dict must carry ``time`` (ISO); 503 when no artifact."""
         from bigdatasmallprice_spark import modelstore
+        from bigdatasmallprice_spark.session import local_frame
 
         feats = body.get("features") or {}
         if "time" not in feats:
@@ -345,9 +346,7 @@ class ApiHandler(BaseHTTPRequestHandler):
             ts = dt.datetime.fromisoformat(feats["time"])
         except (TypeError, ValueError):
             raise BadRequest("features.time must be an ISO timestamp") from None
-        one = st.spark.createDataFrame(
-            [(ts, "all")], "time timestamp, k string"
-        )
+        one = local_frame(st.spark, [(ts, "all")], "time timestamp, k string")
         row = modelstore.score_latest(
             st.spark, st.model_dir, model, one, "k", ts_col="time"
         ).collect()

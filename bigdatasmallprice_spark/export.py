@@ -26,6 +26,7 @@ from bigdatasmallprice_spark.operators.splits import (
     split_by_dates,
     split_label_by_ratio,
 )
+from bigdatasmallprice_spark.session import local_frame
 
 # Model B feature list — the training_features view columns minus time &
 # target (reference export_pipeline.py:33-74 FEATURE_COLS)
@@ -158,7 +159,7 @@ def holiday_dim(
     rows = [
         (d, 1 if d in hol else 0, 1 if d in school else 0) for d in dates
     ]
-    return spark.createDataFrame(rows, "d date, is_holiday_zh int, is_school_holiday int")
+    return local_frame(spark, rows, "d date, is_holiday_zh int, is_school_holiday int")
 
 
 def enrich_load_features(df: DataFrame, dim: DataFrame) -> DataFrame:

@@ -12,11 +12,13 @@ the driver, so what can be answered from that list is answered there,
 not by a Spark job: the in-batch dedup (first record per key wins, the
 reference's ``executemany`` order) and the set of ``p_date`` partitions
 the batch touches (``catalog.bronze_partition_dates``, the rule
-``write_bronze`` applies). Spark is asked only for the idempotency
-anti-join and the write. The anti-join reads the touched ``p_date=``
-directories that exist, named directly and read with the batch's schema:
-no listing of the whole table, no schema inference, so its cost does not
-grow with the table's history.
+``write_bronze`` applies). The deduped list reaches the JVM as one Arrow
+table (``session.local_frame``), a local relation that no Python worker
+has to pickle. Spark is asked only for the idempotency anti-join and the
+write. The anti-join reads the touched ``p_date=`` directories that
+exist, named directly and read with the batch's schema: no listing of
+the whole table, no schema inference, so its cost does not grow with the
+table's history.
 
 A feed-day that touches at least one existing partition pays the
 anti-join and its count before the write. Only a feed-day that touches
@@ -37,6 +39,7 @@ from datetime import date, datetime, timezone
 from pyspark.sql import SparkSession
 
 from bigdatasmallprice_spark.catalog import bronze_partition_dates, write_bronze
+from bigdatasmallprice_spark.session import local_frame
 
 
 def fetch_with_retry(
@@ -63,8 +66,8 @@ def fetch_with_retry(
 
 def _as_utc(v):
     """A record value with datetimes as aware UTC instants. A naive
-    datetime is local time on the driver, as ``createDataFrame`` reads a
-    local list; once aware, no later step depends on a process's zone."""
+    datetime is local time on the driver, as ``local_frame`` reads it;
+    once aware, no later step depends on a process's zone."""
     if isinstance(v, datetime):
         return v.astimezone(timezone.utc)
     return v
@@ -105,13 +108,10 @@ def backfill_dates(
             inserted[d] = 0
             continue
         records = _first_per_key([{c: _as_utc(v) for c, v in r.items()} for r in records], keys)
-        # one slice. Both createDataFrame paths hand their rows to the JVM
-        # through a Python map (RDD._pickled), one worker pass per slice;
-        # createDataFrame(list) cuts defaultParallelism slices, and
-        # coalesce(1) merges their files but keeps the passes (0.9 s
-        # against 0.3 s per 288-row write on 4 cores). toInternal runs in
-        # that worker here; on aware datetimes it ignores the worker's zone.
-        batch = spark.createDataFrame(spark.sparkContext.parallelize(records, 1), schema)
+        # The batch is an Arrow local relation: no Python worker runs.
+        # Spark splits a LocalTableScan over up to defaultParallelism
+        # tasks, so coalesce(1) keeps a feed-day to one file per p_date.
+        batch = local_frame(spark, records, schema).coalesce(1)
         touched = sorted(bronze_partition_dates(spark, (r[time_col] for r in records)))
         dirs = [
             p

@@ -28,6 +28,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdatasmallprice_spark.session import local_frame
+
 _VERSION_RE = re.compile(r"_v(\d{8}T\d{6})\.json$")
 
 
@@ -246,7 +248,8 @@ def score_latest(
         return df.withColumn(
             "prediction", F.round(pred.cast("double") / 100.0, 6)
         ).withColumn("model_version", F.lit(doc["version"]))
-    coef = spark.createDataFrame(
+    coef = local_frame(
+        spark,
         [(c[key], c["b0c"], c["b1c"], c["b2c"]) for c in doc["coefficients"]],
         f"{key} string, b0c double, b1c double, b2c double",
     )

@@ -22,6 +22,7 @@ from bigdatasmallprice_spark.functions.tariffs import (
     traffic_light,
 )
 from bigdatasmallprice_spark.operators.topk import history, paginate, stride_downsample
+from bigdatasmallprice_spark.session import local_frame
 
 SERVING_TABLES = frozenset(
     {
@@ -264,7 +265,8 @@ def forecast_tariff(
     rounded to 2 decimals. A missing net load prices the standard Netz
     tariff. Single-row column eval so the formulas stay the one tested
     implementation."""
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [(0.0 if net_load is None else float(net_load), float(epex_eur_mwh))],
         "load double, epex double",
     )

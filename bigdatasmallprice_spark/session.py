@@ -12,13 +12,27 @@ Defaults chosen for correctness-parity with the reference and for scale:
 - ``spark.sql.shuffle.partitions`` defaults to 2*cores locally; on a real
   cluster this is overridden (AQE coalesces down anyway).
 - Arrow enabled for the few pandas_udf paths (model scoring, multimodal).
+
+``local_frame`` is the one way the served code turns rows it already
+holds on the driver into a frame.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
+from datetime import timezone
+from typing import Any
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    StructType,
+    TimestampType,
+    _make_type_verifier,
+    _parse_datatype_string,
+)
 
 
 def get_spark(
@@ -74,3 +88,37 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[dict | tuple], schema: StructType | str
+) -> DataFrame:
+    """Driver rows (dicts or tuples) as a frame under ``schema`` (a
+    ``StructType`` or a DDL string), handed to the JVM as one Arrow table.
+
+    Below ``spark.sql.execution.arrow.localRelationThreshold`` the table
+    becomes a ``LocalRelation``: projections over it fold at plan time and
+    no Python worker runs, where ``createDataFrame(rows)`` pickles the rows
+    through one. The checks ``createDataFrame`` makes are kept: every row
+    passes the same type verifier (pyarrow alone truncates 1.5 to 1 in an
+    integer field and lets None into a non-nullable one), and a
+    ``TimestampType`` value is made an aware UTC instant first, reading a
+    naive datetime as driver-local time as ``TimestampType.toInternal``
+    does (pyarrow alone would read an offset stamp's wall clock as UTC).
+    """
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    verify = _make_type_verifier(schema)
+    stamps = [isinstance(f.dataType, TimestampType) for f in schema.fields]
+    columns: list[list[Any]] = [[] for _ in stamps]
+    for row in rows:
+        verify(row)
+        values = [row.get(n) for n in schema.names] if isinstance(row, dict) else row
+        for col, is_stamp, v in zip(columns, stamps, values):
+            col.append(v.astimezone(timezone.utc) if is_stamp and v is not None else v)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -13,19 +13,16 @@ records; behavior mirrors the reference collectors
   reference src/etl/fetch_tasks.py:30-35)
 
 Ingestion shape: fetch/parse run driver-side (rate-limited API, ~100s of
-rows/day); the records land in Spark via ``to_df`` and are appended with
-first-writer-wins dedup (operators/upsert.py). Parsing XML is never the
-scale path — ENTSO-E ingestion is capped at 400 calls/day.
+rows/day); ``ingest.backfill_dates`` hands each day's records to Spark
+as one Arrow local relation and appends them with first-writer-wins
+dedup. Parsing XML is never the scale path — ENTSO-E ingestion is capped
+at 400 calls/day.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import xml.etree.ElementTree as ET
-
-from pyspark.sql import DataFrame, SparkSession
-
-from bigdatasmallprice_spark.schemas import DOMAIN_SCHEMAS
 
 RESOLUTION_MINUTES = {"PT15M": 15, "PT30M": 30, "PT60M": 60, "P1D": 1440}
 
@@ -126,16 +123,3 @@ def parse_load_forecast(xml_text: str, domain: str) -> list[dict]:
         {"time": t, "domain": domain, "load_mwh": v}
         for t, v in _series_points(xml_text, "quantity")
     ]
-
-
-def to_df(spark: SparkSession, table: str, records: list[dict]) -> DataFrame:
-    """Records -> typed DataFrame under the table's declared schema,
-    rejecting records without a UTC-aware time (reference
-    base_collector.py:140-149)."""
-    schema = DOMAIN_SCHEMAS[table]
-    time_key = "called_at" if table == "api_call_log" else "time"
-    for r in records:
-        t = r.get(time_key)
-        if t is None or t.tzinfo is None:
-            raise ValueError(f"record missing UTC-aware {time_key!r}: {r}")
-    return spark.createDataFrame(records, schema)

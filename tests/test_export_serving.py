@@ -33,6 +33,7 @@ from bigdatasmallprice_spark.serving import (
     timeseries,
 )
 from tests.domain_data import START, domain_frames
+from tests.spark_jobs import job_group
 
 UTC = dt.timezone.utc
 
@@ -226,6 +227,15 @@ def test_forecast_tariff_roundtrip(domain):
     assert out["netzpreis_rp_kwh"] == 10.0
     assert out["gesamttarif_rp_kwh"] == 13.2
     assert out["level"] == "low"
+
+
+def test_forecast_tariff_submits_no_spark_job(spark):
+    """The tariff tail is a projection of a one-row local relation, which
+    Spark folds at plan time: a forecast request runs no job."""
+    with job_group(spark, "forecast-tariff") as jobs:
+        out = forecast_tariff(525.0, 80.0, spark)
+    assert out["gesamttarif_rp_kwh"] == 8.2
+    assert jobs == []
 
 
 # ── auth (F14): password hash + HS256 JWT ─────────────────────────────────

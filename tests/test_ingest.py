@@ -10,6 +10,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from bigdatasmallprice_spark import ingest
+from bigdatasmallprice_spark.catalog import write_bronze
 from bigdatasmallprice_spark.ingest import backfill_dates
 from tests.spark_jobs import job_group
 
@@ -44,8 +46,31 @@ def test_backfill_topup_and_rerun_job_budget(spark, tmp_path):
 
     with job_group(spark, "ingest-rerun") as rerun:
         assert backfill_dates(spark, _hourly, days[2:], path, SCHEMA, KEYS) == {days[2]: 0}
-    assert len(rerun) <= 3, rerun
+    assert len(rerun) <= 2, rerun
     assert spark.read.parquet(path).count() == 144
+
+
+def test_backfill_batch_is_a_local_relation(spark, tmp_path, monkeypatch):
+    """A feed-day reaches the JVM as an Arrow local relation, both on the
+    write path and through the anti-join: no plan scans a pickled RDD."""
+    plans = []
+
+    def spy(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write_bronze(df, *args, **kwargs)
+
+    monkeypatch.setattr(ingest, "write_bronze", spy)
+    path = str(tmp_path / "bronze")
+    d = dt.date(2026, 5, 1)
+    assert backfill_dates(spark, _hourly, [d], path, SCHEMA, KEYS) == {d: 48}
+
+    def extra(day):
+        return _hourly(day) + [{"time": dt.datetime(2026, 5, 1, 12, 30), "k": "c", "v": 1.0}]
+
+    assert backfill_dates(spark, extra, [d], path, SCHEMA, KEYS) == {d: 1}
+    assert len(plans) == 2
+    for plan in plans:
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
 
 def test_backfill_never_reads_untouched_partitions(spark, tmp_path):

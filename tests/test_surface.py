@@ -6,7 +6,8 @@ contract, the bench and its registry, the HTTP API, the run DAGs, the
 serving layer and the end-to-end benchmark. A module only a test
 imports is dead weight; a module the walk cannot reach must be one of
 the paper components listed below, which are kept on purpose until
-they are wired in.
+they are wired in. The served modules that turn driver rows into a
+frame must do it through ``session.local_frame``.
 """
 
 from __future__ import annotations
@@ -34,6 +35,14 @@ UNWIRED = {
     f"{PKG}.operators.rollup": "incrementally refreshed continuous aggregates",
     f"{PKG}.sources.bafu": "BAFU hydrology collector parser",
     f"{PKG}.sources.tolerant": "dead-letter routing for malformed collector records",
+}
+
+# Served modules that hand rows they hold on the driver to Spark do so
+# through session.local_frame (an Arrow local relation, no Python
+# worker); a createDataFrame or parallelize call there needs a reason.
+LOCAL_ROWS_MODULES = tuple(f"{PKG}.{m}" for m in ("ingest", "modelstore", "serving", "api", "export"))
+PICKLED_ROWS_ALLOWED = {
+    (f"{PKG}.modelstore", "load_word_vectors"): "word2vec vectors are model-sized, up to millions of rows",
 }
 
 
@@ -88,3 +97,30 @@ def test_only_unwired_paper_components_are_unreachable():
     assert all(_path(r) is not None for r in ROOTS), ROOTS
     unreachable = _package_modules() - _reachable()
     assert unreachable == set(UNWIRED), sorted(unreachable ^ set(UNWIRED))
+
+
+def _row_handoffs(module: str) -> set[tuple[str, str | None]]:
+    """(module, innermost enclosing function) of every ``createDataFrame``
+    or ``parallelize`` call in the module."""
+    found: set[tuple[str, str | None]] = set()
+
+    def visit(node: ast.AST, fn: str | None) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name)
+                continue
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in ("createDataFrame", "parallelize")
+            ):
+                found.add((module, fn))
+            visit(child, fn)
+
+    visit(ast.parse(_path(module).read_text()), None)
+    return found
+
+
+def test_served_modules_hand_driver_rows_over_as_local_frames():
+    found = set().union(*(_row_handoffs(m) for m in LOCAL_ROWS_MODULES))
+    assert found == set(PICKLED_ROWS_ALLOWED), sorted(found ^ set(PICKLED_ROWS_ALLOWED), key=str)
