@@ -20,6 +20,8 @@ This module is the public convention:
 - ``persisted(df)`` — context manager that persists one frame for the
   block and unpersists exactly that frame on exit; what the training
   tasks and the export use, since they run beside other threads.
+- ``scan_persisted(df)`` — a one-node plan over a persisted frame, so
+  the frames derived from it do not re-plan the frame's whole view.
 
 A query's own persist is still fully effective DURING its execution —
 release happens after materialization, when the branches have been
@@ -108,6 +110,29 @@ def persisted(df: DataFrame):
         yield df
     finally:
         df.unpersist()
+
+
+def scan_persisted(df: DataFrame) -> DataFrame:
+    """A frame over the persisted ``df`` whose logical plan is one node.
+
+    Each transformation of a DataFrame analyzes its whole logical plan
+    again, and each action optimizes it and matches it against the cache
+    again, so frames derived from a persisted feature view keep paying
+    for the view's 9-join plan after its rows sit in memory (~40 ms per
+    transformation of the persisted labeled price surface, against ~5 ms
+    here). This frame scans the RDD that ``df``'s cached plan executes
+    to: its rows come from the cache, and a lost or released cache block
+    is recomputed through that RDD's lineage, as it is for ``df`` itself.
+    Building it runs the stages of ``df``'s plan up to the last one.
+    ``df`` must be persisted (``persisted``), or every action on the scan
+    re-runs ``df``'s whole plan.
+    """
+    spark = df.sparkSession
+    # a new query over df: df's own plan may have been planned before the
+    # persist, and then it would not read the cache
+    rows = df.select("*")._jdf.queryExecution().toRdd()
+    jdf = spark._jsparkSession.internalCreateDataFrame(rows, df._jdf.schema(), False)
+    return DataFrame(jdf, spark)
 
 
 @contextmanager

@@ -16,11 +16,13 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+from collections.abc import Callable, Iterable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bigdatasmallprice_spark.caching import persisted
+from bigdatasmallprice_spark.caching import persisted, scan_persisted
 from bigdatasmallprice_spark.operators.splits import (
     rolling_split_bounds,
     split_by_dates,
@@ -71,9 +73,10 @@ def validate_no_leakage(feature_cols: list[str], target_col: str) -> None:
 
 def freshness_check(
     df: DataFrame, time_col: str, clock: dt.datetime, max_age_hours: int = 26
-) -> None:
-    """Fail the export when the newest row is stale (T3). A naive
-    ``clock`` is read as UTC, like the naive timestamps Spark returns."""
+) -> DataFrame:
+    """Fail the export when the newest row is stale (T3), else return
+    ``df``. A naive ``clock`` is read as UTC, like the naive timestamps
+    Spark returns."""
     mx = df.agg(F.max(time_col)).collect()[0][0]
     if mx is None:
         raise ValueError("empty feature frame")
@@ -84,6 +87,7 @@ def freshness_check(
     age = (clock - mx).total_seconds() / 3600.0
     if age > max_age_hours:
         raise ValueError(f"stale features: newest row {age:.1f}h old (> {max_age_hours}h)")
+    return df
 
 
 # --------------------------------------------------------------------------
@@ -184,11 +188,11 @@ def enrich_load_features(df: DataFrame, dim: DataFrame) -> DataFrame:
 
 def label_splits(df: DataFrame, target_col: str) -> DataFrame:
     """The chronological split rule (D4) of both model surfaces, shared
-    by export, training and validation. The net-load surface
-    (``LOAD_TARGET_COL``) drops NaN targets, then holds out the last 7
-    days as test and the 14 before them as val (export_pipeline.py:
-    563-642); the price surface splits 70/15/15 in time order
-    (export_pipeline.py:296-369)."""
+    by export, training and validation through ``persisted_splits``. The
+    net-load surface (``LOAD_TARGET_COL``) drops NaN targets, then holds
+    out the last 7 days as test and the 14 before them as val
+    (export_pipeline.py:563-642); the price surface splits 70/15/15 in
+    time order (export_pipeline.py:296-369)."""
     if target_col == LOAD_TARGET_COL:
         df = df.na.drop(subset=[target_col])
         train_end, val_end = rolling_split_bounds(df, "time", 7, 14)
@@ -196,22 +200,51 @@ def label_splits(df: DataFrame, target_col: str) -> DataFrame:
     return split_label_by_ratio(df, ["time"], 0.7, 0.15)
 
 
-def _write_splits(
-    labeled: DataFrame,
+@contextmanager
+def persisted_splits(
+    df: DataFrame,
+    target_col: str,
+    cols: Iterable[str],
+    prepare: Callable[[DataFrame], DataFrame] | None = None,
+):
+    """Evaluate ``df`` once, label it with ``label_splits`` and yield the
+    labeled frame, persisted for the block. Export, training and
+    validation all split a feature view through here.
+
+    The projection of ``df`` on ``cols`` is persisted BEFORE the split
+    rule runs: the ratio split reads its input three times (the band
+    table, the join back and the row count), and each read of an
+    uncached view plans and scans all of its bronze tables again.
+    ``prepare`` runs on that persisted projection before the split (the
+    exports check freshness and add the holiday columns there). The
+    labeled frame is persisted as well, so each action of the block
+    reads it instead of re-running the split, and every action sees the
+    same labels; it is yielded through ``scan_persisted``, so the frames
+    the block builds on it do not re-plan the view. Both entries are
+    released on exit, also when the block raises."""
+    with persisted(df.select(*cols)) as projection:
+        frame = prepare(projection) if prepare is not None else projection
+        with persisted(label_splits(frame, target_col)) as labeled:
+            yield scan_persisted(labeled)
+
+
+def _export(
+    df: DataFrame,
     feature_cols: tuple[str, ...],
     target_col: str,
     out_dir: str,
+    prepare: Callable[[DataFrame], DataFrame],
 ) -> dict[str, str]:
-    """Write X/y per split and the val/test timestamps. All eight writes
-    read one persisted evaluation of ``labeled``, so the view runs once
-    and row i of X_<split>, y_<split> and timestamps_<split> is the same
-    row."""
+    """Split the view's feature, target and time columns once and write
+    X/y per split and the val/test timestamps. All eight writes read the
+    one persisted labeled frame, so row i of X_<split>, y_<split> and
+    timestamps_<split> is the same row."""
     paths: dict[str, str] = {}
-    present = [c for c in feature_cols if c in labeled.columns]
-    cols = [*present, target_col, "time", "split"]
-    with persisted(labeled.select(*cols)) as surface:
+    cols = [c for c in (*feature_cols, target_col, "time") if c in df.columns]
+    with persisted_splits(df, target_col, cols, prepare) as labeled:
+        present = [c for c in feature_cols if c in labeled.columns]
         for split in ("train", "val", "test"):
-            part = surface.filter(F.col("split") == split)
+            part = labeled.filter(F.col("split") == split)
             xp = os.path.join(out_dir, f"X_{split}.parquet")
             yp = os.path.join(out_dir, f"y_{split}.parquet")
             part.select(*present).write.mode("overwrite").parquet(xp)
@@ -230,10 +263,13 @@ def run_export(
     """Model B export: leakage check -> training_features -> freshness ->
     70/15/15 chronological split -> parquet (export_pipeline.py:296-369)."""
     validate_no_leakage(list(FEATURE_COLS), TARGET_COL)
-    df = spark.sql("SELECT * FROM training_features")
-    freshness_check(df, "time", clock, max_age_hours)
-    labeled = label_splits(df, TARGET_COL)
-    return _write_splits(labeled, FEATURE_COLS, TARGET_COL, out_dir)
+    return _export(
+        spark.sql("SELECT * FROM training_features"),
+        FEATURE_COLS,
+        TARGET_COL,
+        out_dir,
+        lambda base: freshness_check(base, "time", clock, max_age_hours),
+    )
 
 
 def run_load_export(
@@ -242,9 +278,16 @@ def run_load_export(
     """Model A export: holiday flags + temp_deviation -> NaN-target drop
     -> rolling date split (test=7d, val=14d) (export_pipeline.py:563-678)."""
     validate_no_leakage(list(LOAD_FEATURE_COLS), LOAD_TARGET_COL)
-    df = spark.sql("SELECT * FROM winterthur_net_load_features")
-    freshness_check(df, "time", clock, max_age_hours)
-    span = df.agg(F.min(F.to_date("time")), F.max(F.to_date("time"))).collect()[0]
-    dim = holiday_dim(spark, span[0], span[1])
-    labeled = label_splits(enrich_load_features(df, dim), LOAD_TARGET_COL)
-    return _write_splits(labeled, LOAD_FEATURE_COLS, LOAD_TARGET_COL, out_dir)
+
+    def prepare(base: DataFrame) -> DataFrame:
+        freshness_check(base, "time", clock, max_age_hours)
+        span = base.agg(F.min(F.to_date("time")), F.max(F.to_date("time"))).collect()[0]
+        return enrich_load_features(base, holiday_dim(spark, span[0], span[1]))
+
+    return _export(
+        spark.sql("SELECT * FROM winterthur_net_load_features"),
+        LOAD_FEATURE_COLS,
+        LOAD_TARGET_COL,
+        out_dir,
+        prepare,
+    )

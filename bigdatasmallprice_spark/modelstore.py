@@ -60,6 +60,31 @@ def save_model(
     )
 
 
+def new_doc(name: str, version: str | None, body: dict) -> dict:
+    """An artifact document held in memory, without metrics yet:
+    version stamping/validation and the name beside the model ``body``.
+    Training scores its test split from such documents (``score_doc``)
+    and writes each one once, metrics included (``write_doc``)."""
+    version = version or _version_stamp()
+    if not re.fullmatch(r"\d{8}T\d{6}", version):
+        raise ValueError(f"version {version!r} must be a YYYYMMDDTHHMMSS stamp")
+    return {"name": name, "version": version, "metrics": None, **body}
+
+
+def write_doc(model_dir: str, doc: dict) -> str:
+    """Write an artifact document: tmp-write + atomic os.replace (readers
+    never see a partial artifact). Every model kind publishes through
+    here so the write protocol cannot fork."""
+    os.makedirs(model_dir, exist_ok=True)
+    stem = f"{doc['name']}_v{doc['version']}.json"
+    path = os.path.join(model_dir, stem)
+    tmp = os.path.join(model_dir, f".{stem}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(doc, f, sort_keys=True)
+    os.replace(tmp, path)
+    return path
+
+
 def _write_artifact(
     model_dir: str,
     name: str,
@@ -67,26 +92,12 @@ def _write_artifact(
     metrics: DataFrame | None,
     extra: dict,
 ) -> str:
-    """Shared artifact-write tail: version stamping/validation, doc
-    assembly, tmp-write + atomic os.replace (readers never see a
-    partial artifact). Both model kinds publish through here so the
-    write protocol cannot fork."""
-    os.makedirs(model_dir, exist_ok=True)
-    version = version or _version_stamp()
-    if not re.fullmatch(r"\d{8}T\d{6}", version):
-        raise ValueError(f"version {version!r} must be a YYYYMMDDTHHMMSS stamp")
-    doc = {
-        "name": name,
-        "version": version,
-        "metrics": [r.asDict() for r in metrics.collect()] if metrics is not None else None,
-        **extra,
-    }
-    path = os.path.join(model_dir, f"{name}_v{version}.json")
-    tmp = os.path.join(model_dir, f".{name}_v{version}.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(doc, f, sort_keys=True)
-    os.replace(tmp, path)
-    return path
+    """Shared save tail: ``new_doc``, the metrics frame collected into
+    it, ``write_doc``."""
+    doc = new_doc(name, version, extra)
+    if metrics is not None:
+        doc["metrics"] = [r.asDict() for r in metrics.collect()]
+    return write_doc(model_dir, doc)
 
 
 def save_gbt_model(
@@ -156,25 +167,12 @@ def save_gbt_full_model(
     )
 
 
-def save_mean_model(
-    model_dir: str,
-    name: str,
-    mean: float,
-    metrics: DataFrame | None = None,
-    version: str | None = None,
-) -> str:
-    """Persist the naive baseline — always predict the training-split
-    target mean — as a ``kind: "mean"`` artifact (the reference's
+def mean_body(mean: float) -> dict:
+    """The model body of the naive baseline, a ``kind: "mean"`` artifact:
+    always predict the training-split target mean (the reference's
     DummyRegressor(strategy="mean"), train.py:36-41, saved as
-    naive/naive_load joblibs). One float; scoring is a literal
-    column."""
-    return _write_artifact(
-        model_dir,
-        name,
-        version,
-        metrics,
-        {"kind": "mean", "mean": float(mean), "coefficients": []},
-    )
+    naive/naive_load joblibs). One float; scoring is a literal column."""
+    return {"kind": "mean", "mean": float(mean), "coefficients": []}
 
 
 def find_latest(model_dir: str, name: str) -> str | None:
@@ -218,7 +216,20 @@ def score_latest(
     path = find_latest(model_dir, name)
     if path is None:
         raise FileNotFoundError(f"no artifact for model {name!r} in {model_dir}")
-    doc = load_model(path)
+    return score_doc(spark, load_model(path), df, key, ts_col, feature_cols)
+
+
+def score_doc(
+    spark: SparkSession,
+    doc: dict,
+    df: DataFrame,
+    key: str,
+    ts_col: str = "ts",
+    feature_cols: list[str] | None = None,
+) -> DataFrame:
+    """``score_latest``'s splice for an artifact document already in
+    hand: loaded from the store, or built by a training task that has
+    not written it yet."""
     if doc.get("kind") == "gbt_full":
         from bigdatasmallprice_spark.operators.gbt import predict_full_cents_column
         from bigdatasmallprice_spark.queries.core import cents

@@ -72,8 +72,9 @@ APE_MICRO = (
 )
 
 
-def linear_moments(df: DataFrame, key: str, x1, x2, y) -> DataFrame:
-    """Exact integer moment sums per key — the only shuffle of the fit."""
+def linear_moments(df: DataFrame, key: str, x1, x2, y, *extra: Column) -> DataFrame:
+    """Exact integer moment sums per key — the only shuffle of the fit.
+    ``extra`` aggregates (aliased) ride the same aggregation."""
     x1 = x1.cast("long")
     x2 = x2.cast("long")
     return df.groupBy(key).agg(
@@ -86,18 +87,23 @@ def linear_moments(df: DataFrame, key: str, x1, x2, y) -> DataFrame:
         F.sum(y).alias("sy"),
         F.sum(x1 * y).alias("s1y"),
         F.sum(x2 * y).alias("s2y"),
+        *extra,
     )
 
 
+_MOMENTS = ("n", "s1", "s2", "s11", "s12", "s22", "sy", "s1y", "s2y")
+
+
 def linear_coefficients(moments: DataFrame, key: str) -> DataFrame:
-    """Cramer's-rule solve of the 3×3 normal equations (cents units)."""
+    """Cramer's-rule solve of the 3×3 normal equations (cents units).
+    Columns of ``moments`` beyond the key and the moment sums pass
+    through after the coefficients."""
+    extra = [c for c in moments.columns if c != key and c not in _MOMENTS]
     md = moments.select(
         key,
         "n",
-        *[
-            F.col(c).cast("double").alias(c + "d")
-            for c in ("n", "s1", "s2", "s11", "s12", "s22", "sy", "s1y", "s2y")
-        ],
+        *[F.col(c).cast("double").alias(c + "d") for c in _MOMENTS],
+        *extra,
     )
     return md.select(
         key,
@@ -105,18 +111,25 @@ def linear_coefficients(moments: DataFrame, key: str) -> DataFrame:
         F.expr(B0C).alias("b0c"),
         F.expr(B1C).alias("b1c"),
         F.expr(B2C).alias("b2c"),
+        *extra,
     )
 
 
 def fit_linear_hour_dow(
-    df: DataFrame, key: str, ts_col: str = "ts", value_col: str = "value"
+    df: DataFrame,
+    key: str,
+    ts_col: str = "ts",
+    value_col: str = "value",
+    *extra: Column,
 ) -> DataFrame:
     """Per-key linear model  y_cents ~ b0 + b1*hour + b2*dow  (dow is
-    Postgres-style 1=Sunday..7, matching the reference's calendar shim)."""
+    Postgres-style 1=Sunday..7, matching the reference's calendar shim).
+    ``extra`` aggregates over the same rows come out beside the
+    coefficients, from the fit's one aggregation."""
     x1 = F.hour(F.col(ts_col))
     x2 = F.dayofweek(F.col(ts_col))
     y = _cents(F.col(value_col))
-    return linear_coefficients(linear_moments(df, key, x1, x2, y), key)
+    return linear_coefficients(linear_moments(df, key, x1, x2, y, *extra), key)
 
 
 def mape_gate(

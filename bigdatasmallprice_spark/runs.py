@@ -21,9 +21,10 @@ etl_pipeline_dag.py:146), which still execute after a failure.
 
 Everything here is driver-side bookkeeping (O(#runs) dicts under one
 lock); all data movement stays inside the task callables, which close
-over engine operators (ingest.backfill_dates, export.run_export,
-linreg/gbt fits). At scale the registry is exactly as big as the run
-history it retains — state per run is a few hundred bytes, never rows.
+over engine operators (ingest.backfill_dates, export.run_export, the
+training tasks' naive and linear fits). At scale the registry is
+exactly as big as the run history it retains — state per run is a few
+hundred bytes, never rows.
 """
 
 from __future__ import annotations
@@ -282,7 +283,8 @@ def default_dags(
       when ``export_dir`` is set (feature_pipeline_dag.py:63-78).
     - ``bdsp_training_daily`` (manual): ``run_training`` fits the EPEX
       price model and ``train_load_model`` the Winterthur net-load
-      model (training_dag.py:74-93); both persist versioned artifacts
+      model, each beside its naive baseline (training_dag.py:74-93);
+      each task writes every artifact once, with its test metrics,
       through modelstore, so a completed run is immediately servable
       by /api/forecast and /api/predict.
     """
@@ -352,56 +354,55 @@ def default_dags(
         MAE/RMSE/masked-MAPE metrics per model; the split rules are
         the export module's, via serving.labeled_model_surface).
 
-        Each model publishes, scores the test split through the real
-        serving splice (score_latest), then republishes the same
-        version carrying the metrics — so the metrics served by
-        /api/models/status were measured through the exact path
-        /api/predict uses.
-
-        The task evaluates its feature view once: the labeled surface is
-        pruned to the three columns the mean, the fit, score_latest and
-        regression_metrics read (``time``, the target, ``split``) and
-        persisted; every action of the task reads that cache, which is
-        released when the task exits, also when it fails."""
-        from bigdatasmallprice_spark.caching import persisted
-        from bigdatasmallprice_spark.functions.metrics import regression_metrics
+        The task evaluates its feature view once: the labeled surface
+        is the view's (time, target) projection, persisted before the
+        split rule runs, labeled and persisted again for the task's
+        actions. One aggregation over the train split yields the naive
+        mean and the linear fit. Both models are held as artifact
+        documents in memory and score the test split through the
+        serving splice (modelstore.score_doc, what score_latest runs
+        after loading the newest artifact), and one aggregation
+        measures both models' metrics. Each artifact is then written
+        once, metrics included, so /api/models/status never reads an
+        artifact without them. The caches are released when the task
+        exits, also when it fails."""
+        from bigdatasmallprice_spark.functions.metrics import (
+            exact_mean,
+            regression_metrics,
+        )
         from bigdatasmallprice_spark.serving import labeled_model_surface
 
-        labeled, target = labeled_model_surface(spark, model_name)
         v = _version(conf)
-        with persisted(labeled.select("time", target, "split")) as surface:
-            train = surface.filter(F.col("split") == "train").withColumn(
-                "k", F.lit("all")
+        with labeled_model_surface(spark, model_name) as (surface, target):
+            train, test = (
+                surface.filter(F.col("split") == s).withColumn("k", F.lit("all"))
+                for s in ("train", "test")
             )
-            test = surface.filter(F.col("split") == "test").withColumn(
-                "k", F.lit("all")
-            )
-
-            def _publish(save, name):
-                save(metrics=None)
-                m = regression_metrics(
-                    modelstore.score_latest(
-                        spark, model_dir, name, test, "k", ts_col="time"
-                    ),
-                    target,
-                    "prediction",
-                )
-                return save(metrics=m)
-
-            mean = train.agg(F.avg(target)).collect()[0][0]
-            _publish(
-                lambda metrics: modelstore.save_mean_model(
-                    model_dir, naive_name, mean or 0.0, metrics=metrics, version=v
+            mean_col = exact_mean(F.col(target)).alias("mean")
+            fit = fit_linear_hour_dow(train, "k", "time", target, mean_col).collect()
+            if not fit:
+                raise ValueError(f"{model_name}: the train split is empty")
+            coef = fit[0].asDict()
+            mean = coef.pop("mean")
+            docs = {
+                naive_name: modelstore.new_doc(
+                    naive_name, v, modelstore.mean_body(mean or 0.0)
                 ),
-                naive_name,
+                model_name: modelstore.new_doc(model_name, v, {"coefficients": [coef]}),
+            }
+            naive, linear = (
+                modelstore.score_doc(spark, doc, test, "k", ts_col="time")
+                .withColumn("model", F.lit(name))
+                for name, doc in docs.items()
             )
-            coef = fit_linear_hour_dow(train, "k", ts_col="time", value_col=target)
-            return _publish(
-                lambda metrics: modelstore.save_model(
-                    model_dir, model_name, coef, metrics=metrics, version=v
-                ),
-                model_name,
-            )
+            scored = naive.unionByName(linear)
+            for r in regression_metrics(
+                scored, target, "prediction", ["model"]
+            ).collect():
+                m = r.asDict()
+                docs[m.pop("model")]["metrics"] = [m]
+        modelstore.write_doc(model_dir, docs[naive_name])
+        return modelstore.write_doc(model_dir, docs[model_name])
 
     def _train_price(conf: dict) -> str:
         return _train_surface(conf, "model_epex", "naive")

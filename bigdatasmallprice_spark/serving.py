@@ -10,6 +10,8 @@ routes call.
 from __future__ import annotations
 
 import datetime as dt
+from collections.abc import Iterable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -284,21 +286,28 @@ def forecast_tariff(
     return row.asDict()
 
 
-def labeled_model_surface(spark: SparkSession, model_name: str):
-    """(labeled frame, target column) for a model surface: ``*_load``
-    names -> the net-load view, everything else -> training_features,
-    each labeled by export.label_splits, the one split rule (D4) that
-    export, training (runs.py's dags) and validation share."""
+@contextmanager
+def labeled_model_surface(
+    spark: SparkSession, model_name: str, cols: Iterable[str] = ()
+):
+    """Yield (labeled frame, target column) for a model surface: ``*_load``
+    names -> the net-load view, everything else -> training_features.
+    The view's ``time``, target and ``cols`` columns are evaluated once,
+    labeled by export.label_splits (the one split rule, D4, that export,
+    training and validation share) and persisted for the block
+    (export.persisted_splits)."""
     from bigdatasmallprice_spark.export import (
         LOAD_TARGET_COL,
         TARGET_COL,
-        label_splits,
+        persisted_splits,
     )
 
     is_load = model_name.endswith("_load")
     view = "winterthur_net_load_features" if is_load else "training_features"
     target = LOAD_TARGET_COL if is_load else TARGET_COL
-    return label_splits(_view(spark, view), target), target
+    keep = list(dict.fromkeys(["time", target, *cols]))
+    with persisted_splits(_view(spark, view), target, keep) as labeled:
+        yield labeled, target
 
 
 def model_validation(
@@ -315,11 +324,11 @@ def model_validation(
     SAME validation slice from the feature view with the export
     module's split rules (D4 — 70/15/15 chronological for the EPEX
     price surface, rolling last-7d/14d for the net-load surface) and
-    scores it through modelstore.score_latest, so one split
-    implementation serves export, training, and this endpoint. The
-    series is stride-downsampled to <= ``max_points`` rows (O7, the
-    reference's main.py:1038-1045 chart cap) BEFORE collect — only the
-    chart payload ever reaches the driver.
+    scores it with the newest artifact through modelstore.score_doc,
+    so one split implementation serves export, training, and this
+    endpoint. The series is stride-downsampled to <= ``max_points`` rows
+    (O7, the reference's main.py:1038-1045 chart cap) BEFORE collect —
+    only the chart payload ever reaches the driver.
 
     Raises FileNotFoundError when no artifact exists for the name
     (-> 503, the engine's standing no-model status) — checked FIRST,
@@ -328,25 +337,28 @@ def model_validation(
     per poll. Names resolve to a surface by suffix (``*_load`` -> the
     net-load view, else the price view), mirroring the reference's
     model registry where the artifact file IS the name whitelist."""
-    from bigdatasmallprice_spark.modelstore import find_latest, load_model, score_latest
+    from bigdatasmallprice_spark.modelstore import find_latest, load_model, score_doc
 
     path = find_latest(model_dir, model_name)
     if path is None:
         raise FileNotFoundError(f"no artifact for model {model_name!r} in {model_dir}")
     doc = load_model(path)
 
-    labeled, target = labeled_model_surface(spark, model_name)
-    val = labeled.filter(F.col("split") == "val").withColumn("k", F.lit("all"))
-    scored = score_latest(spark, model_dir, model_name, val, "k", ts_col="time")
-    chart = stride_downsample(
-        scored.select("time", F.col(target).alias("y_true"), "prediction")
-        # rows the chart cannot plot: a null target (unlabeled tail
-        # hours the B-surface split keeps) or a null prediction
-        .na.drop(subset=["y_true", "prediction"]),
-        ["time"],
-        max_points,
-    )
-    rows = chart.collect()
+    # a self-describing boosted artifact scores from raw view columns
+    with labeled_model_surface(
+        spark, model_name, doc.get("feature_cols") or ()
+    ) as (labeled, target):
+        val = labeled.filter(F.col("split") == "val").withColumn("k", F.lit("all"))
+        scored = score_doc(spark, doc, val, "k", ts_col="time")
+        chart = stride_downsample(
+            scored.select("time", F.col(target).alias("y_true"), "prediction")
+            # rows the chart cannot plot: a null target (unlabeled tail
+            # hours the B-surface split keeps) or a null prediction
+            .na.drop(subset=["y_true", "prediction"]),
+            ["time"],
+            max_points,
+        )
+        rows = chart.collect()
     return {
         "model_name": model_name,
         "n_points": len(rows),

@@ -101,11 +101,14 @@ def _training_tasks(spark, model_dir):
 
 
 def test_training_task_job_budget(domain, tmp_path):
-    """Each training task evaluates its labeled surface once, into a
-    persisted (time, target, split) frame that the mean, both saves, the
-    scoring and the metrics read. Budgets are the counts measured on this
-    fixture; evaluating the view per action took 66 and 21 jobs."""
-    budget = {"run_training": 25, "train_load_model": 16}
+    """Each training task evaluates its view's (time, target) projection
+    once, splits the cached projection, and then fires one collect for the
+    fit (naive mean and linear moments together) and one for both models'
+    metrics (plus rolling_split_bounds on the load surface). Budgets are
+    the counts measured on this fixture; evaluating the view per action
+    took 66 and 21 jobs, and splitting the uncached view while saving and
+    scoring each model twice took 25 and 16."""
+    budget = {"run_training": 23, "train_load_model": 11}
     for task_id, fn in _training_tasks(domain, str(tmp_path)).items():
         with job_group(domain, f"train-{task_id}") as ids:
             assert fn({})
@@ -129,15 +132,44 @@ def test_training_and_export_release_their_caches(domain, tmp_path):
     assert _leaked(spark, base) == (set(), False)
 
 
-def test_failed_training_task_releases_its_cache(domain, tmp_path):
-    """The task fails at its first save, after the mean has been computed
-    over the persisted surface: the entry is released all the same."""
+def test_scan_persisted_recomputes_a_released_cache(domain):
+    """A cache entry released from under a scan_persisted frame, as another
+    thread's released_caches would release it, is recomputed through the
+    scan's lineage: the scan returns the same rows, it does not fail."""
+    from bigdatasmallprice_spark.caching import (
+        _unpersist_added,
+        persisted,
+        scan_persisted,
+    )
+
+    spark = domain
+    df = spark.table("training_features").select("time", "price_eur_mwh")
+    want = sorted(map(repr, df.collect()))
+    before = persistent_rdd_ids(spark)
+    with persisted(df) as cached:
+        scan = scan_persisted(cached)
+        assert sorted(map(repr, scan.collect())) == want
+        assert _unpersist_added(spark, before) > 0
+        assert sorted(map(repr, scan.collect())) == want
+
+
+def test_failed_training_task_releases_its_cache(domain, tmp_path, monkeypatch):
+    """The task fails inside its labeled-surface block, after the fit has
+    filled both cache entries (the projection and the labeled frame) and
+    before any artifact is written: both entries are released all the
+    same, and nothing is published."""
+    from bigdatasmallprice_spark import modelstore
+
+    def boom(*_args, **_kwargs):
+        raise RuntimeError("scoring failed")
+
     spark = domain
     spark.catalog.clearCache()
     base = persistent_rdd_ids(spark)
-    model_dir = tmp_path / "not_a_dir"
-    model_dir.write_text("")
+    model_dir = tmp_path / "models"
+    monkeypatch.setattr(modelstore, "score_doc", boom)
     for task_id, fn in _training_tasks(spark, str(model_dir)).items():
-        with pytest.raises(OSError):
+        with pytest.raises(RuntimeError, match="scoring failed"):
             fn({})
         assert _leaked(spark, base) == (set(), False), task_id
+    assert not model_dir.exists()
