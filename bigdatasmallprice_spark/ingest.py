@@ -8,25 +8,27 @@ backfill over already-ingested days inserts nothing (ON CONFLICT DO
 NOTHING, timescale_client.py:60-64).
 
 A feed-day is a few hundred records that are already a Python list on
-the driver, so what can be answered from that list is answered there,
-not by a Spark job: the in-batch dedup (first record per key wins, the
-reference's ``executemany`` order) and the set of ``p_date`` partitions
-the batch touches (``catalog.bronze_partition_dates``, the rule
-``write_bronze`` applies). The deduped list reaches the JVM as one Arrow
-table (``session.local_frame``), a local relation that no Python worker
-has to pickle. Spark is asked only for the idempotency anti-join and the
-write. The anti-join reads the touched ``p_date=`` directories that
-exist, named directly and read with the batch's schema: no listing of
-the whole table, no schema inference, so its cost does not grow with the
-table's history.
+the driver, so everything but the write is answered there, not by a
+Spark job. The records are checked and converted once into an Arrow
+table (``session.arrow_rows``); a malformed record raises before any
+partition is read. The in-batch dedup (first record per key wins, the
+reference's ``executemany`` order) runs over that table's keys; the set
+of ``p_date`` partitions the batch touches comes from the records' times
+(``catalog.bronze_partition_dates``, the rule ``write_bronze``
+applies). The idempotency check is the reference's unique-index probe,
+not a join: the key columns of the touched ``p_date=`` directories that
+exist are read with ``pyarrow.parquet`` into a set, and a record is new
+when its key is not in it. Keys compare as Spark's ``left_anti`` join
+compares them (``_keys``), so the answer is the join's. The read is
+bounded by the partitions the batch touches, the same days whose rows
+the driver already holds, and does not grow with the table's history.
 
-A feed-day that touches at least one existing partition pays the
-anti-join and its count before the write. Only a feed-day that touches
-no existing partition skips them and costs the write alone. Which case
-applies depends on how the feed's day lines up with the partition
-dates: a feed that delivers CET days into UTC partitions touches the
-previous date's partition, which the previous day's run wrote, so a
-daily run of such a feed pays the anti-join every day.
+Spark does only the write: the new rows reach the JVM as one Arrow local
+relation (``session.local_frame``) and ``write_bronze`` appends them. So
+a feed-day that adds rows costs one job, whether or not it touches a
+partition an earlier run wrote (a feed that delivers CET days into UTC
+partitions touches the previous date's every day); a feed-day whose
+rows are all stored already, such as a re-run, costs none.
 """
 
 from __future__ import annotations
@@ -34,12 +36,14 @@ from __future__ import annotations
 import os
 import time
 from collections.abc import Callable, Iterable, Sequence
-from datetime import date, datetime, timezone
+from datetime import date
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 
 from bigdatasmallprice_spark.catalog import bronze_partition_dates, write_bronze
-from bigdatasmallprice_spark.session import local_frame
+from bigdatasmallprice_spark.session import arrow_rows, local_frame
 
 
 def fetch_with_retry(
@@ -64,26 +68,57 @@ def fetch_with_retry(
     return None
 
 
-def _as_utc(v):
-    """A record value with datetimes as aware UTC instants. A naive
-    datetime is local time on the driver, as ``local_frame`` reads it;
-    once aware, no later step depends on a process's zone."""
-    if isinstance(v, datetime):
-        return v.astimezone(timezone.utc)
-    return v
+# Every NaN in a key, as one value: Spark's join keys make NaN equal NaN.
+_NAN = object()
 
 
-def _first_per_key(records: list[dict], keys: Sequence[str]) -> list[dict]:
-    """Keep the first record per key in list order (executemany applies
-    rows in order; later conflicts are ignored)."""
+def _keys(table: pa.Table, keys: Sequence[str]) -> list[tuple]:
+    """Each row's key as Spark's equi-join compares it: a timestamp as UTC
+    epoch microseconds, whatever unit the column stores; every NaN as one
+    value; -0.0 as 0.0 (Python's ``==`` and ``hash`` already equate
+    them). A null stays None; a key that holds one matches no stored key.
+    """
+    cols = []
+    for k in keys:
+        col = table.column(k)
+        if pa.types.is_timestamp(col.type):
+            col = col.cast(pa.timestamp("us", col.type.tz), safe=False).cast(pa.int64())
+        values = col.to_pylist()
+        if pa.types.is_floating(col.type):
+            values = [_NAN if v != v else v for v in values]
+        cols.append(values)
+    return list(zip(*cols))
+
+
+def _first_per_key(keys: list[tuple]) -> list[int]:
+    """The index of the first row per key, in list order (executemany
+    applies rows in order; later conflicts are ignored)."""
     seen: set[tuple] = set()
     out = []
-    for r in records:
-        k = tuple(r[c] for c in keys)
+    for i, k in enumerate(keys):
         if k not in seen:
             seen.add(k)
-            out.append(r)
+            out.append(i)
     return out
+
+
+def _stored_keys(bronze_path: str, dates: Iterable[date], keys: Sequence[str]) -> set[tuple]:
+    """The null-free keys stored in the ``p_date=`` directories of these
+    dates that exist: the key columns of every file Spark would read there
+    (it skips names starting with ``_`` or ``.``). INT96 timestamps, which
+    Spark writes by default, are read at microsecond precision, as Spark
+    reads them."""
+    stored: set[tuple] = set()
+    for t in dates:
+        part = os.path.join(bronze_path, f"p_date={t.isoformat()}")
+        if not os.path.isdir(part):
+            continue
+        for name in os.listdir(part):
+            if name.startswith(("_", ".")):
+                continue
+            with pq.ParquetFile(os.path.join(part, name), coerce_int96_timestamp_unit="us") as f:
+                stored.update(k for k in _keys(f.read(columns=list(keys)), keys) if None not in k)
+    return stored
 
 
 def backfill_dates(
@@ -98,7 +133,7 @@ def backfill_dates(
     sleep: Callable[[float], None] = time.sleep,
 ) -> dict[date, int]:
     """Fetch each date, dedup within the batch (first row per key wins),
-    anti-join against the existing bronze partitions the batch touches,
+    drop the rows whose key the touched bronze partitions already hold,
     append only genuinely-new rows. Returns rows inserted per date;
     re-runs insert 0."""
     inserted: dict[date, int] = {}
@@ -107,29 +142,15 @@ def backfill_dates(
         if not records:
             inserted[d] = 0
             continue
-        records = _first_per_key([{c: _as_utc(v) for c, v in r.items()} for r in records], keys)
-        # The batch is an Arrow local relation: no Python worker runs.
-        # Spark splits a LocalTableScan over up to defaultParallelism
-        # tasks, so coalesce(1) keeps a feed-day to one file per p_date.
-        batch = local_frame(spark, records, schema).coalesce(1)
-        touched = sorted(bronze_partition_dates(spark, (r[time_col] for r in records)))
-        dirs = [
-            p
-            for p in (os.path.join(bronze_path, f"p_date={t.isoformat()}") for t in touched)
-            if os.path.isdir(p)
-        ]
-        if dirs:
-            existing = (
-                spark.read.schema(batch.schema)
-                .option("basePath", bronze_path)
-                .parquet(*dirs)
-                .select(*keys)
-            )
-            new_rows = batch.join(existing, on=list(keys), how="left_anti")
-            n = new_rows.count()
-        else:
-            new_rows, n = batch, len(records)
-        if n:
-            write_bronze(new_rows, bronze_path, time_col)
-        inserted[d] = n
+        table = arrow_rows(records, schema)
+        key = _keys(table, keys)
+        touched = bronze_partition_dates(spark, (r[time_col] for r in records))
+        stored = _stored_keys(bronze_path, touched, keys)
+        new = [i for i in _first_per_key(key) if key[i] not in stored]
+        if new:
+            # Spark splits a LocalTableScan over up to defaultParallelism
+            # tasks, so coalesce(1) keeps a feed-day to one file per p_date.
+            batch = local_frame(spark, table.take(new), schema).coalesce(1)
+            write_bronze(batch, bronze_path, time_col)
+        inserted[d] = len(new)
     return inserted

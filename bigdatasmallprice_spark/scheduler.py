@@ -76,7 +76,7 @@ def backfill_job(
     """Adapter for daily-cadence backfills (backfill_dag.py:182-228):
     turns the policy window into the list of calendar dates it covers
     and hands them to ``do_backfill`` (typically a closure over
-    ingest.backfill_dates, whose anti-join makes re-runs insert 0)."""
+    ingest.backfill_dates, whose stored-key check makes re-runs insert 0)."""
 
     def run(start: dt.datetime, end: dt.datetime, now: dt.datetime) -> Any:
         # the policy window is half-open [start, end): a window ending

@@ -14,7 +14,8 @@ Defaults chosen for correctness-parity with the reference and for scale:
 - Arrow enabled for the few pandas_udf paths (model scoring, multimodal).
 
 ``local_frame`` is the one way the served code turns rows it already
-holds on the driver into a frame.
+holds on the driver into a frame; ``arrow_rows`` is its checked
+conversion, for code that works on the rows as Arrow first.
 """
 
 from __future__ import annotations
@@ -90,21 +91,15 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def local_frame(
-    spark: SparkSession, rows: Iterable[dict | tuple], schema: StructType | str
-) -> DataFrame:
-    """Driver rows (dicts or tuples) as a frame under ``schema`` (a
-    ``StructType`` or a DDL string), handed to the JVM as one Arrow table.
-
-    Below ``spark.sql.execution.arrow.localRelationThreshold`` the table
-    becomes a ``LocalRelation``: projections over it fold at plan time and
-    no Python worker runs, where ``createDataFrame(rows)`` pickles the rows
-    through one. The checks ``createDataFrame`` makes are kept: every row
-    passes the same type verifier (pyarrow alone truncates 1.5 to 1 in an
-    integer field and lets None into a non-nullable one), and a
-    ``TimestampType`` value is made an aware UTC instant first, reading a
-    naive datetime as driver-local time as ``TimestampType.toInternal``
-    does (pyarrow alone would read an offset stamp's wall clock as UTC).
+def arrow_rows(rows: Iterable[dict | tuple], schema: StructType | str) -> pa.Table:
+    """Driver rows (dicts or tuples) as one Arrow table under ``schema``
+    (a ``StructType`` or a DDL string), with the checks
+    ``createDataFrame`` makes: every row passes the same type verifier
+    (pyarrow alone truncates 1.5 to 1 in an integer field and lets None
+    into a non-nullable one), and a ``TimestampType`` value is made an
+    aware UTC instant first, reading a naive datetime as driver-local
+    time as ``TimestampType.toInternal`` does (pyarrow alone would read an
+    offset stamp's wall clock as UTC).
     """
     if isinstance(schema, str):
         schema = _parse_datatype_string(schema)
@@ -117,8 +112,23 @@ def local_frame(
         for col, is_stamp, v in zip(columns, stamps, values):
             col.append(v.astimezone(timezone.utc) if is_stamp and v is not None else v)
     arrow_schema = to_arrow_schema(schema)
-    table = pa.Table.from_arrays(
+    return pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
         schema=arrow_schema,
     )
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[dict | tuple] | pa.Table, schema: StructType | str
+) -> DataFrame:
+    """Driver rows as a frame under ``schema``, handed to the JVM as one
+    Arrow table: ``rows`` are dicts or tuples checked and converted by
+    ``arrow_rows``, or a table ``arrow_rows`` already built.
+
+    Below ``spark.sql.execution.arrow.localRelationThreshold`` the table
+    becomes a ``LocalRelation``: projections over it fold at plan time and
+    no Python worker runs, where ``createDataFrame(rows)`` pickles the rows
+    through one.
+    """
+    table = rows if isinstance(rows, pa.Table) else arrow_rows(rows, schema)
     return spark.createDataFrame(table, schema)

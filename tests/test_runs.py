@@ -251,7 +251,7 @@ def test_backfill_run_ingests_and_reruns_idempotently(spark, orch, token):
     assert final["state"] == "success"
     assert spark.read.parquet(orch["bronze"]).count() == 96  # 2d x 24h x 2
 
-    # re-run the same range: the anti-join inserts nothing new
+    # re-run the same range: every key is stored, so nothing is inserted
     code, out2 = _call(base, "/api/backfill/trigger", "POST", body, token=token)
     assert code == 200
     final2 = _poll_until_done(
