@@ -26,8 +26,9 @@ Route map (reference main.py lines in parentheses):
 The reference's orchestration endpoints proxy Airflow's REST API; here
 they serve the in-process run registry (runs.py), whose default dag
 set mirrors the reference's four dag files and executes real engine
-jobs (ingest backfills, feature exports, model training) on worker
-threads with Airflow's observable state machine.
+jobs (ingest backfills, feature exports, model training) on a pool of
+worker threads, independent tasks concurrently, with Airflow's
+observable state machine.
 
 Every /api/* route requires ``Authorization: Bearer <jwt>`` and mirrors
 the reference's status mapping: 401 invalid/expired token, 404 unknown

@@ -97,10 +97,11 @@ def persisted(df: DataFrame):
 
     It releases only its own entry. ``released_caches`` would instead
     sweep every RDD persisted while the block ran, by any thread, and
-    ``RunRegistry`` runs each DAG run on its own thread while the API
-    serves from others. It does not cut lineage either (``cut_lineage``):
-    a lost or swept block of a persisted frame is recomputed from its
-    plan, where a ``localCheckpoint``'s would fail the job. For the same
+    ``RunRegistry`` runs a DAG's independent tasks concurrently on its
+    pool threads while the API serves from others. It does not cut
+    lineage either (``cut_lineage``): a lost or swept block of a
+    persisted frame is recomputed from its plan, where a
+    ``localCheckpoint``'s would fail the job. For the same
     reason, two blocks that persist the same plan at once (Spark keeps
     one entry per plan) stay correct: the first to exit releases the
     entry and the other recomputes.

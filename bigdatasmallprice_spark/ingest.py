@@ -55,12 +55,18 @@ def fetch_with_retry(
 ) -> list[dict] | None:
     """Bounded exponential-backoff retry (1/2/4 s defaults — the
     reference's 5xx policy). Returns None when the day is unavailable
-    after retries (the ENTSO-E 404 'skip day' path)."""
+    after retries (the ENTSO-E 404 'skip day' path).
+
+    Only a fetch error is retried: ``OSError``, which covers
+    ``ConnectionError``, ``TimeoutError`` and urllib's ``URLError`` /
+    ``HTTPError``. Any other exception, such as a parser's ``TypeError``
+    or ``KeyError``, is a bug that no retry mends: it propagates on the
+    first attempt and fails the task."""
     delay = backoff_s
     for attempt in range(retries + 1):
         try:
             return fetch(d)
-        except Exception:
+        except OSError:
             if attempt == retries:
                 return None
             sleep(delay)

@@ -127,13 +127,15 @@ def dsir_weights(feats: DataFrame, lr: DataFrame) -> DataFrame:
 def o_dsir_chain_sql(
     target_pred: str, doc_source: str = "documents", buckets: int = DSIR_BUCKETS
 ) -> str:
-    """DuckDB twin as CTE text ending in ``dw(doc_id, lw_milli)``."""
+    """DuckDB twin as CTE text ending in ``dw(doc_id, lw_milli)``. CTEs
+    read more than once are MATERIALIZED: DuckDB 1.0 inlines a CTE at
+    each reference."""
     op = DUCK_DIV
     h = _duck_h("'ds:' || w")
     return f"""dtoks AS (
   SELECT doc_id, lang, unnest({_DUCK_TOKS}) AS w FROM {doc_source}
 ),
-dfe AS (
+dfe AS MATERIALIZED (
   SELECT doc_id, lang, {h} % {buckets} AS bucket,
          CAST(COUNT(*) AS BIGINT) AS f
   FROM dtoks GROUP BY 1, 2, 3
@@ -141,7 +143,7 @@ dfe AS (
 dq AS (SELECT bucket, CAST(SUM(f) AS BIGINT) AS cq FROM dfe GROUP BY 1),
 dt AS (SELECT bucket, CAST(SUM(f) AS BIGINT) AS ct FROM dfe
        WHERE {target_pred} GROUP BY 1),
-dbase AS (
+dbase AS MATERIALIZED (
   SELECT dq.bucket, dq.cq,
          COALESCE(dt.ct, CAST(0 AS BIGINT)) AS ct
   FROM dq LEFT JOIN dt ON dt.bucket = dq.bucket
@@ -155,7 +157,7 @@ dlr AS (
            AS BIGINT) AS lr_milli
   FROM dbase CROSS JOIN dtot
 ),
-dw AS (
+dw AS MATERIALIZED (
   SELECT dfe.doc_id,
          CAST(SUM(dfe.f * dlr.lr_milli) AS BIGINT) AS lw_milli
   FROM dfe JOIN dlr ON dlr.bucket = dfe.bucket

@@ -155,18 +155,20 @@ def kn_score(bg: DataFrame, model: dict[str, DataFrame]) -> DataFrame:
 def o_kn_chain_sql(doc_source: str = "documents") -> str:
     """DuckDB twin as CTE text ending in ``kn(doc_id, n_bigrams,
     p_sum_micro, avg_p_micro)``: trains on and scores ``doc_source``
-    with the identical integer chain (zipped-unnest bigrams)."""
+    with the identical integer chain (zipped-unnest bigrams). CTEs read
+    more than once are MATERIALIZED: DuckDB 1.0 inlines a CTE at each
+    reference."""
     op = DUCK_DIV
     return f"""toks AS (
   SELECT doc_id, string_split(text, ' ') AS t FROM {doc_source}
 ),
-bg AS (
+bg AS MATERIALIZED (
   SELECT doc_id,
          unnest(t[1:len(t) - 1]) AS w1,
          unnest(t[2:len(t)]) AS w2
   FROM toks WHERE len(t) >= 2
 ),
-bc AS (
+bc AS MATERIALIZED (
   SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c12 FROM bg GROUP BY 1, 2
 ),
 ctx AS (
@@ -193,7 +195,7 @@ kna AS (
          CAST(SUM({_inv_expr(op)}) AS BIGINT) AS inv_sum
   FROM pm GROUP BY 1
 ),
-kn AS (
+kn AS MATERIALIZED (
   SELECT doc_id, n_bigrams, p_sum_micro,
          round(CAST(p_sum_micro AS DOUBLE) / n_bigrams, 6) AS avg_p_micro,
          CAST({rdiv("n_bigrams * " + str(10**12), "inv_sum", op)} AS BIGINT)

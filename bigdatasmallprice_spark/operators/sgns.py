@@ -436,7 +436,8 @@ def o_sgns_core_sql(
     corpus prefix: the walk corpus for graph embeddings
     (o_sgns_chain_sql), token co-occurrence windows for word
     embeddings (operators/word2vec.py) — the SAME trajectory trains
-    both, which is the point of SGNS."""
+    both, which is the point of SGNS. CTEs read more than once are
+    MATERIALIZED: DuckDB 1.0 inlines a CTE at each reference."""
     op = DUCK_DIV
     nkey = (
         "'ng:' || CAST(center AS VARCHAR) || ':' || "
@@ -502,7 +503,7 @@ em{t} AS (
     FROM zc{t}
   )
 ),
-g{t} AS (
+g{t} AS MATERIALIZED (
   SELECT pd.center, pd.other, pd.dim,
          CAST({du_expr(op)} AS BIGINT) AS du,
          CAST({dv_expr(op)} AS BIGINT) AS dv

@@ -159,11 +159,13 @@ def o_word2vec_chain_sql(
     dim: int | None = None,
 ) -> str:
     """DuckDB twin: the token-window prefix in front of the shared
-    corpus-independent SGNS core. Ends with ``emb{iters}``."""
+    corpus-independent SGNS core. Ends with ``emb{iters}``. CTEs read
+    more than once are MATERIALIZED: DuckDB 1.0 inlines a CTE at each
+    reference."""
     prefix = f"""wtoks AS (
   SELECT doc_id, {_DUCK_TOKS} AS t FROM {doc_source}
 ),
-wpos AS (
+wpos AS MATERIALIZED (
   SELECT doc_id, unnest(t) AS wd, generate_subscripts(t, 1) AS pos
   FROM wtoks
 ),
@@ -174,7 +176,7 @@ sgp AS MATERIALIZED (
    AND abs(a.pos - b.pos) <= {window}
   GROUP BY 1, 2
 ),
-nodes AS (SELECT DISTINCT wd AS node FROM wpos)"""
+nodes AS MATERIALIZED (SELECT DISTINCT wd AS node FROM wpos)"""
     from bigdatasmallprice_spark.operators.sgns import EMB_DIM
 
     return prefix + ",\n" + o_sgns_core_sql(

@@ -1771,7 +1771,13 @@ def _o_v3_chain() -> str:
     post-semantic-dedup survivor set) — shared by the v3/served oracle
     (which adds the attrition aggregates) and the training-export
     oracle (which adds tokenize -> mixture -> pack on top), so the
-    replayed funnel cannot fork between them."""
+    replayed funnel cannot fork between them.
+
+    Every CTE that the chain's readers reference more than once is
+    ``AS MATERIALIZED``, here and in the chains it composes (KN, DSIR,
+    word2vec/SGNS, k-means): DuckDB 1.0 inlines an unmaterialized CTE
+    at each reference, so a shared prefix re-ran once per reader
+    (sf0.001: this oracle 11.4 s -> 0.65 s, same rows)."""
     from bigdatasmallprice_spark.operators.distill import DUCK_DIV, rdiv
     from bigdatasmallprice_spark.operators.dsir import o_dsir_chain_sql
     from bigdatasmallprice_spark.operators.knlm import o_kn_chain_sql
@@ -1809,7 +1815,7 @@ def _o_v3_chain() -> str:
 {o_dsir_chain_sql(_DSIR_TARGET)},
 {o_word2vec_chain_sql()},
 {o_doc_embeddings_sql()},
-hm_thr AS (SELECT CAST({rdiv('SUM(hm_p_micro)', 'COUNT(*)', op)} AS BIGINT)
+hm_thr AS MATERIALIZED (SELECT CAST({rdiv('SUM(hm_p_micro)', 'COUNT(*)', op)} AS BIGINT)
              AS thr FROM kn),
 lw_thr AS (SELECT CAST({rdiv('SUM(lw_milli)', 'COUNT(*)', op)} AS BIGINT)
              AS thr FROM dw),
@@ -1821,7 +1827,7 @@ basev2 AS (
   LEFT JOIN kn ON kn.doc_id = d.doc_id
   LEFT JOIN dw ON dw.doc_id = d.doc_id
 ),
-gated AS (
+gated AS MATERIALIZED (
   SELECT *,
          (f_wc + f_mwl + f_stop + f_ttr = 0) AS g_pass,
          (f_wc + f_mwl + f_stop + f_ttr = 0
@@ -1838,7 +1844,7 @@ survv2 AS (
   SELECT *, MIN(doc_id) OVER (PARTITION BY bag_fp) AS keeper
   FROM gated WHERE d_pass
 ),
-canonv3 AS (SELECT * FROM survv2 WHERE doc_id = keeper){km}
+canonv3 AS MATERIALIZED (SELECT * FROM survv2 WHERE doc_id = keeper){km}
 , semrem AS (
   SELECT DISTINCT b.id AS rid
   FROM a{it} a JOIN a{it} b ON a.cid = b.cid AND a.id < b.id

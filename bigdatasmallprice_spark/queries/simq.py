@@ -1065,7 +1065,9 @@ def _o_km_ctes(
     ``lead`` let the chain run over a NON-default vector source (e.g.
     the 8-dim pooled document vectors composed after the word2vec
     chain, where ``lead=","`` continues an open WITH block); defaults
-    reproduce the historical 64-dim embeddings-table text exactly."""
+    reproduce the historical 64-dim embeddings-table chain. ``x`` and the
+    final assignment, which the steps or the callers read more than once,
+    are MATERIALIZED: DuckDB 1.0 inlines a CTE at each reference."""
     dist = (
         f"list_sum(list_transform(range(1, {dim + 1}), "
         "i -> (x.xu[i] - c.cu[i]) * (x.xu[i] - c.cu[i])))"
@@ -1088,10 +1090,11 @@ def _o_km_ctes(
         )
     else:
         c0 = f"c0 AS (SELECT id AS cid, xu AS cu FROM x WHERE id < {k})"
-    parts = [f"{lead}x AS ({x_select}),", c0]
+    parts = [f"{lead}x AS MATERIALIZED ({x_select}),", c0]
     for it in range(1, iters + 1):
+        final = " MATERIALIZED" if it == iters else ""
         parts.append(
-            f", a{it} AS (SELECT id, cid, xu FROM ("
+            f", a{it} AS{final} (SELECT id, cid, xu FROM ("
             f"SELECT x.id, c.cid, x.xu, "
             f"row_number() OVER (PARTITION BY x.id ORDER BY {dist}, c.cid) AS rn "
             f"FROM x, c{it - 1} c) WHERE rn = 1)"
@@ -1255,7 +1258,10 @@ def _o_pq_common(src: str = "xf", probe_cte: str | None = None) -> str:
     composed oracles can prepend their own CTEs. ``probe_cte``: a
     (pid, cell, xu) CTE of per-probed-cell probe residuals — when
     given, the LUT carries the cell column (IVFADC's per-(probe, cell)
-    tables); when None, probes are the id<10 rows of ``src``."""
+    tables); when None, probes are the id<10 rows of ``src``. The
+    corpus frame, the subspace slices and the final codebooks are each
+    read more than once (every Lloyd step, the encoder and the LUT), so
+    they are MATERIALIZED: DuckDB 1.0 inlines a CTE at each reference."""
     from bigdatasmallprice_spark.operators.similarity import (
         KMEANS_SCALE,
         PQ_DSUB,
@@ -1272,7 +1278,7 @@ def _o_pq_common(src: str = "xf", probe_cte: str | None = None) -> str:
     parts = []
     if src == "xf":
         parts.append(
-            "xf AS (SELECT vec_id AS id, "
+            "xf AS MATERIALIZED (SELECT vec_id AS id, "
             f"list_transform(embedding, e -> CAST(round({KMEANS_SCALE} * CAST(e AS DOUBLE)) AS BIGINT)) AS xu "
             "FROM embeddings)"
         )
@@ -1280,7 +1286,7 @@ def _o_pq_common(src: str = "xf", probe_cte: str | None = None) -> str:
         off = s * d
         lead = ", " if parts else ""
         parts.append(
-            f"{lead}x{s} AS (SELECT id, xu[{off + 1}:{off + d}] AS xu FROM {src})"
+            f"{lead}x{s} AS MATERIALIZED (SELECT id, xu[{off + 1}:{off + d}] AS xu FROM {src})"
         )
         parts.append(
             f", c{s}_0 AS (SELECT id AS cid, xu AS cu FROM x{s} WHERE id < {PQ_K})"
@@ -1298,8 +1304,9 @@ def _o_pq_common(src: str = "xf", probe_cte: str | None = None) -> str:
                 f"FROM (SELECT cid, unnest(xu) AS v, unnest(range(0, {d})) AS dim FROM a{s}_{it}) "
                 f"GROUP BY 1, 2)"
             )
+            final = " MATERIALIZED" if it == PQ_ITERS else ""
             parts.append(
-                f", c{s}_{it} AS (SELECT cid, list(cu_e ORDER BY dim) AS cu FROM u{s}_{it} GROUP BY cid)"
+                f", c{s}_{it} AS{final} (SELECT cid, list(cu_e ORDER BY dim) AS cu FROM u{s}_{it} GROUP BY cid)"
             )
         # encode with the FINAL (post-update) codebooks
         parts.append(
@@ -1409,19 +1416,21 @@ def _o_ivfpq_sql() -> str:
         "i -> (x.xu[i] - c.cu[i]) * (x.xu[i] - c.cu[i])))"
     )
     sub64 = "list_transform(range(1, 65), i -> x.xu[i] - c.cu[i])"
+    # every CTE read more than once is MATERIALIZED: DuckDB 1.0 inlines a
+    # CTE at each reference (sf0.001: 43 s -> 1.6 s, same rows)
     return f"""
 WITH km AS ({_o_kmeans_sql(IVFPQ_CELLS, _KM_ITERS)}),
-cc AS (SELECT cid AS cell, list(cu_e ORDER BY dim) AS cu FROM km GROUP BY cid),
-xf AS (SELECT vec_id AS id,
+cc AS MATERIALIZED (SELECT cid AS cell, list(cu_e ORDER BY dim) AS cu FROM km GROUP BY cid),
+xf AS MATERIALIZED (SELECT vec_id AS id,
        list_transform(embedding, e -> CAST(round({KMEANS_SCALE} * CAST(e AS DOUBLE)) AS BIGINT)) AS xu
        FROM embeddings),
-ac AS (
+ac AS MATERIALIZED (
   SELECT id, cell FROM (
     SELECT x.id, c.cell,
            row_number() OVER (PARTITION BY x.id ORDER BY {dist64}, c.cell) AS rn
     FROM xf x, cc c) WHERE rn = 1
 ),
-rx AS (
+rx AS MATERIALIZED (
   -- IVFADC residual encoding: x - centroid(cell(x)), exact integers
   SELECT x.id, {sub64} AS xu
   FROM xf x JOIN ac ON ac.id = x.id JOIN cc c ON c.cell = ac.cell
@@ -1432,7 +1441,7 @@ pcells AS (
            row_number() OVER (PARTITION BY x.id ORDER BY {dist64}, c.cell) AS rn
     FROM xf x, cc c WHERE x.id < 10) WHERE rn <= {IVFPQ_NPROBE}
 ),
-rq AS (
+rq AS MATERIALIZED (
   -- the probe's OWN residual per probed cell (same centroid as rx)
   SELECT x.id AS pid, p.cell, {sub64} AS xu
   FROM xf x JOIN pcells p ON p.pid = x.id JOIN cc c ON c.cell = p.cell

@@ -334,3 +334,20 @@ def test_backfill_inserts_what_a_spark_left_anti_join_keeps(
     finally:
         for k, v in before.items():
             spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize("error", [TypeError("bad field"), KeyError("time")])
+def test_backfill_fails_on_a_parse_error_without_retrying(tmp_path, error):
+    """Only fetch errors (OSError) are retried; a parser bug fails the
+    feed-day on the first attempt instead of sleeping through the back-off
+    and reporting the day as unavailable."""
+    naps, calls = [], []
+
+    def fetch(d):
+        calls.append(d)
+        raise error
+
+    day = dt.date(2026, 5, 1)
+    with pytest.raises(type(error)):
+        backfill_dates(None, fetch, [day], str(tmp_path / "b"), SCHEMA, KEYS, sleep=naps.append)
+    assert calls == [day] and naps == []

@@ -10,10 +10,12 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import sys
 import threading
 import time
 import urllib.error
 import urllib.request
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -45,7 +47,11 @@ def test_task_chain_states_and_always_run():
             [
                 TaskSpec("ok", lambda conf: hits.append(("ok", conf["x"]))),
                 TaskSpec("boom", lambda conf: 1 / 0),
-                TaskSpec("skipped", lambda conf: hits.append(("skipped",))),
+                TaskSpec(
+                    "skipped",
+                    lambda conf: hits.append(("skipped",)),
+                    upstream=("boom",),
+                ),
                 TaskSpec(
                     "summary",
                     lambda conf: hits.append(("summary",)),
@@ -70,6 +76,277 @@ def test_task_chain_states_and_always_run():
     # snapshots are copies: mutating the returned dict must not leak in
     final["tasks"]["ok"]["state"] = "tampered"
     assert reg.status("d", run["run_id"])["tasks"]["ok"]["state"] == "success"
+
+
+def _recorder():
+    """Task factory whose tasks append ("start"|"end", task, thread) to
+    one list, sleeping ``nap`` seconds in between."""
+    events = []
+
+    def task(name, nap=0.0, fail=False, **kw):
+        def fn(conf):
+            events.append(("start", name, threading.current_thread()))
+            time.sleep(nap)
+            events.append(("end", name, threading.current_thread()))
+            if fail:
+                raise RuntimeError(f"{name} failed")
+
+        return TaskSpec(name, fn, **kw)
+
+    return events, task
+
+
+def _index(events, kind, name):
+    return next(i for i, (k, n, _) in enumerate(events) if (k, n) == (kind, name))
+
+
+def test_root_tasks_run_concurrently():
+    meet = threading.Barrier(2, timeout=5)
+    reg = RunRegistry(clock=lambda: CLOCK)
+    reg.register(
+        DagSpec(
+            "d",
+            None,
+            [
+                TaskSpec("a", lambda c: meet.wait()),
+                TaskSpec("b", lambda c: meet.wait()),
+            ],
+        )
+    )
+    final = reg.wait("d", reg.trigger("d")["run_id"], timeout=30)
+    assert final["state"] == "success", final["error"]
+    assert {t: r["state"] for t, r in final["tasks"].items()} == {
+        "a": "success",
+        "b": "success",
+    }
+
+
+def test_upstream_order_failure_propagation_and_summary():
+    events, task = _recorder()
+    reg = RunRegistry(clock=lambda: CLOCK)
+    reg.register(
+        DagSpec(
+            "ok",
+            None,
+            [task("a", nap=0.05), task("b", upstream=("a",))],
+        )
+    )
+    reg.register(
+        DagSpec(
+            "bad",
+            None,
+            [
+                task("a2", nap=0.05, fail=True),
+                task("b2", upstream=("a2",)),
+                task("c2", upstream=("b2",)),
+                task("sibling", nap=0.1),
+                task("summary", always_run=True),
+            ],
+        )
+    )
+    final = reg.wait("ok", reg.trigger("ok")["run_id"])
+    assert final["state"] == "success"
+    assert _index(events, "end", "a") < _index(events, "start", "b")
+
+    final = reg.wait("bad", reg.trigger("bad")["run_id"])
+    assert final["state"] == "failed"
+    assert {t: r["state"] for t, r in final["tasks"].items()} == {
+        "a2": "failed",
+        "b2": "upstream_failed",
+        "c2": "upstream_failed",
+        "sibling": "success",
+        "summary": "success",
+    }
+    assert final["error"] == "a2: a2 failed"
+    ran = {n for _, n, _ in events}
+    assert not ran & {"b2", "c2"}
+    start = _index(events, "start", "summary")
+    assert all(_index(events, "end", n) < start for n in ("a2", "sibling"))
+
+
+def test_first_of_concurrent_failures_is_the_run_error():
+    meet = threading.Barrier(2, timeout=5)
+    reg = RunRegistry(clock=lambda: CLOCK)
+
+    def first(conf):
+        meet.wait()
+        raise RuntimeError("first")
+
+    def a_failed() -> bool:
+        return bool(run_ids) and (
+            reg.status("d", run_ids[0])["tasks"]["a"]["state"] == "failed"
+        )
+
+    def second(conf):
+        meet.wait()
+        deadline = time.monotonic() + 5
+        while not a_failed():  # fail only once a's failure is recorded
+            assert time.monotonic() < deadline
+            time.sleep(0.01)
+        raise RuntimeError("second")
+
+    reg.register(DagSpec("d", None, [TaskSpec("a", first), TaskSpec("b", second)]))
+    run_ids: list[str] = []
+    run_ids.append(reg.trigger("d")["run_id"])
+    final = reg.wait("d", run_ids[0], timeout=30)
+    assert final["state"] == "failed"
+    assert final["error"] == "a: first"
+
+
+ETL_FEEDS = (
+    "entsoe_day_ahead_prices",
+    "entsoe_actual_load",
+    "entsoe_load_forecast",
+    "entsoe_generation",
+    "entsoe_crossborder_flows",
+    "weather_hourly",
+    "ekz_tariffs_raw",
+    "ckw_tariffs_raw",
+    "groupe_e_tariffs_raw",
+    "winterthur_load",
+    "winterthur_pv",
+)
+TARIFF_CHAIN = ("ekz_tariffs_raw", "ckw_tariffs_raw", "groupe_e_tariffs_raw")
+
+
+def test_stock_etl_dag_chains_only_the_tariff_feeds():
+    from bigdatasmallprice_spark.runs import default_dags
+
+    spans: dict[str, tuple[float, float]] = {}
+
+    def job(name):
+        def run(dates):
+            t0 = time.monotonic()
+            time.sleep(0.2)
+            spans[name] = (t0, time.monotonic())
+            return {d: 0 for d in dates}
+
+        return run
+
+    dags = {
+        d.dag_id: d
+        for d in default_dags(
+            None, "unused", lambda: CLOCK, backfill_jobs={n: job(n) for n in ETL_FEEDS}
+        )
+    }
+    reg = RunRegistry(clock=lambda: CLOCK)
+    reg.register(dags["bdsp_etl_daily"])
+    final = reg.wait("bdsp_etl_daily", reg.trigger("bdsp_etl_daily")["run_id"])
+    assert final["state"] == "success", final["error"]
+    assert set(spans) == set(ETL_FEEDS)
+    ekz, ckw, groupe_e = (spans[n] for n in TARIFF_CHAIN)
+    assert ekz[1] <= ckw[0] and ckw[1] <= groupe_e[0]
+    others = [n for n in ETL_FEEDS if n not in TARIFF_CHAIN]
+    for n in others:
+        a0, a1 = spans[n]
+        assert any(
+            spans[m][0] < a1 and a0 < spans[m][1] for m in others if m != n
+        ), f"fetch_{n} overlaps no other feed"
+
+
+def test_runs_share_one_pool_of_at_most_four_threads():
+    from bigdatasmallprice_spark.runs import POOL_WIDTH
+
+    events, task = _recorder()
+    reg = RunRegistry(clock=lambda: CLOCK)
+    reg.register(DagSpec("d", None, [task(f"t{i}", nap=0.02) for i in range(6)]))
+    for _ in range(2):
+        final = reg.wait("d", reg.trigger("d")["run_id"])
+        assert final["state"] == "success"
+    threads = {th for _, _, th in events}  # the Thread objects stay alive here
+    assert len(events) == 24
+    assert POOL_WIDTH == 4
+    assert len(threads) <= 4 and len({th.ident for th in threads}) <= 4
+    assert all(th.daemon for th in threads)
+
+
+def test_concurrent_triggers_run_every_task_once_in_order():
+    """Eighty runs of a diamond dag, triggered from eight threads at once
+    with a short switch interval: every task of every run executes once,
+    after its upstream tasks have ended, and every run succeeds."""
+    lock = threading.Lock()
+    started, ended = Counter(), set()
+
+    def task(name, upstream=(), **kw):
+        def fn(conf):
+            with lock:
+                started[conf["n"], name] += 1
+                if not all((conf["n"], u) in ended for u in upstream):
+                    raise AssertionError(f"{name} started before {upstream}")
+            time.sleep(0.001)
+            with lock:
+                ended.add((conf["n"], name))
+
+        return TaskSpec(name, fn, upstream=upstream, **kw)
+
+    reg = RunRegistry(clock=lambda: CLOCK)
+    reg.register(
+        DagSpec(
+            "diamond",
+            None,
+            [
+                task("a"),
+                task("b", ("a",)),
+                task("c", ("a",)),
+                task("d", ("b", "c")),
+                task("s", ("a", "b", "c", "d"), always_run=True),
+            ],
+        )
+    )
+    run_ids = []
+
+    def trigger(k):
+        for n in range(10 * k, 10 * k + 10):
+            run_ids.append(reg.trigger("diamond", {"n": n})["run_id"])
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=trigger, args=(k,)) for k in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+        assert not any(t.is_alive() for t in threads)
+        finals = [reg.wait("diamond", r, timeout=60) for r in run_ids]
+    finally:
+        sys.setswitchinterval(old)
+    assert len(finals) == 80
+    assert [f["error"] for f in finals if f["state"] != "success"] == []
+    assert started == Counter({(n, t): 1 for n in range(80) for t in "abcds"})
+
+
+@pytest.mark.parametrize(
+    "tasks, named",
+    [
+        ([TaskSpec("a", None, upstream=("nope",))], ["'a'", "'nope'"]),
+        ([TaskSpec("a", None, upstream=("a",))], ["'a'"]),
+        (
+            [
+                TaskSpec("a", None, upstream=("c",)),
+                TaskSpec("b", None, upstream=("a",)),
+                TaskSpec("c", None, upstream=("b",)),
+                TaskSpec("d", None, upstream=("c",)),
+            ],
+            ["a >> b >> c", "cycle"],
+        ),
+        (
+            [
+                TaskSpec("a", None, upstream=("s",)),
+                TaskSpec("s", None, always_run=True),
+            ],
+            ["s >> a", "cycle"],
+        ),
+    ],
+    ids=["unknown", "self", "cycle", "always_run-cycle"],
+)
+def test_register_refuses_bad_upstream(tasks, named):
+    reg = RunRegistry(clock=lambda: CLOCK)
+    with pytest.raises(ValueError) as err:
+        reg.register(DagSpec("bad_dag", None, tasks))
+    for part in ["'bad_dag'", *named]:
+        assert part in str(err.value)
+    assert reg.list_dags() == []
 
 
 def test_unknown_dag_and_run():
