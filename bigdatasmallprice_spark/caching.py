@@ -49,8 +49,7 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
       live only on executors WITH LINEAGE CUT, so losing an executor
       kills the job instead of recomputing — acceptable exactly when
       the "cluster" is one process and executor loss means the host
-      died anyway. This is the same documented-fallback pattern as
-      sgns_fit's ``broadcast_state=False`` for >10M-node vocabularies.
+      died anyway.
 
     The choice derives from session configuration, not a constant, so
     local benches and a production cluster run the same call sites.

@@ -12,8 +12,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterable
-from datetime import date, datetime
-from zoneinfo import ZoneInfo, ZoneInfoNotFoundError
+from datetime import date, datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -128,6 +127,9 @@ def load_table(
     return df
 
 
+_MICROS_PER_DAY = 86_400_000_000
+
+
 def write_bronze(
     df: DataFrame, path: str, time_col: str = "time", mode: str = "append"
 ) -> None:
@@ -136,25 +138,21 @@ def write_bronze(
     chunks). Time-range predicates then prune partitions at the source:
     a 3-day refresh or a 7-day serving query reads 3 or 7 directories
     regardless of total table size (asserted in tests via the scan's
-    PartitionFilters). ``p_date`` is the row's date in the session time
-    zone; ``bronze_partition_dates`` applies the same rule on the driver."""
-    df.withColumn("p_date", F.to_date(F.col(time_col))).write.mode(mode).partitionBy(
-        "p_date"
-    ).parquet(path)
+    PartitionFilters). ``p_date`` is the row's UTC date, whatever the
+    session time zone, so a table written under one zone and topped up
+    under another keeps each instant in one directory;
+    ``bronze_partition_dates`` applies the same rule on the driver."""
+    # one SQL string, not a chain of column functions: each of those is a
+    # Py4J round trip, and a feed-day's write is on the ETL's hot path
+    utc_date = f"date_from_unix_date(CAST(floor(unix_micros(`{time_col}`) / {_MICROS_PER_DAY}) AS INT))"
+    df.withColumn("p_date", F.expr(utc_date)).write.mode(mode).partitionBy("p_date").parquet(path)
 
 
-def bronze_partition_dates(
-    spark: SparkSession, stamps: Iterable[datetime | None]
-) -> set[date]:
+def bronze_partition_dates(stamps: Iterable[datetime | None]) -> set[date]:
     """The ``p_date`` values ``write_bronze`` gives rows with these times,
-    without a Spark job: each instant's date in the session time zone. A
-    naive datetime is local time, as ``createDataFrame`` reads it."""
-    name = spark.conf.get("spark.sql.session.timeZone")
-    try:
-        zone = ZoneInfo(name)
-    except (ValueError, ZoneInfoNotFoundError):
-        zone = datetime.strptime(name, "%z").tzinfo  # fixed offsets, e.g. "+01:00"
-    return {s.astimezone(zone).date() for s in stamps if s is not None}
+    without a Spark job: each instant's UTC date. A naive datetime is
+    local time, as ``createDataFrame`` reads it."""
+    return {s.astimezone(timezone.utc).date() for s in stamps if s is not None}
 
 
 def read_bronze(spark: SparkSession, path: str) -> DataFrame:

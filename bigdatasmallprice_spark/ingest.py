@@ -150,7 +150,7 @@ def backfill_dates(
             continue
         table = arrow_rows(records, schema)
         key = _keys(table, keys)
-        touched = bronze_partition_dates(spark, (r[time_col] for r in records))
+        touched = bronze_partition_dates(r[time_col] for r in records)
         stored = _stored_keys(bronze_path, touched, keys)
         new = [i for i in _first_per_key(key) if key[i] not in stored]
         if new:

@@ -20,7 +20,6 @@ are KBs; the DATA never leaves the cluster).
 from __future__ import annotations
 
 import datetime as dt
-import hashlib
 import json
 import os
 import re
@@ -505,60 +504,3 @@ def embed_documents_latest(
         raise FileNotFoundError(f"no artifact for model {name!r} in {model_dir}")
     return doc_embeddings(docs, load_word_vectors(spark, path))
 
-
-def bpe_merges_fingerprint(merges: list[tuple[str, str]]) -> str:
-    """md5 of the rank-ordered merge serialization - order IS the
-    model (BPE applies merges by rank), so the canonical form is the
-    ranked list, not a sorted set."""
-    canon = ";".join(f"{a} {b}" for a, b in merges)
-    return hashlib.md5(canon.encode()).hexdigest()
-
-
-def save_bpe_merges(
-    model_dir: str,
-    name: str,
-    merges: list[tuple[str, str]],
-    version: str | None = None,
-) -> str:
-    """Persist a ranked BPE merge list as a ``kind: "bpe"`` artifact
-    with a fingerprint pin - the tokenizer-of-record (a production
-    vocab.bpe): trained once (bpe_train_merges / trained_merges),
-    consumed by every packing/accounting stage forever after. The
-    list is the MODEL (vocabulary-sized); persisting it whole is the
-    reference's joblib-dump analog."""
-    return _write_artifact(
-        model_dir,
-        name,
-        version,
-        None,
-        {
-            "kind": "bpe",
-            "merges": [[a, b] for a, b in merges],
-            "fingerprint": bpe_merges_fingerprint(merges),
-        },
-    )
-
-
-def load_bpe_merges(path: str) -> list[tuple[str, str]]:
-    """Load + fingerprint-verify a BPE artifact into the apply-ready
-    ranked merge list (bpe_segment / bpe_encode_tokens /
-    bpe_symbols_sql all consume this shape). Raises on kind mismatch
-    or fingerprint divergence - a tampered/torn tokenizer artifact
-    must refuse, not silently re-segment the corpus differently."""
-    with open(path) as f:
-        doc = json.load(f)
-    if doc.get("kind") != "bpe":
-        raise ValueError(f"{path} is not a bpe artifact")
-    merges = [(a, b) for a, b in doc["merges"]]
-    if bpe_merges_fingerprint(merges) != doc.get("fingerprint"):
-        raise ValueError(f"{path} fingerprint mismatch - refusing to tokenize")
-    return merges
-
-
-def latest_bpe_merges(model_dir: str, name: str) -> list[tuple[str, str]]:
-    """The newest persisted merge list for ``name`` - the serve-side
-    half (predict.py:40-57's newest-artifact rule for the tokenizer)."""
-    path = find_latest(model_dir, name)
-    if path is None:
-        raise FileNotFoundError(f"no artifact for model {name!r} in {model_dir}")
-    return load_bpe_merges(path)

@@ -1,9 +1,8 @@
-"""SGNS node-embedding fit over the random-walk skip-gram corpus —
-the TRAINING stage of DeepWalk (Perozzi et al. 2014): word2vec's
-skip-gram-with-negative-sampling objective (Mikolov et al. 2013)
-applied to (center, context) pairs harvested from truncated walks.
-This closes the loop operators/walks.py opens: the walk corpus is the
-data-prep stage, this module is the consumer, and the ANN stack
+"""SGNS embedding fit — word2vec's skip-gram-with-negative-sampling
+objective (Mikolov et al. 2013) over a (center, context, cnt) pair
+corpus. operators/word2vec.py feeds it token co-occurrence windows;
+the fit never cares what a "node" is, so integer ids and string word
+keys ride through the same expressions, and the ANN stack
 (operators/similarity.py) can serve the output.
 
 The reference has no embedding trainer; this extends the engine's D5
@@ -14,7 +13,7 @@ model that is DATA-SIZED instead of driver-sized:
 - distill holds 5 weights driver-side and injects them as literals;
   an embedding table is n x D x 2 numbers, so here the MODEL STATE IS
   A DATAFRAME (node, dim, u, v) and every GD iteration is joins +
-  aggregates over it — the shape that still works when the node set
+  aggregates over it — the shape that still works when the vocabulary
   is billions (the driver never sees a weight).
 - every number in the trajectory (init, dot products, the rational
   sigmoid, per-pair gradients, their sums, the update, the clamp) is
@@ -29,7 +28,7 @@ of dp/dz cancel), with y = 1 for skip-gram pairs and y = 0 for
 deterministic negatives. True word2vec uses per-occurrence SGD with
 sampled negatives; a replayable engine fit wants full-batch GD with a
 FIXED negative set — "shared negatives" drawn once per positive pair
-by an md5-slice hash (the walks' own seeded-RNG stand-in) mod n,
+by an md5-slice hash (an engine-portable seeded-RNG stand-in) mod n,
 mapped through the ranked node index. Collisions with the pair's own
 endpoints are dropped (the standard filter).
 
@@ -65,7 +64,7 @@ from pyspark.sql import functions as F
 
 from pyspark.sql.types import StringType
 
-from bigdatasmallprice_spark.caching import cut_lineage, cut_lineage_lazy
+from bigdatasmallprice_spark.caching import cut_lineage
 from bigdatasmallprice_spark.operators.distill import (
     DUCK_DIV,
     DZH,
@@ -90,7 +89,7 @@ EMB_INIT = 100_000  # init range +/-0.1 in micro-units
 EMB_CLAMP = 2_000_000  # embedding entries clamped to +/-2.0
 
 
-# --- deterministic md5-slice hash (the walks' device) ----------------------
+# --- deterministic md5-slice hash ------------------------------------------
 def _spark_h(key: str) -> str:
     return f"CAST(conv(substr(md5({key}), 1, 8), 16, 10) AS BIGINT)"
 
@@ -168,8 +167,8 @@ def sgns_training_pairs(
     """Skip-gram (center, context, cnt) positives + md5-deterministic
     negatives -> the training table keyed uniquely on
     (center, other, ym) with exact summed weights. ``n_nodes`` is the
-    node count (a model-sized scalar, like PageRank's n); negatives
-    land on the ranked node index so the id space never matters."""
+    node count (a model-sized scalar); negatives land on the ranked
+    node index so the id space never matters."""
     from bigdatasmallprice_spark.operators.topk import (
         approx_quantile_buckets,
         banded_global_rank,
@@ -185,11 +184,11 @@ def sgns_training_pairs(
         F.lit(1000).cast("long").alias("ym"), "cnt",
     )
     # the node index is ROW_NUMBER() OVER (ORDER BY node) - 1, but |V|
-    # is corpus-scale for a real graph (or a vocabulary for the word
-    # trainer), so the sort is sharded: a MONOTONE coarsening of the
-    # unbounded node domain makes a bounded band — approx-quantile
-    # buckets for numeric ids, a 2-char prefix for string tokens (a
-    # fixed-length prefix preserves UTF8-binary order) — then
+    # is vocabulary-scale, so the sort is sharded: a MONOTONE
+    # coarsening of the unbounded node domain makes a bounded band —
+    # approx-quantile buckets for numeric ids, a 2-char prefix for
+    # string tokens (a fixed-length prefix preserves UTF8-binary
+    # order) — then
     # banded_global_rank (band ASC, tie=node) reproduces the global
     # rank bit-identically: (band, node) order equals (node) order
     # because the band is monotone in node. The oracle keeps the plain
@@ -239,7 +238,6 @@ def sgns_fit(
     emb0: DataFrame,
     iters: int = SGNS_ITERS,
     dim: int = EMB_DIM,
-    broadcast_state: bool = True,
 ) -> DataFrame:
     """Full-batch integer GD with the state in ARRAY form
     (node, ua, va, wtu, wtv): the pair dot product is an inline
@@ -254,16 +252,13 @@ def sgns_fit(
     frame. ``train`` is scanned once per iteration — persist it; the
     state is localCheckpoint'ed every round (referenced twice).
 
-    ``broadcast_state``: the model frame is VOCABULARY-sized (one row
-    per node, ~150 bytes at D=8), not corpus-sized — broadcasting it
-    into the two per-iteration train joins removes BOTH shuffles of
-    the (much larger) pair corpus, leaving one gradient shuffle per
-    round (14.6s -> 8.5s at sf0.1, measured). localCheckpoint frames
-    report unknown stats, so AQE never makes this choice on its own.
-    Pass False for vocabularies past executor memory (~10M+ nodes) —
-    the joins degrade gracefully to hash equi-joins on node id."""
+    The model frame is VOCABULARY-sized (one row per node, ~150 bytes
+    at D=8), not corpus-sized, so it is broadcast into the two
+    per-iteration train joins: that removes BOTH shuffles of the (much
+    larger) pair corpus, leaving one gradient shuffle per round
+    (14.6s -> 8.5s at sf0.1, measured). localCheckpoint frames report
+    unknown stats, so AQE never makes this choice on its own."""
     op = SPARK_DIV
-    hint = F.broadcast if broadcast_state else (lambda df: df)
     wc = train.groupBy(F.col("center").alias("node")).agg(
         F.sum("cnt").cast("long").alias("wtu")
     )
@@ -295,11 +290,11 @@ def sgns_fit(
     for it in range(iters):
         p = (
             train.join(
-                hint(cur.select(F.col("node").alias("center"), "ua")),
+                F.broadcast(cur.select(F.col("node").alias("center"), "ua")),
                 "center",
             )
             .join(
-                hint(cur.select(F.col("node").alias("other"), "va")),
+                F.broadcast(cur.select(F.col("node").alias("other"), "va")),
                 "other",
             )
             .selectExpr(
@@ -361,13 +356,13 @@ def sgns_fit(
         upd_v = (
             f"va[i] - {rdiv(f'{SGNS_LR} * coalesce(gva[i], CAST(0 AS BIGINT))', 'wtv', op)}"
         )
-        # garr is vocabulary-sized like cur; under broadcast_state the
-        # update join must broadcast it EXPLICITLY — both inputs are
-        # lineage-truncated (localCheckpoint) frames with unknown
-        # stats, so the planner would otherwise fall back to a
-        # sort-merge join with two extra exchanges per GD round
+        # garr is vocabulary-sized like cur; the update join must
+        # broadcast it EXPLICITLY — both inputs are lineage-truncated
+        # (localCheckpoint) frames with unknown stats, so the planner
+        # would otherwise fall back to a sort-merge join with two
+        # extra exchanges per GD round
         cur = (
-            cur.join(hint(garr), "node", "left")
+            cur.join(F.broadcast(garr), "node", "left")
             .selectExpr(
                 "node",
                 f"transform(sequence(0, {dim - 1}), i -> CAST("
@@ -399,31 +394,6 @@ def sgns_fit(
 
 
 # --- DuckDB oracle: the identical unrolled trajectory ----------------------
-def o_sgns_chain_sql(
-    iters: int = SGNS_ITERS,
-    dim: int = EMB_DIM,
-    neg_per_pos: int = NEG_PER_POS,
-) -> str:
-    """CTE chain replaying the full fit over the supplier co-purchase
-    walk corpus: walks (o_walk_chain_sql) -> skip-gram pairs ->
-    deterministic negatives -> md5 init -> ``iters`` unrolled GD
-    blocks. Ends with ``emb{iters}(node, dim, u, v, wtu, wtv)``."""
-    from bigdatasmallprice_spark.operators.walks import (
-        SKIPGRAM_WINDOW,
-        o_walk_chain_sql,
-    )
-
-    prefix = f"""{o_walk_chain_sql()},
-sgp AS MATERIALIZED (
-  SELECT a.node AS center, b.node AS context, CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM walks a JOIN walks b
-    ON a.start = b.start AND a.w = b.w AND a.step <> b.step
-   AND abs(a.step - b.step) <= {SKIPGRAM_WINDOW}
-  GROUP BY 1, 2
-)"""
-    return prefix + ",\n" + o_sgns_core_sql(iters, dim, neg_per_pos)
-
-
 def o_sgns_core_sql(
     iters: int = SGNS_ITERS,
     dim: int = EMB_DIM,
@@ -433,10 +403,8 @@ def o_sgns_core_sql(
     downstream of ``sgp(center, context, cnt)`` and ``nodes(node)`` —
     deterministic negatives -> train -> md5 init -> ``iters`` unrolled
     GD blocks, ending with ``emb{iters}``. Callers prepend their own
-    corpus prefix: the walk corpus for graph embeddings
-    (o_sgns_chain_sql), token co-occurrence windows for word
-    embeddings (operators/word2vec.py) — the SAME trajectory trains
-    both, which is the point of SGNS. CTEs read more than once are
+    corpus prefix (token co-occurrence windows in
+    operators/word2vec.py). CTEs read more than once are
     MATERIALIZED: DuckDB 1.0 inlines a CTE at each reference."""
     op = DUCK_DIV
     nkey = (

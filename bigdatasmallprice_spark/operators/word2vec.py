@@ -1,16 +1,14 @@
 """word2vec on text: the SGNS trainer applied to token co-occurrence.
 
-operators/sgns.py trains skip-gram-with-negative-sampling over a
-GRAPH walk corpus (DeepWalk); this module feeds it the corpus word2vec
-was born on — token windows over documents (Mikolov et al. 2013). The
-entire trajectory (deterministic negatives, md5 init, the all-integer
-full-batch GD) is REUSED unchanged: sgns_training_pairs / sgns_fit
-never cared what a "node" is, and string word keys ride through every
-expression (the md5 keys CAST to VARCHAR, the negative draw lands on
-the ranked vocabulary index). The oracle composes the same way: a
-token-window prefix producing ``sgp(center, context, cnt)`` +
-``nodes(node)`` in front of o_sgns_core_sql's corpus-independent GD
-chain — one trajectory, two corpora, which is the point of SGNS.
+operators/sgns.py fits skip-gram-with-negative-sampling over a
+(center, context, cnt) pair corpus; this module feeds it the corpus
+word2vec was born on — token windows over documents (Mikolov et al.
+2013). sgns_training_pairs / sgns_fit never cared what a "node" is,
+and string word keys ride through every expression (the md5 keys CAST
+to VARCHAR, the negative draw lands on the ranked vocabulary index).
+The oracle composes the same way: a token-window prefix producing
+``sgp(center, context, cnt)`` + ``nodes(node)`` in front of
+o_sgns_core_sql's corpus-independent GD chain.
 
 Pair corpus: symmetric skip-gram windows of width SKIPGRAM_WINDOW
 over the NON-EMPTY token positions of each document (the langid
@@ -20,8 +18,8 @@ word_skipgram_pairs): each task windows its own documents with zero
 shuffle; the only exchange is the final (center, context) count.
 Vocabulary = distinct tokens.
 
-Scale: the model state is a DataFrame (word, dim, u, v) exactly as in
-the graph fit; the vocabulary table replaces the node table. Per GD
+Scale: the model state is a DataFrame (word, dim, u, v); the
+vocabulary table is sgns.py's node table. Per GD
 iteration the cost is the same two broadcast joins + one word-keyed
 aggregate (sgns.py's plan notes apply verbatim).
 """
@@ -36,8 +34,8 @@ from bigdatasmallprice_spark.operators.sgns import (
     SGNS_ITERS,
     o_sgns_core_sql,
 )
-from bigdatasmallprice_spark.operators.walks import SKIPGRAM_WINDOW
 
+SKIPGRAM_WINDOW = 2  # tokens either side of the center
 # non-empty whitespace tokens — the house tokenization (langid.py)
 _SPARK_TOKS = "filter(split(text, ' '), w -> w <> '')"
 _DUCK_TOKS = "list_filter(string_split(text, ' '), w -> w <> '')"

@@ -3,7 +3,6 @@
 from bigdatasmallprice_spark.queries import (  # noqa: F401
     curationq,
     dedupq,
-    graphq,
     layoutq,
     mlq,
     mmq,

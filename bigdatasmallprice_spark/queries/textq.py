@@ -900,15 +900,13 @@ FROM emb{SGNS_ITERS}
     "word_embedding_train",
     _word2vec_oracle(),
     doc="word2vec on TEXT (operators/word2vec.py): the all-integer "
-    "SGNS trainer node_embedding_train verified on the graph walk "
-    "corpus, fed the corpus word2vec was born on — symmetric token "
-    "co-occurrence windows over documents (Mikolov 2013). The "
-    "trajectory (md5-deterministic negatives, md5 init, full-batch "
-    "integer GD with the rational sigmoid) is REUSED UNCHANGED: "
-    "string word keys ride through every expression and the oracle "
-    "composes the token-window prefix onto the same corpus-"
-    "independent GD chain (o_sgns_core_sql) the graph oracle uses — "
-    "one trajectory, two corpora. Pair harvest is a doc-keyed "
+    "SGNS trainer (operators/sgns.py) fed the corpus word2vec was "
+    "born on — symmetric token co-occurrence windows over documents "
+    "(Mikolov 2013). The trajectory (md5-deterministic negatives, "
+    "md5 init, full-batch integer GD with the rational sigmoid) "
+    "keys on string words throughout, and the oracle composes the "
+    "token-window prefix onto the corpus-independent GD chain "
+    "(o_sgns_core_sql). Pair harvest is a doc-keyed "
     "position self-join (bounded window, nothing global); the model "
     "state is a (word, dim, u, v) DataFrame, vocabulary-sized tables "
     "broadcast. Output: the final input/output embedding entries per "
@@ -933,7 +931,7 @@ def word_embedding_train_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table_par(spark, sf_dir, "documents")
     pairs = word_skipgram_pairs(docs)
     nodes = vocab_nodes(docs).persist()
-    n = nodes.count()  # vocabulary scalar (the graph fit's n)
+    n = nodes.count()  # vocabulary scalar (sgns_training_pairs' n_nodes)
     train = sgns_training_pairs(pairs, nodes, n).transform(cut_lineage)
     emb = sgns_fit(train, sgns_init(nodes))
     return emb.select(
@@ -1015,7 +1013,7 @@ _BPE_ITER_MERGES = 20
 
 def _o_bpe_sequential_sql(n: int) -> str:
     """The one-merge-per-round sequential BPE trainer, unrolled as a
-    closed WITH chain (the o_sgns_chain_sql discipline): round r =
+    closed WITH chain (the o_sgns_core_sql discipline): round r =
     pair counts over the round-(r-1) marked segmentation -> argmax
     (cnt DESC, a, b) -> one literal replace. The Spark side runs the
     EXACT batched loop (operators/bpe.py::bpe_train_batched), so this

@@ -78,9 +78,10 @@ DRIVER_CAP = 50
 DRIVER_ORDER: list[str] = [
     # r13 rotation (VERDICT r12 ask #6 + ledger rule): the three
     # r12-firsts keep their slots for second rows; the r12 plan-work
-    # queries with no external bench row yet rotate IN
-    # (chrono_split_summary, triangle_counts — banded-rank
-    # migrations) along with the r8-tail ledger pool
+    # query with no external bench row yet rotates IN
+    # (chrono_split_summary, a banded-rank migration) with the paper's
+    # headline feature view (training_features) and the r8-tail ledger
+    # pool
     # (dedup_span_stats(+hashed), eval_split_clean(+hashed),
     # embedding_neardup_banded); seven 4-green relational members
     # ([1,5,8]+r12 rows: forecast_metrics, gap_fill_hourly,
@@ -93,7 +94,7 @@ DRIVER_ORDER: list[str] = [
     "doc_embedding_topk_hi",
     # -- rotated in per VERDICT r12 ask #6
     "chrono_split_summary",
-    "triangle_counts",
+    "training_features",
     "dedup_span_stats",
     "eval_split_clean",
     "dedup_span_stats_hashed",

@@ -66,8 +66,7 @@ def get_spark(
         # false (coalesce post-shuffle partitions to advisory BYTES
         # instead of core count, chasing the 8-beats-32-cores gap) on
         # the 20 heaviest queries and it LOST on all of them
-        # (doc_embedding_topk 6.13 -> 7.10s, pagerank_copurchase
-        # 7.76 -> 9.68s, node2vec 6.62 -> 8.77s): at small SF the
+        # (doc_embedding_topk 6.13 -> 7.10s): at small SF the
         # post-shuffle stages are compute-heavy per byte, so
         # coalescing to one near-empty-by-bytes reducer serializes
         # real CPU work. Recorded here so the next round does not

@@ -71,16 +71,9 @@ QUERIES = [
     "quantile_sketch_lean",
     "ann_pq_topk",
     "ann_ivfpq_topk",
-    # round-7 additions: the fourth dedup modality (chunk-blocked
-    # Hamming equi-join over WAV band-energy fingerprints) and the
-    # iterative graph surface (one edge-join shuffle per iteration —
-    # must stay ~linear in the edge list)
+    # round-7 addition: the fourth dedup modality (chunk-blocked
+    # Hamming equi-join over WAV band-energy fingerprints)
     "audio_neardup_fingerprint",
-    "pagerank_copurchase",
-    "ppr_related_suppliers",
-    "triangle_counts",
-    "randomwalk_skipgram_pairs",
-    "lpa_communities",
     "token_budget_sample",
     # r9 additions (registered scale-safe flagship + the LM/retrieval/
     # sampling family; training_features_stitched is also appended by

@@ -198,25 +198,40 @@ def test_backfill_lands_offset_records_in_their_utc_partition(spark, tmp_path):
     assert bronze.groupBy(*KEYS).count().filter(F.col("count") > 1).count() == 0
 
 
+def _utc_hourly(day: dt.date) -> list[dict]:
+    return _hourly(day, tz=UTC)
+
+
 @pytest.mark.parametrize("zone", ["Europe/Zurich", "+02:00"])
 def test_backfill_partitions_follow_the_session_time_zone(spark, tmp_path, zone):
-    """write_bronze names p_date in the session time zone; the re-run must
-    look in those same directories. At UTC+2 (Zurich in May, or a fixed
-    offset) the last two UTC hours of a day land in the next date's
-    partition, and the re-run still finds them."""
+    """write_bronze names p_date by the UTC date in any session time zone:
+    at UTC+2 (Zurich in May, or a fixed offset) a UTC day still lands in
+    its own date's partition, and the re-run finds it there."""
     path = str(tmp_path / "bronze")
     d = dt.date(2026, 5, 2)
-
-    def fetch(day):
-        return _hourly(day, tz=dt.timezone.utc)
-
     session_zone = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", zone)
     try:
-        assert backfill_dates(spark, fetch, [d], path, SCHEMA, KEYS) == {d: 48}
+        assert backfill_dates(spark, _utc_hourly, [d], path, SCHEMA, KEYS) == {d: 48}
         parts = sorted(p for p in os.listdir(path) if p.startswith("p_date="))
-        assert parts == [f"p_date={d}", f"p_date={d + dt.timedelta(days=1)}"]
-        assert backfill_dates(spark, fetch, [d], path, SCHEMA, KEYS) == {d: 0}
+        assert parts == [f"p_date={d}"]
+        assert backfill_dates(spark, _utc_hourly, [d], path, SCHEMA, KEYS) == {d: 0}
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", session_zone)
+    assert spark.read.parquet(path).count() == 48
+
+
+def test_backfill_rerun_under_another_session_zone_inserts_nothing(spark, tmp_path):
+    """A day written under Europe/Zurich and re-run under UTC finds every
+    key: both runs name the same p_date directories."""
+    path = str(tmp_path / "bronze")
+    d = dt.date(2026, 5, 1)
+    session_zone = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "Europe/Zurich")
+        assert backfill_dates(spark, _utc_hourly, [d], path, SCHEMA, KEYS) == {d: 48}
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        assert backfill_dates(spark, _utc_hourly, [d], path, SCHEMA, KEYS) == {d: 0}
     finally:
         spark.conf.set("spark.sql.session.timeZone", session_zone)
     assert spark.read.parquet(path).count() == 48

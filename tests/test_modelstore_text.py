@@ -173,38 +173,3 @@ def test_word_vectors_fingerprint_pin_refuses_tampering(spark, tmp_path):
     with pytest.raises(ValueError, match="fingerprint mismatch"):
         load_word_vectors(spark, path)
 
-
-def test_bpe_merge_artifact_round_trip_and_refusals(tmp_path):
-    """The tokenizer-of-record loop: trained merges persist as a
-    fingerprint-pinned artifact, the newest loads back apply-ready,
-    and tampered/kind-mismatched artifacts refuse (a tokenizer that
-    silently re-segments differently corrupts every downstream token
-    count)."""
-    import json
-
-    import pytest as _pytest
-
-    from bigdatasmallprice_spark.modelstore import (
-        latest_bpe_merges,
-        load_bpe_merges,
-        save_bpe_merges,
-    )
-    from bigdatasmallprice_spark.queries.textq import _PACK_BPE_MERGES
-
-    d = str(tmp_path)
-    save_bpe_merges(d, "tok", _PACK_BPE_MERGES[:5], version="20260101T000000")
-    p2 = save_bpe_merges(d, "tok", _PACK_BPE_MERGES, version="20260102T000000")
-    assert load_bpe_merges(p2) == _PACK_BPE_MERGES
-    # newest wins
-    assert latest_bpe_merges(d, "tok") == _PACK_BPE_MERGES
-    # tamper: reorder two merges without updating the fingerprint
-    doc = json.load(open(p2))
-    doc["merges"][0], doc["merges"][1] = doc["merges"][1], doc["merges"][0]
-    json.dump(doc, open(p2, "w"))
-    with _pytest.raises(ValueError, match="fingerprint mismatch"):
-        load_bpe_merges(p2)
-    # kind mismatch refuses
-    doc["kind"] = "word2vec"
-    json.dump(doc, open(p2, "w"))
-    with _pytest.raises(ValueError, match="not a bpe artifact"):
-        load_bpe_merges(p2)

@@ -620,30 +620,6 @@ def test_winnow_fingerprints_are_codegen_and_pair_join_is_equi(spark):
     assert ex and all("fp#" in line or "id_a" in line for line in ex), ex
 
 
-def test_graph_family_joins_are_equi_not_cartesian(spark):
-    """The graph kernels must never plan a corpus-scale cartesian:
-    pagerank (edge-rank joins), triangle_counts (oriented wedge +
-    closing equi-joins), randomwalk (frontier-vs-neighbor-index
-    equi-joins) and lpa (edge-label equi-joins) all join by hash.
-    (ppr_related_suppliers is exempt here: its nodes x 3-seed
-    broadcast expansion is a documented constant-width cross join.)"""
-    from bigdatasmallprice_spark.registry import all_queries
-
-    spark.catalog.clearCache()
-    for name in (
-        "pagerank_copurchase",
-        "triangle_counts",
-        "randomwalk_skipgram_pairs",
-        "node2vec_walk_corpus",
-        "lpa_communities",
-    ):
-        df = all_queries()[name].fn(spark, SF)
-        plan = _formatted(df)
-        assert "CartesianProduct" not in plan, (name, plan)
-        assert "BroadcastNestedLoopJoin" not in plan, (name, plan)
-        assert "MapInPandas" not in plan and "EvalPython" not in plan, name
-
-
 def test_token_budget_sample_prefilters_before_the_rank_window(spark):
     """The scale path must show the histogram-band threshold PREFILTER
     upstream of the per-source rank window: a broadcast hash join of
@@ -663,17 +639,17 @@ def test_token_budget_sample_prefilters_before_the_rank_window(spark):
 
 
 def test_sgns_fit_broadcasts_vocab_state_and_stays_equi(spark):
-    """node_embedding_train: the per-iteration joins of the pair corpus
+    """word_embedding_train: the per-iteration joins of the pair corpus
     against the vocabulary-sized model frame must be BROADCAST hash
-    joins (localCheckpoint stats are opaque to AQE, so the hint is
-    explicit — sgns_fit(broadcast_state=True)), the gradient fold one
-    hash aggregate, and nothing cartesian or Python-staged. The final
-    plan only shows the LAST iteration (earlier ones are materialized
-    checkpoints), which is exactly the repeating unit."""
+    joins (localCheckpoint stats are opaque to AQE, so sgns_fit hints
+    them explicitly), the gradient fold one hash aggregate, and nothing
+    cartesian or Python-staged. The final plan only shows the LAST
+    iteration (earlier ones are materialized checkpoints), which is
+    exactly the repeating unit."""
     from bigdatasmallprice_spark.registry import all_queries
 
     spark.catalog.clearCache()
-    df = all_queries()["node_embedding_train"].fn(spark, SF)
+    df = all_queries()["word_embedding_train"].fn(spark, SF)
     plan = _formatted(df)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan

@@ -1,7 +1,7 @@
-"""SGNS node-embedding fit (operators/sgns.py): training-table
-construction, trajectory determinism, loss direction, bounds, and the
-pinned representation-quality invariant — embeddings trained on a
-planted two-clique graph must place within-clique pairs closer than
+"""SGNS embedding fit (operators/sgns.py): training-table construction,
+trajectory determinism, loss direction, bounds, and the pinned
+representation-quality invariant — embeddings trained on a planted
+two-clique pair corpus must place within-clique pairs closer than
 cross-clique pairs and retrieve within-clique top-1 neighbors."""
 
 from __future__ import annotations
@@ -19,31 +19,22 @@ from bigdatasmallprice_spark.operators.sgns import (
     sgns_init,
     sgns_training_pairs,
 )
-from bigdatasmallprice_spark.operators.walks import (
-    random_walks,
-    skipgram_pairs,
-)
 
 
 def _nodes(spark, ids):
     return spark.createDataFrame([(i,) for i in ids], "node long")
 
 
-def _sym_edges(spark, und):
-    rows = [(a, b, w) for a, b, w in und] + [(b, a, w) for a, b, w in und]
-    return spark.createDataFrame(rows, "src long, dst long, w long")
-
-
 def _two_clique_corpus(spark):
-    """Two K5s {0..4} and {10..14} joined by one bridge (4, 10): the
-    planted-partition graph whose walk corpus is dominated by
-    within-clique co-occurrence."""
-    k1 = [(a, b, 5) for a in range(5) for b in range(5) if a < b]
-    k2 = [(a, b, 5) for a in range(10, 15) for b in range(10, 15) if a < b]
+    """Two cliques {0..4} and {10..14} joined by one bridge pair (4, 10):
+    the planted-partition skip-gram corpus, every ordered within-clique
+    (center, context) pair once plus the bridge."""
+    cliques = [range(5), range(10, 15)]
+    rows = [(a, b, 1) for c in cliques for a in c for b in c if a != b]
+    rows.append((4, 10, 1))
     ids = list(range(5)) + list(range(10, 15))
     nodes = _nodes(spark, ids)
-    edges = _sym_edges(spark, k1 + k2 + [(4, 10, 1)])
-    pairs = skipgram_pairs(random_walks(edges, nodes))
+    pairs = spark.createDataFrame(rows, "center long, context long, cnt long")
     train = sgns_training_pairs(pairs, nodes, len(ids))
     return nodes, train, ids
 
