@@ -42,15 +42,14 @@ def validate_table_name(name: str) -> str:
 
 
 # Scan-parallelism floor is OPT-IN PER CONSUMER (load_table's
-# scan_floor flag / core.table_par): round 12 applied it blanket to
-# every `documents` reader and that (a) injected an Exchange into
-# declared pure-map plans (pii_scrub / video_frame_sample guards went
-# red — a scrub that shuffles 100 TB would be wrong) and (b) regressed
-# aggregate-first consumers whose map-side partial aggregation over
-# the unsplit scan is already the cheapest plan
-# (perplexity_buckets_kn 1.11s -> 4.27s). Relational facts
-# (orders/lineitem/events) are never floored for the same
-# aggregate-first reason (0.3-1s loss per query at sf0.1), and
+# scan_floor flag / core.table_par). Applied to every `documents`
+# reader, it (a) injected an Exchange into declared pure-map plans
+# (the pii_scrub guard in tests/test_plans.py: a scrub that shuffles
+# 100 TB would be wrong) and (b) regressed aggregate-first consumers,
+# whose map-side partial aggregation over the unsplit scan is already
+# the cheapest plan (perplexity_buckets_kn 1.11s -> 4.27s).
+# Relational facts (orders/lineitem/events) are never floored for the
+# same aggregate-first reason (0.3-1s loss per query at sf0.1), and
 # embeddings' ANN consumers collect/broadcast model-sized legs where
 # an extra exchange adds a stage per leg (ann_ivfpq_topk measured
 # 5.9s unfloored vs 9.1s floored).
@@ -73,14 +72,6 @@ def load_table(
     spark: SparkSession, sf_dir: str, name: str, scan_floor: bool = False
 ) -> DataFrame:
     validate_table_name(name)
-    # SPARK_GRAFT_SCAN_FLOOR=all|none overrides the per-consumer choice —
-    # an A/B instrument for measuring the floor's effect query by query
-    # (scripts/time_query.py under each setting), not a production knob.
-    override = os.environ.get("SPARK_GRAFT_SCAN_FLOOR", "")
-    if override == "all":
-        scan_floor = True
-    elif override == "none":
-        scan_floor = False
     key = (spark.sparkContext.applicationId, sf_dir, name, scan_floor)
     cached = _TABLE_CACHE.get(key)
     if cached is not None:
@@ -118,9 +109,7 @@ def load_table(
     # has >= defaultParallelism splits and this is a no-op — the
     # floor derives from input layout, not a tuned constant.
     if scan_floor:
-        floor = int(
-            os.environ.get("SPARK_GRAFT_FLOOR_WIDTH", "0")
-        ) or spark.sparkContext.defaultParallelism
+        floor = spark.sparkContext.defaultParallelism
         if df.rdd.getNumPartitions() < floor:
             df = df.repartition(floor)
     _TABLE_CACHE[key] = df

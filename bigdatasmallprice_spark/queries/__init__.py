@@ -5,7 +5,6 @@ from bigdatasmallprice_spark.queries import (  # noqa: F401
     dedupq,
     layoutq,
     mlq,
-    mmq,
     relational,
     seqq,
     sketchq,

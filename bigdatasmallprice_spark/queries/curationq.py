@@ -1389,7 +1389,7 @@ FROM ext e JOIN documents d ON d.doc_id = e.doc_id
     "explode; at 100 TB extraction costs the scan itself. The only "
     "regexes are the dialect-portable subset (DuckDB needs the 'g' "
     "flag — the pii_scrub precedent).",
-    tags=("curation", "text", "multimodal"),
+    tags=("curation", "text"),
 )
 def html_extract_main_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdatasmallprice_spark.operators.boilerplate import (

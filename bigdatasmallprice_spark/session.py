@@ -11,7 +11,10 @@ Defaults chosen for correctness-parity with the reference and for scale:
   plans we assert against are the plans that ship.
 - ``spark.sql.shuffle.partitions`` defaults to 2*cores locally; on a real
   cluster this is overridden (AQE coalesces down anyway).
-- Arrow enabled for the few pandas_udf paths (model scoring, multimodal).
+- Arrow enabled for the pandas UDF paths: model scoring (queries/mlq.py),
+  JWT codecs (functions/auth.py), the WARC parse (sources/warc.py), BPE
+  tokenization (operators/bpe.py) and the vectorized similarity kernels
+  (operators/similarity.py).
 
 ``local_frame`` is the one way the served code turns rows it already
 holds on the driver into a frame; ``arrow_rows`` is its checked

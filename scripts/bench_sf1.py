@@ -57,7 +57,6 @@ QUERIES = [
     "bloom_shingle_prefilter",
     "cardinality_sketch",
     "perplexity_buckets",
-    "multimodal_png_stats",
     "rolling_backtest",
     "dataset_card",
     # round-6 additions: the HLL set-algebra pair (the audited twin was
@@ -65,15 +64,11 @@ QUERIES = [
     # ask #5) and its audit-free production variant
     "hll_union_distinct",
     "hll_union_lean",
-    "image_neardup_phash",
     "winnow_neardup_pairs",
     "quantile_sketch_by_type",
     "quantile_sketch_lean",
     "ann_pq_topk",
     "ann_ivfpq_topk",
-    # round-7 addition: the fourth dedup modality (chunk-blocked
-    # Hamming equi-join over WAV band-energy fingerprints)
-    "audio_neardup_fingerprint",
     "token_budget_sample",
     # r9 additions (registered scale-safe flagship + the LM/retrieval/
     # sampling family; training_features_stitched is also appended by

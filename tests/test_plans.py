@@ -195,19 +195,6 @@ def test_shard_manifest_windows_by_shard(spark):
     assert "windowspecdefinition(shard" in plan, plan
 
 
-def test_video_frame_sample_is_shuffle_free(spark):
-    """The y4m synthesize -> frame-sample pipeline is two chained
-    Arrow-batched map stages: its plan must contain NO exchange — a
-    decode stage that shuffles 100 TB of payload bytes would be wrong."""
-    from bigdatasmallprice_spark.registry import all_queries
-
-    df = all_queries()["video_frame_sample"].fn(spark, SF)
-    plan = _formatted(df)
-    assert "Exchange" not in plan, plan
-    tree = df._jdf.queryExecution().executedPlan().toString()
-    assert tree.count("MapInPandas") == 2, tree
-
-
 def test_password_hash_is_pure_codegen(spark):
     """Credential hashing (F.sha2) stays JVM-side: no exchange, no
     Python stage; the modulo predicate is applied at the scan stage."""
@@ -557,45 +544,6 @@ def test_hll_union_lean_scans_corpus_once_no_audit(spark):
         if "Arguments: hashpartitioning" in line and "idx#" in line
     ]
     assert len(corpus_exchanges) == 1, corpus_exchanges
-
-
-def test_image_neardup_blocking_is_equi_join_not_cartesian(spark):
-    """The perceptual-hash pair search must be the blocked equi-join
-    on (chunk_idx, chunk_value) — no cartesian product anywhere — and
-    the per-byte work exactly two Arrow stages (BMP synth + decode/
-    hash), both upstream of the persisted signature frame."""
-    from bigdatasmallprice_spark.registry import all_queries
-
-    spark.catalog.clearCache()  # see the hll_union_lean guard's note
-    df = all_queries()["image_neardup_phash"].fn(spark, SF)
-    plan = _formatted(df)
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    # a HASH-based equi join on the chunk keys (broadcast at test sf,
-    # shuffle-hash/sort-merge at scale — never a nested loop); Catalyst
-    # pushes the Hamming verify and the id ordering into the join
-    # condition as residuals
-    assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan, plan
-    assert "bit_count" in plan, plan
-    assert plan.count("MapInPandas") >= 2  # BMP synth + decode/hash stages
-
-
-def test_audio_neardup_blocking_is_equi_join_not_cartesian(spark):
-    """The acoustic-fingerprint pair search must be the blocked
-    equi-join on (chunk_idx, chunk_value) — no cartesian product
-    anywhere — and the per-byte work exactly two Arrow stages (WAV
-    synth + decode/fingerprint), both upstream of the persisted
-    signature frame. Twin of the image guard above."""
-    from bigdatasmallprice_spark.registry import all_queries
-
-    spark.catalog.clearCache()  # see the hll_union_lean guard's note
-    df = all_queries()["audio_neardup_fingerprint"].fn(spark, SF)
-    plan = _formatted(df)
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan, plan
-    assert "bit_count" in plan, plan
-    assert plan.count("MapInPandas") >= 2  # WAV synth + decode/fp stages
 
 
 def test_winnow_fingerprints_are_codegen_and_pair_join_is_equi(spark):

@@ -121,74 +121,7 @@ def test_split_rejects_degenerate_fractions(spark):
         split_label_by_ratio(df, ["ts"], 0.0, 0.5)
 
 
-# ── codec round-trips under randomized payloads ───────────────────────────
-
-
-@given(
-    samples=st.lists(st.integers(min_value=-32768, max_value=32767), min_size=0, max_size=400),
-    rate=st.sampled_from([8000, 16000, 44100]),
-)
-@settings(max_examples=40, deadline=None)
-def test_wav_roundtrip_property(samples, rate):
-    """Any int16 signal at any rate survives encode->decode exactly."""
-    import numpy as np
-
-    from bigdatasmallprice_spark.operators.multimodal import (
-        decode_wav_bytes,
-        encode_wav,
-    )
-
-    feat = decode_wav_bytes(encode_wav(samples, rate))
-    arr = np.asarray(samples, dtype="int64")
-    assert feat["n_frames"] == len(samples)
-    assert feat["sample_rate"] == rate
-    assert feat["sum_samples"] == (int(arr.sum()) if len(samples) else 0)
-
-
-@given(
-    w=st.integers(min_value=1, max_value=9),
-    h=st.integers(min_value=1, max_value=9),
-    seed=st.integers(min_value=0, max_value=2**31),
-)
-@settings(max_examples=40, deadline=None)
-def test_bmp_roundtrip_property(w, h, seed):
-    """Any dims (odd widths exercise row padding) round-trip pixel-exact."""
-    from bigdatasmallprice_spark.operators.multimodal import (
-        decode_bmp_pixels,
-        encode_bmp,
-    )
-
-    px = [
-        [((seed + 3 * x + 7 * y) % 256, (seed ^ x) % 256, (seed + x * y) % 256) for x in range(w)]
-        for y in range(h)
-    ]
-    assert decode_bmp_pixels(encode_bmp(px)) == px
-
-
-@given(
-    n_frames=st.integers(min_value=0, max_value=6),
-    side=st.sampled_from([2, 4, 8]),
-    seed=st.integers(min_value=0, max_value=2**31),
-)
-@settings(max_examples=40, deadline=None)
-def test_y4m_roundtrip_property(n_frames, side, seed):
-    """Any frame count/size round-trips plane-byte-exact."""
-    from bigdatasmallprice_spark.operators.multimodal import (
-        decode_y4m_frames,
-        encode_y4m,
-    )
-
-    plane = side * side
-    frames = [
-        (
-            bytes((seed + f + i) % 256 for i in range(plane)),
-            bytes((seed ^ (f + i)) % 256 for i in range(plane)),
-            bytes((seed + 7 * f + 3 * i) % 256 for i in range(plane)),
-        )
-        for f in range(n_frames)
-    ]
-    got = list(decode_y4m_frames(encode_y4m(frames, side, side)))
-    assert [g[1:] for g in got] == frames
+# ── JWT round-trip under randomized claims ─────────────────────────────────
 
 
 @given(
@@ -270,49 +203,6 @@ def test_pii_redaction_is_exhaustive(spark, pieces):
         .clean
     )
     assert again == out  # idempotent
-
-
-# ---------------------------------------------------------------------------
-# PNG codec: random images x random per-row filters round-trip losslessly
-# ---------------------------------------------------------------------------
-
-png_image_strategy = st.integers(1, 6).flatmap(
-    lambda h: st.integers(1, 9).flatmap(
-        lambda w: st.tuples(
-            st.lists(
-                st.lists(
-                    st.tuples(
-                        st.integers(0, 255), st.integers(0, 255), st.integers(0, 255)
-                    ),
-                    min_size=w,
-                    max_size=w,
-                ),
-                min_size=h,
-                max_size=h,
-            ),
-            st.lists(st.integers(0, 4), min_size=h, max_size=h),
-        )
-    )
-)
-
-
-@given(img=png_image_strategy)
-@settings(max_examples=40, deadline=None)
-def test_png_roundtrip_property(img):
-    """Any image, any per-scanline filter assignment: decode(encode(x))
-    recovers the exact pixel bytes (sum is a complete check here since
-    widths/heights are also asserted and filters are lossless)."""
-    from bigdatasmallprice_spark.operators.multimodal import (
-        decode_png_bytes,
-        encode_png,
-    )
-
-    pixel_rows, filters = img
-    expect = sum(v for row in pixel_rows for p in row for v in p)
-    got = decode_png_bytes(encode_png(pixel_rows, row_filter=lambda y: filters[y]))
-    assert got["width"] == len(pixel_rows[0])
-    assert got["height"] == len(pixel_rows)
-    assert got["pixel_sum"] == expect
 
 
 # ---------------------------------------------------------------------------
